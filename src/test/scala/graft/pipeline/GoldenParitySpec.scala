@@ -22,6 +22,7 @@ class GoldenParitySpec extends SparkSuite {
   private lazy val refundsGold = GoldenData.refunds(spark)
 
   test("strict normalize over the committed live JSONL reproduces fact_orders' live rows") {
+    GoldenData.assumeFixtures(GoldenData.LiveEvents, GoldenData.FactOrders)
     val events = CommercePulse.readLiveOrdered(
       spark, s"${GoldenData.Ref}/data/live_events/2026-02-19/events.jsonl")
     val got = CommercePulse.normalizeOrdersStrict(events)
@@ -34,6 +35,7 @@ class GoldenParitySpec extends SparkSuite {
   }
 
   test("strict normalize finds no live payments/refunds (restricted type lists)") {
+    GoldenData.assumeFixtures(GoldenData.LiveEvents)
     // the live feed's payment_succeeded / refund_issued names are outside
     // the reference's restricted lists — quirk §2.10.1 made observable
     val events = CommercePulse.readLiveOrdered(
@@ -43,6 +45,8 @@ class GoldenParitySpec extends SparkSuite {
   }
 
   test("factOrderDaily over the committed fact tables reproduces fact_order_daily.csv") {
+    GoldenData.assumeFixtures(GoldenData.FactOrders, GoldenData.FactPayments,
+      GoldenData.FactRefunds, GoldenData.FactOrderDaily)
     val got = CommercePulse.factOrderDaily(ordersGold, paymentsGold, refundsGold)
     val want = GoldenData.daily(spark)
     val cols = Seq(col("order_date"), col("vendor"), col("gross_revenue"),
@@ -53,6 +57,7 @@ class GoldenParitySpec extends SparkSuite {
   }
 
   test("dimCustomer over the committed orders reproduces dim_customer.csv") {
+    GoldenData.assumeFixtures(GoldenData.FactOrders, GoldenData.DimCustomer)
     val got = CommercePulse.dimCustomer(ordersGold)
     val want = GoldenData.dimCustomer(spark)
     val cols = Seq(col("customer_id"),
@@ -63,6 +68,7 @@ class GoldenParitySpec extends SparkSuite {
   }
 
   test("dimDate reproduces dim_date.csv (1461 days, ISO weeks, weekend flags)") {
+    GoldenData.assumeFixtures(GoldenData.DimDate)
     val got = CommercePulse.dimDate(spark)
     val want = GoldenData.dimDate(spark)
     val cols = Seq(col("date_key"), col("day_of_week"), col("week_number"),
@@ -72,6 +78,8 @@ class GoldenParitySpec extends SparkSuite {
   }
 
   test("qualityReport over the committed fact tables reproduces the published report") {
+    GoldenData.assumeFixtures(GoldenData.FactOrders, GoldenData.FactPayments,
+      GoldenData.FactRefunds)
     // reports/quality_report_2026-02-20.csv:2 — all 17 metrics
     val row = CommercePulse.qualityReport(ordersGold, paymentsGold, refundsGold)
       .collect()(0)
