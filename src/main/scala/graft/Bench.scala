@@ -3,35 +3,15 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // dev knob: SPARK_GRAFT_CONF="k=v;k2=v2" overlays session confs for
     // isolated A/Bs (e.g. measuring the DPP scan prune by switching
     // spark.sql.optimizer.dynamicPartitionPruning.enabled off); the
-    // driver leaves it unset
+    // driver leaves it unset. Session applies it after the contract
+    // confs, so an overlapping key really overrides.
     val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
       .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val base = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // UTC like Verify/Explain: a host-zone bench would group ts-derived
-      // dates differently than the plans the oracle certified — it must
-      // time the SAME query it verified
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // DPP pruning subqueries may run standalone (see Verify.scala) —
-      // the cost model prunes partitioned staged indexes when it pays
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly",
-        "false")
-      .config("spark.ui.enabled", "false")
-    // overlay LAST so the A/B knob really overrides — applied before the
-    // fixed chain, any overlapping key (shuffle.partitions, extensions, …)
-    // would silently keep its hard-coded value and the A/B would be a no-op
-    val spark = extraConf.foldLeft(base) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(extraConf)
 
     // the timed action materializes EVERY column through the `noop` sink:
     // a bare count() would let Catalyst prune the projections being
@@ -60,16 +40,9 @@ object Bench {
     //     first-run compilation alone), and min-of-3 reports steady-state
     //     plan cost rather than host/VM scheduling noise.
     val warmupDir = "/root/testdata/sf0.001"
-    // dev knob: SPARK_GRAFT_ONLY=a1_fact_order_daily,p12_hash_ids runs a
-    // subset (isolated-vs-full-suite drift bisection); driver leaves it
-    // unset and gets the full contract suite
-    val selected: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      sys.env.get("SPARK_GRAFT_ONLY") match {
-        case Some(names) =>
-          val keep = names.split(",").map(_.trim).filter(_.nonEmpty).toSet
-          SparkEntry.queries.filter { case (k, _) => keep(k) }
-        case None => SparkEntry.queries
-      }
+    // SPARK_GRAFT_ONLY=a1_fact_order_daily,p12_hash_ids runs a subset
+    // (isolated-vs-full-suite drift bisection)
+    val selected = SparkEntry.selected()
     selected.foreach { case (name, fn) =>
       try run(fn, warmupDir, s"warmup:$name") catch { case _: Throwable => () }
     }

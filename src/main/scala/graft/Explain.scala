@@ -1,23 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of one or more queries
-  * (one Spark session for the batch, `===== name =====` separators).
+  * (one Spark session for the batch, `===== name =====` separators),
+  * planned in the contract [[Session]] — the confs `Bench` times and
+  * `Verify` certifies under.
   * `sbt "runMain graft.Explain <query>... [sfDir]"`.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val (dirs, names) = args.partition(_.startsWith("/"))
     val dir = dirs.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     for (name <- names) {
       println(s"===== $name =====")
       SparkEntry.queries(name)(spark, dir).explain("formatted")

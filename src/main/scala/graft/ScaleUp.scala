@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dev tool: derive a larger BENCH dataset from the driver's sf0.1 tables
@@ -24,19 +23,11 @@ object ScaleUp {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val k = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts round-trips whatever encoding the source uses: NANOS
-      // reads as a plain long under this conf and writes back as one;
-      // TIMESTAMP_MICROS NTZ reads/writes natively. Tables.events probes
-      // the footer of the OUTPUT and normalizes either encoding.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // events.ts round-trips whatever encoding the source uses: under the
+    // contract's nanosAsLong a NANOS column reads as a plain long and
+    // writes back as one; TIMESTAMP_MICROS NTZ reads/writes natively.
+    // Tables.events probes the footer of the OUTPUT and normalizes either.
+    val spark = Session()
 
     def copy(name: String): Unit =
       spark.read.parquet(s"$src/$name.parquet")

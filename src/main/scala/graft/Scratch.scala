@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Scratch directories for staged intermediates (checkpointed pair lists,
   * shingle sets, format round-trips).
@@ -60,22 +62,17 @@ object Scratch {
     * explicitly makes the writer-schema read-back equivalence
     * independent of that version-dependent forcing.
     */
-  private def deepNullable(dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case s: StructType => StructType(s.fields.map(f =>
-        f.copy(dataType = deepNullable(f.dataType), nullable = true)))
-      case a: ArrayType =>
-        a.copy(elementType = deepNullable(a.elementType), containsNull = true)
-      case m: MapType => m.copy(keyType = deepNullable(m.keyType),
-        valueType = deepNullable(m.valueType), valueContainsNull = true)
-      case other => other
-    }
+  private def deepNullable(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = deepNullable(f.dataType), nullable = true)))
+    case a: ArrayType =>
+      a.copy(elementType = deepNullable(a.elementType), containsNull = true)
+    case m: MapType => m.copy(keyType = deepNullable(m.keyType),
+      valueType = deepNullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
-  private def nullableSchema(st: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    deepNullable(st).asInstanceOf[org.apache.spark.sql.types.StructType]
+  private def nullableSchema(st: StructType): StructType =
+    deepNullable(st).asInstanceOf[StructType]
 
   /** The scratch root for this session (no directory is created). */
   def root(spark: SparkSession): String =
@@ -90,8 +87,8 @@ object Scratch {
   def dir(spark: SparkSession, prefix: String): String = {
     val conf = spark.sparkContext.hadoopConfiguration
     // prefix is display-only (uniqueness comes from runId + seq), so any
-    // path-hostile char — e.g. the  that namespaces partitioned
-    // memo keys below — is flattened rather than handed to the filesystem
+    // path-hostile char in a caller's key is flattened rather than handed
+    // to the filesystem
     val safe = prefix.map(c =>
       if (c.isLetterOrDigit || c == '.' || c == '_' || c == '-') c else '_')
     val p = new org.apache.hadoop.fs.Path(
@@ -103,12 +100,7 @@ object Scratch {
     q
   }
 
-  // weak keys: this map lives for the process, and strong SparkSession
-  // keys would pin every stopped session's context forever (same contract
-  // as `created` above). When a session is collected its per-key map goes
-  // with it; the dirs themselves are still cleaned by the shutdown hook.
-  private val keyed = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, String]]()
+  private val keyed = new Memo.PerSession[String, String]
 
   /** A scratch directory memoized per (session, key): repeated calls —
     * e.g. a benchmarked query invoked min-of-3 — reuse and overwrite ONE
@@ -116,25 +108,17 @@ object Scratch {
     * Still collision-free across sessions and runs (the underlying dir
     * comes from `dir`).
     */
-  def dirFor(spark: SparkSession, key: String): String = {
-    val perSession = keyed.synchronized {
-      var m = keyed.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-        keyed.put(spark, m)
-      }
-      m
-    }
-    Memo.getOrPut(perSession, key)(dir(spark, key))
-  }
+  def dirFor(spark: SparkSession, key: String): String =
+    keyed(spark, key)(dir(spark, key))
 
-  // weak session keys, same contract as `keyed` above. Values are parquet
-  // PATHS, never DataFrames: a DataFrame strongly references its
-  // SparkSession, so storing one as a value would reach back to this
-  // map's own (weak) key and pin the entry — and the session — for the
-  // process lifetime, silently defeating the weak keys.
-  private val staged = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, String]]()
+  // (key, partition columns) -> (path, build-time schema). Values are a
+  // parquet PATH and a StructType, never DataFrames: a DataFrame strongly
+  // references its SparkSession, so storing one would reach back to the
+  // memo's own weak key and pin the entry — and the session — for the
+  // process lifetime. The flat (no partition columns) and partitioned
+  // layouts of one key are distinct entries with distinct directories.
+  private val staged =
+    new Memo.PerSession[(String, Seq[String]), (String, StructType)]
 
   /** Build-once staged intermediate (the `Copurchase.pairCounts` idiom,
     * shared): `build` is materialized to scratch parquet the FIRST time
@@ -146,9 +130,8 @@ object Scratch {
     * from one artifact. Real file statistics are a side benefit: joins
     * downstream plan from actual sizes.
     *
-    * The build-time schema rides the memo value (the
-    * [[stagedFramePartitioned]] NUL encoding) and is re-applied on every
-    * read-back: a bare `spark.read.parquet` runs a footer
+    * The build-time schema rides the memo value and is re-applied on
+    * every read-back: a bare `spark.read.parquet` runs a footer
     * schema-inference JOB per call (event-log measured, a `parquet at
     * <site>` job of ~20-40 ms driver latency each), and stagedFrame is
     * read once per consumer per invocation — the inference jobs were a
@@ -156,36 +139,8 @@ object Scratch {
     * schema IS the flat file's schema, so the frame is identical.
     */
   def stagedFrame(spark: SparkSession, key: String)
-                 (build: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val perSession = staged.synchronized {
-      var m = staged.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-        staged.put(spark, m)
-      }
-      m
-    }
-    val entry = Memo.getOrPut(perSession, key) {
-      val df = build
-      // build into a FRESH unique dir and publish the path atomically via
-      // putIfAbsent: Memo tolerates a racing double-compute, and two
-      // racers overwrite-writing one memoized dirFor path could
-      // interleave delete/write and leave mixed part files — with unique
-      // dirs the loser's write is intact-but-orphaned scratch (shutdown
-      // hook cleans it) and every reader sees exactly one winner's files
-      val p = dir(spark, key) + "/frame"
-      df.write.mode("overwrite").parquet(p)
-      p + "\u0000" + df.schema.json
-    }
-    val sep = entry.indexOf('\u0000')
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(entry.substring(sep + 1))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    // asNullable spells out what file sources force anyway (read schemas
-    // come back nullable) — intent made version-proof, a no-op today
-    spark.read.schema(nullableSchema(schema)).parquet(entry.substring(0, sep))
-  }
+                 (build: => DataFrame): DataFrame =
+    stage(spark, key, Nil)(build)
 
   /** Write `df` to scratch parquet at `path` and hand back the
     * parquet-backed read with the WRITER's schema applied — the
@@ -197,8 +152,7 @@ object Scratch {
     * partitionBy write needs [[stagedFramePartitioned]]'s column-order
     * restore as well.
     */
-  def writeRead(df: org.apache.spark.sql.DataFrame, path: String)
-      : org.apache.spark.sql.DataFrame = {
+  def writeRead(df: DataFrame, path: String): DataFrame = {
     df.write.mode("overwrite").parquet(path)
     // asNullable: file sources force nullable read schemas anyway; spelled
     // out so the equivalence doesn't lean on version-dependent forcing
@@ -213,54 +167,42 @@ object Scratch {
     * doctrine applied to staged indexes (an inverted list whose scan
     * isn't partitioned by its list key stops being inverted at 100 TB).
     *
-    * The build-time schema is kept alongside the path and re-applied on
-    * read: partition values come back from directory names, and without
-    * the explicit schema Spark would re-INFER the partition column's type
-    * (long cid → int) and silently break every downstream join on it.
-    * The read re-projects to the original column order (partition columns
+    * The carried build-time schema matters twice here: partition values
+    * come back from directory names, and without the explicit schema
+    * Spark would re-INFER the partition column's type (long cid → int)
+    * and silently break every downstream join on it; and the read
+    * re-projects to the original column order (partition columns
     * otherwise migrate to the end of the schema).
     */
   def stagedFramePartitioned(spark: SparkSession, key: String,
                              partCols: Seq[String])
-                            (build: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val perSession = staged.synchronized {
-      var m = staged.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-        staged.put(spark, m)
-      }
-      m
-    }
-    // value = path NUL schema-json (one string map shared with
-    // stagedFrame; NUL can't occur in either part)
-    val entry = Memo.getOrPut(perSession, key + "partitioned") {
+                            (build: => DataFrame): DataFrame =
+    stage(spark, key, partCols)(build)
+
+  private def stage(spark: SparkSession, key: String, partCols: Seq[String])
+                   (build: => DataFrame): DataFrame = {
+    val (path, schema) = staged(spark, (key, partCols)) {
       val df = build
-      // directory namespaced with the same  separator as the memo
-      // key (dir() flattens it for the filesystem; the collision-proof
-      // part is the dirFor MEMO key, where  cannot occur in a
-      // caller key — a plain key literally ending in "_partitioned"
-      // used to alias this entry's directory and clobber its layout):
-      // a plain stagedFrame with
-      // the same key writes dirFor(spark, key)/frame — the flat and
-      // Hive-partitioned layouts must never share a path, or each memo
-      // thinks it owns the files and the second writer silently clobbers
-      // the first's layout under the first's cached path
-      // fresh unique dir + atomic path publish, same racing-double-
-      // compute reasoning as stagedFrame above
-      val p = dir(spark, key + "partitioned") + "/frame"
-      // one file per partition value instead of one per shuffle partition
-      // per value — the layout a real index store would compact to
-      df.repartition(partCols.map(col): _*)
-        .write.mode("overwrite").partitionBy(partCols: _*).parquet(p)
-      p + "\u0000" + df.schema.json
+      // build into a FRESH unique dir and publish the path atomically via
+      // putIfAbsent: Memo tolerates a racing double-compute, and two
+      // racers overwrite-writing one memoized dirFor path could
+      // interleave delete/write and leave mixed part files — with unique
+      // dirs the loser's write is intact-but-orphaned scratch (shutdown
+      // hook cleans it) and every reader sees exactly one winner's files
+      val p = dir(spark, key) + "/frame"
+      if (partCols.isEmpty) df.write.mode("overwrite").parquet(p)
+      else
+        // one file per partition value instead of one per shuffle
+        // partition per value — the layout a real index store would
+        // compact to
+        df.repartition(partCols.map(col): _*)
+          .write.mode("overwrite").partitionBy(partCols: _*).parquet(p)
+      (p, df.schema)
     }
-    val sep = entry.indexOf('\u0000')
-    val (path, schemaJson) = (entry.substring(0, sep), entry.substring(sep + 1))
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    spark.read.schema(nullableSchema(schema)).parquet(path)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    // asNullable spells out what file sources force anyway (read schemas
+    // come back nullable) — intent made version-proof, a no-op today
+    val read = spark.read.schema(nullableSchema(schema)).parquet(path)
+    if (partCols.isEmpty) read
+    else read.select(schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 }

@@ -3,26 +3,25 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev tool: DERIVE the semantic-decontamination threshold
+/** DERIVES the semantic-decontamination threshold
   * (`spark.graft.sem.tau`) from the corpus instead of trusting the
-  * pinned default — `sbt "runMain graft.SemTauCheck <sfDir> [evalN]"`.
+  * pinned default.
   *
   * The recipe the `dd_contaminate_sem` doc describes, executable: tau
   * sits at the ~0.1% quantile of the EXACT eval-to-corpus integer-L2
   * distance distribution (every corpus vector × every eval vector, the
   * eval side broadcast — the same E-bounded shape as the recall evals).
-  * Prints the distribution's min / q0.001 / q0.01 / median, the
-  * recommended conf value (q0.001 rounded up to 2 significant digits,
-  * so the flag set is the distribution's own tail, not a magic number),
-  * and what fraction of pairs the CURRENTLY pinned tau admits — re-run
-  * after any embedding-space change and update `OracleDefaults` + the
-  * static oracle SQL together if the recommendation moves.
+  * [[Stats]] carries the distribution's min / q0.001 / q0.01 / median,
+  * the recommended conf value (q0.001 rounded up to 2 significant
+  * digits, so the flag set is the distribution's own tail, not a magic
+  * number) and how many pairs the pinned tau admits.
   *
-  * The derivation is factored out ([[derive]]) so `SemTauGateSpec` can
-  * run it as a DRIFT GATE: a testdata regeneration that shifts the
-  * embedding scale strands the pinned tau outside its own quantile band
-  * — the gate fails the suite instead of silently flagging a different
-  * tail (the `sk_kmv` lesson applied to this knob).
+  * `SemTauGateSpec` runs [[derive]] as a DRIFT GATE: a testdata
+  * regeneration that shifts the embedding scale strands the pinned tau
+  * outside its own quantile band — the gate fails the suite, printing
+  * the recommendation, instead of silently flagging a different tail
+  * (the `sk_kmv` lesson applied to this knob). Update `OracleDefaults`
+  * and the static oracle SQL together when the recommendation moves.
   */
 object SemTauCheck {
 
@@ -84,53 +83,5 @@ object SemTauCheck {
       Some(Stats(row.getLong(0), row.getLong(1), qs(0), qs(1), qs(2),
         row.getLong(3)))
     }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val evalN = if (args.length > 1) args(1).toLong
-      else queries.SimilarityQueries.semEvalN(spark)
-    val pinned = queries.SimilarityQueries.semTau(spark)
-
-    derive(spark, Tables.embeddings(spark, sfDir), evalN, pinned) match {
-      case None =>
-        println(s"[semtau] sfDir=$sfDir evalN=$evalN n_pairs=0: no " +
-          "eval-to-corpus pairs (evalN out of the table's id range, or " +
-          "the table is empty) — nothing to derive")
-      case Some(st) =>
-        println(s"[semtau] sfDir=$sfDir evalN=$evalN n_pairs=${st.nPairs}")
-        println(f"[semtau] min=${st.minD2} q0.001=${st.q0001}%.4g " +
-          f"q0.01=${st.q001}%.4g median=${st.median}%.4g")
-        println(f"[semtau] pinned tau=$pinned admits ${st.underPinned} of " +
-          f"${st.nPairs} pairs (${st.underPinned * 100.0 / st.nPairs}%.3f%%)" +
-          (if (st.inBand(pinned)) " — IN the q0.001..q0.01 band"
-           else " — OUT of the q0.001..q0.01 band: re-derive"))
-        st.recommended match {
-          case Some(rec) =>
-            println(s"[semtau] recommended spark.graft.sem.tau=$rec " +
-              "(q0.001 rounded up to 2 significant digits)")
-          case None =>
-            // log10(0) would NaN the rounding into a silent tau=0 (and a
-            // sub-1 interpolated quantile would truncate to it) — a
-            // ~zero quantile is itself the signal: >=0.1% of pairs are
-            // (essentially) EXACT duplicates, so the tail is degenerate
-            // and no distance threshold separates contamination from it
-            println("[semtau] q0.001 ~= 0: >=0.1% of eval-to-corpus pairs " +
-              "are EXACT duplicates — run exact dedup/decontamination " +
-              "first, then re-derive tau on the cleaned corpus (no " +
-              "automatic recommendation)")
-        }
-    }
-    spark.stop()
   }
 }

@@ -26,6 +26,18 @@ object SparkEntry {
       Commerce.queries ++ Curation.queries ++ Graph.queries ++ Approx.queries ++
       Linkage.queries ++ Incremental.queries ++ Bpe.queries
 
+  /** `queries`, restricted to the comma-separated names in
+    * `SPARK_GRAFT_ONLY` when it is set — a dev knob for running a subset
+    * in `Bench` and `Verify`; unset, the full contract suite.
+    */
+  def selected(): Map[String, (SparkSession, String) => DataFrame] =
+    sys.env.get("SPARK_GRAFT_ONLY") match {
+      case Some(names) =>
+        val keep = names.split(",").map(_.trim).filter(_.nonEmpty).toSet
+        queries.filter { case (k, _) => keep(k) }
+      case None => queries
+    }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */

@@ -15,37 +15,22 @@ object Tables {
   // pure driver-side bookkeeping, the data itself stays lazy.
   // Contract: testdata dirs are IMMUTABLE (the memoized relation pins the
   // file listing); mutable paths must go through spark.read directly.
-  // Weak session keys, like Scratch.dirFor: this map lives for the
-  // process, and strong SparkSession keys would pin every stopped
-  // session (and its relations) forever.
-  private val memo = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]()
-
-  private def memoize(key: (SparkSession, String, String))(mk: => DataFrame): DataFrame = {
-    val (session, dir, name) = key
-    val perSession = memo.synchronized {
-      var m = memo.get(session)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-        memo.put(session, m)
-      }
-      m
-    }
-    Memo.getOrPut(perSession, (dir, name))(mk)
-  }
+  private val memo = new Memo.PerSession[(String, String), DataFrame]
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    memoize((spark, dir, name))(spark.read.parquet(s"$dir/$name.parquet"))
+    memo(spark, (dir, name))(spark.read.parquet(s"$dir/$name.parquet"))
 
   /** `events.ts` has shipped in three physical encodings across testdata
     * generations, so the loader is schema-adaptive — it probes the parquet
     * footer type and normalizes `ts` to a session-TZ `TimestampType`:
     *
     *  - INT64 TIMESTAMP(NANOS): Spark's vectorized reader rejects this
-    *    ([PARQUET_TYPE_ILLEGAL]) unless `nanosAsLong` is set, so we read a
-    *    nanosecond Long and truncate to microseconds. The division MUST be
-    *    integer `div`: epoch-ns (~1.7e18) exceeds 2^53, so `/` (double)
-    *    can land ±1µs off DuckDB's integer truncation.
+    *    ([PARQUET_TYPE_ILLEGAL]) unless `nanosAsLong` is set — the
+    *    contract [[Session]] sets it; the loader reads the session's
+    *    confs and never changes them — so we read a nanosecond Long and
+    *    truncate to microseconds. The division MUST be integer `div`:
+    *    epoch-ns (~1.7e18) exceeds 2^53, so `/` (double) can land ±1µs
+    *    off DuckDB's integer truncation.
     *  - INT64 TIMESTAMP_MICROS with isAdjustedToUTC=false: Spark loads
     *    `TIMESTAMP_NTZ`; a cast under the UTC session re-tags the same
     *    micros as TimestampType (no value shift), matching what DuckDB
@@ -58,11 +43,7 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    memoize((s, d, "events.norm")) {
-      // Probe with nanosAsLong ON so a NANOS footer resolves as Long
-      // instead of throwing; harmless for MICROS footers.
-      if (s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    memo(s, (d, "events.norm")) {
       val raw = load(s, d, "events")
       raw.schema("ts").dataType match {
         case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

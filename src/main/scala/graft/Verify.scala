@@ -30,34 +30,12 @@ object OracleDefaults {
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // production wiring for graft's optimizer rules + SQL functions
-      // (RewriteBoundedIntervalJoin, dot_f) — same plans the specs lock
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // let DPP run its pruning subquery standalone (measured: the
-      // default reuse-only mode can never engage for a hinted broadcast
-      // join over a partitioned staged index — the filter silently
-      // degrades to `true`; with this conf Spark's cost model decides,
-      // declining at toy scale and pruning the scan at production scale)
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly",
-        "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     OracleDefaults.assertDefaults(spark)
     new java.io.File(outDir).mkdirs()
-    // dev knob mirroring Bench's: SPARK_GRAFT_ONLY=tpch_q2,tpch_q8 dumps a
-    // subset for fast tools/check.py iteration; driver leaves it unset
-    val selected = sys.env.get("SPARK_GRAFT_ONLY") match {
-      case Some(names) =>
-        val keep = names.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        SparkEntry.queries.filter { case (k, _) => keep(k) }
-      case None => SparkEntry.queries
-    }
+    // SPARK_GRAFT_ONLY=tpch_q2,tpch_q8 dumps a subset for fast
+    // tools/check.py iteration
+    val selected = SparkEntry.selected()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -700,7 +700,8 @@ object TextDedup {
     * evaluated exactly once (inside the canonical-edge write) and one
     * whole write barrier per CC invocation disappears — measurable
     * because the mini-CC consumers (fold, right-to-forget) are
-    * job-count-floor-bound, not data-bound (CcDelCheck's flat curve).
+    * job-count-floor-bound, not data-bound (the flat delete-cost curve,
+    * BENCH_NOTES round 14, "CcDelCheck").
     * A self-pair in the input is not silently mislabeled — it is
     * DROPPED from the node set; every production call site re-attaches
     * labels through `coalesce(label, doc_id)`, which restores exactly

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.normalize.Drift
 import graft.operators.{DailyRevenue, Dedup, Dimensions}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -128,9 +128,16 @@ object CommercePulse {
         col("event_id"))
       .filter(col("payment_id").isNotNull)
     // D2: first-wins per payment_id (append-only log, replays collapse)
-    Dedup.firstWins(base, Seq("payment_id"),
-      Seq(col("payment_date").asc_nulls_last, col("event_id").asc))
+    Dedup.firstWins(base, Seq("payment_id"), PaymentFirst)
   }
+
+  /** First-wins order among versions of one payment_id / refund_id: the
+    * normalizers' dedup and `runAll`'s upsert sinks rank by the same.
+    */
+  val PaymentFirst: Seq[Column] =
+    Seq(col("payment_date").asc_nulls_last, col("event_id").asc)
+  val RefundFirst: Seq[Column] =
+    Seq(col("refund_date").asc_nulls_last, col("event_id").asc)
 
   /** Refunds normalization (reference `src/transformer.py:92-127`).
     * Live refund payloads carry NO id field (every dialect in
@@ -159,8 +166,7 @@ object CommercePulse {
             col("event_time"))).as("refund_date"),
         col("event_id"))
       .filter(col("refund_id").isNotNull)
-    Dedup.firstWins(base, Seq("refund_id"),
-      Seq(col("refund_date").asc_nulls_last, col("event_id").asc))
+    Dedup.firstWins(base, Seq("refund_id"), RefundFirst)
   }
 
   // ---- Reference-fidelity ("strict") mode --------------------------------
@@ -348,9 +354,11 @@ object CommercePulse {
           round(col("total_refunded") / col("gross_revenue"), 4)))
   }
 
-  /** Full ELT: feeds → ingest → normalize → facts + dims + report → sinks
-    * with the reference's three output modes (append / upsert / overwrite,
-    * `README.md:112-114`).
+  /** Full ELT: feeds → ingest → normalize → facts + dims + report →
+    * sinks. The reference appends payments and refunds
+    * (`README.md:112-114`); here every fact upserts on its id and the
+    * daily table, dims and report truncate-load, so a re-run on the same
+    * `outDir` changes nothing.
     */
   def runAll(spark: SparkSession, historical: Seq[String], live: Seq[String],
              outDir: String, warehouseDb: Option[String] = None): Map[String, Long] = {
@@ -379,8 +387,12 @@ object CommercePulse {
 
     graft.sources.Sinks.upsertParquet(spark, orders, s"$outDir/fact_orders",
       Seq("order_id"), Seq(col("created_at").desc_nulls_last, col("event_id").desc))
-    graft.sources.Sinks.appendParquet(payments, s"$outDir/fact_payments")
-    graft.sources.Sinks.appendParquet(refunds, s"$outDir/fact_refunds")
+    // payments and refunds upsert on their ids too: re-running on the
+    // same outDir must not duplicate them
+    graft.sources.Sinks.upsertParquet(spark, payments, s"$outDir/fact_payments",
+      Seq("payment_id"), PaymentFirst)
+    graft.sources.Sinks.upsertParquet(spark, refunds, s"$outDir/fact_refunds",
+      Seq("refund_id"), RefundFirst)
     graft.sources.Sinks.overwriteParquet(daily, s"$outDir/fact_order_daily")
     graft.sources.Sinks.overwriteParquet(custDim, s"$outDir/dim_customer")
     graft.sources.Sinks.overwriteParquet(dateDim, s"$outDir/dim_date")

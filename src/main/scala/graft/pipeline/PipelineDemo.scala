@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Runnable end-to-end demo of the CommercePulse-semantics pipeline:
@@ -12,13 +11,7 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val work = if (args.nonEmpty) args(0)
       else Files.createTempDirectory("cp_demo").toString
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     Files.createDirectories(Paths.get(s"$work/live"))
     val live = Seq(

@@ -5,9 +5,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point: registers graft's native functions
-  * for SQL use. Wire with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * for SQL use. The contract `graft.Session` wires it through
+  * `spark.sql.extensions=graft.plans.GraftExtensions`; a builder's
+  * `withExtensions(new GraftExtensions)` works too.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

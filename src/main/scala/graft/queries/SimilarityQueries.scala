@@ -1451,7 +1451,8 @@ object SimilarityQueries {
     * pruning subquery costs ~a corpus scan and declines, and the
     * cid-partitioned code store stops pruning I/O at exactly the scale
     * it exists for (measured: 64/64 cell files read at the 100× rung;
-    * 2/64 once the batch is staged — DppCheck, BENCH_NOTES round 10).
+    * 2/64 once the batch is staged — BENCH_NOTES round 10, "IVF-PQ
+    * scan prune, un-forced").
     */
   private[graft] def queryBatch(s: SparkSession, d: String, n: Long)
       : DataFrame =
@@ -1476,7 +1477,7 @@ object SimilarityQueries {
     * BEFORE the union so the compacted hive half prunes BY
     * CONSTRUCTION even while the store has churn (a pending batch or
     * live tombstone — its steady state). Measured honestly
-    * (StoreDppCheck): this Spark's DPP often reaches the scan through
+    * (BENCH_NOTES round 12, "Busy-store DPP"): this Spark's DPP often reaches the scan through
     * the plain reconcile too; the explicit geometry is what makes the
     * prune guaranteeable and spec-lockable (IvfConfSpec non-quiesced
     * scan-metrics test) rather than a cost-model outcome.
@@ -2091,10 +2092,10 @@ object SimilarityQueries {
     // tombstones at probe time — no flat legs, so the busy-store
     // partPrune guarantee isn't load-bearing here (sim_ivfpq_store owns
     // that drill) and DPP reaches this reconcile on its own
-    // (StoreDppCheck's measured result). The r13 A/B (BENCH_NOTES)
-    // measured the second-serve+prune shape at ~2.4 s vs ~1.9 s for
-    // this one on the same machine hour — the r12 regression was that
-    // shape, not machine band alone.
+    // (measured: BENCH_NOTES round 12, "Busy-store DPP"). The r13 A/B
+    // (BENCH_NOTES) measured the second-serve+prune shape at ~2.4 s vs
+    // ~1.9 s for this one on the same machine hour — the r12 regression
+    // was that shape, not machine band alone.
     ivfpqProbe(queryBatch(s, d, PqNQ), coarse, rcent, live)
       .orderBy("query_id", "rank")
   }

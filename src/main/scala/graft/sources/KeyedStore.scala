@@ -321,8 +321,8 @@ object KeyedStore {
     * pass a small frame of partition-column values (the probe's cells)
     * and each LEG is semi-joined to it BEFORE the union, so a join
     * sits directly over the hive scan and dynamic partition pruning
-    * applies by construction. Honest scope (StoreDppCheck, BENCH_NOTES
-    * r12): this Spark's DPP can ALSO reach the scan through the plain
+    * applies by construction. Honest scope (BENCH_NOTES round 12,
+    * "Busy-store DPP"): this Spark's DPP can ALSO reach the scan through the plain
     * union+anti-join reconcile, and its cost model chose correctly in
     * every measured shape — partPrune's value is that the prune is
     * spec-lockable at the scan-metrics level regardless of cost-model

@@ -214,7 +214,9 @@ object EventStream {
     * grain whose events span micro-batches — partials were never merged.
     * Scale shape: recompute cost is proportional to the touched grains'
     * event volume, not the store; the store upsert shuffles on event_id
-    * only.
+    * only. A micro-batch with no rows writes nothing, so a stream that
+    * never delivers an event writes no tables at all: neither the store
+    * nor `outPath` exists afterwards.
     */
   def startDailyRefresh(spark: SparkSession, deduped: DataFrame, outPath: String,
                         checkpoint: String): StreamingQuery =
@@ -223,41 +225,49 @@ object EventStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val store = s"${outPath}_events"
         val b = batch.persist()
-        try {
-          graft.sources.Sinks.upsertParquet(spark, b, store,
-            Seq("event_id"), Seq(col("ingested_at").desc_nulls_last))
-          val full = spark.read.parquet(store)
-          // order ids this batch references through any entity
-          val touched = CommercePulse.normalizeOrders(b).select("order_id")
-            .unionByName(CommercePulse.normalizePayments(b).select("order_id"))
-            .unionByName(CommercePulse.normalizeRefunds(b).select("order_id"))
-            .filter(col("order_id").isNotNull).distinct()
-          // every grain a touched order has ever occupied (pre-dedup view:
-          // includes dates from superseded versions => old grains retract)
-          val grains = CommercePulse.normalizeOrdersAll(full)
-            .join(touched, Seq("order_id"), "left_semi")
-            .select(col("created_at").cast("date").as("order_date"), col("vendor"))
-            .filter(col("order_date").isNotNull).distinct()
-          val g = grains
-            .withColumnRenamed("order_date", "__gd").withColumnRenamed("vendor", "__gv")
-          val orders = CommercePulse.normalizeOrders(full)
-          // vendor compares null-safely: live events aren't vendor-defaulted
-          // (only readHistorical coalesces to 'unknown'), and a plain ===
-          // would silently exclude null-vendor grains from the recompute —
-          // they could then never be retracted either
-          val ordersInGrains = orders.join(g,
-            orders("created_at").cast("date") === col("__gd")
-              && (orders("vendor") <=> col("__gv")), "left_semi")
-          val daily = CommercePulse.factOrderDaily(ordersInGrains,
-            CommercePulse.normalizePayments(full),
-            CommercePulse.normalizeRefunds(full))
-          graft.sources.Sinks.replaceKeysParquet(spark, daily, outPath,
-            Seq("order_date", "vendor"), deleteKeys = Some(grains))
-        } finally b.unpersist()
+        // a batch with no rows — the watermark-only batch that closes an
+        // AvailableNow run — touches no grain: skip the store rewrite and
+        // the recompute
+        try if (!b.isEmpty) refreshGrains(spark, b, outPath)
+        finally b.unpersist()
       }
       .start()
+
+  /** One non-empty micro-batch of [[startDailyRefresh]]: steps (1)-(4). */
+  private def refreshGrains(spark: SparkSession, b: DataFrame,
+                            outPath: String): Unit = {
+    val store = s"${outPath}_events"
+    graft.sources.Sinks.upsertParquet(spark, b, store,
+      Seq("event_id"), Seq(col("ingested_at").desc_nulls_last))
+    val full = spark.read.parquet(store)
+    // order ids this batch references through any entity
+    val touched = CommercePulse.normalizeOrders(b).select("order_id")
+      .unionByName(CommercePulse.normalizePayments(b).select("order_id"))
+      .unionByName(CommercePulse.normalizeRefunds(b).select("order_id"))
+      .filter(col("order_id").isNotNull).distinct()
+    // every grain a touched order has ever occupied (pre-dedup view:
+    // includes dates from superseded versions => old grains retract)
+    val grains = CommercePulse.normalizeOrdersAll(full)
+      .join(touched, Seq("order_id"), "left_semi")
+      .select(col("created_at").cast("date").as("order_date"), col("vendor"))
+      .filter(col("order_date").isNotNull).distinct()
+    val g = grains
+      .withColumnRenamed("order_date", "__gd").withColumnRenamed("vendor", "__gv")
+    val orders = CommercePulse.normalizeOrders(full)
+    // vendor compares null-safely: live events aren't vendor-defaulted
+    // (only readHistorical coalesces to 'unknown'), and a plain ===
+    // would silently exclude null-vendor grains from the recompute —
+    // they could then never be retracted either
+    val ordersInGrains = orders.join(g,
+      orders("created_at").cast("date") === col("__gd")
+        && (orders("vendor") <=> col("__gv")), "left_semi")
+    val daily = CommercePulse.factOrderDaily(ordersInGrains,
+      CommercePulse.normalizePayments(full),
+      CommercePulse.normalizeRefunds(full))
+    graft.sources.Sinks.replaceKeysParquet(spark, daily, outPath,
+      Seq("order_date", "vendor"), deleteKeys = Some(grains))
+  }
 
   /** Per-order lifecycle state for `orderLifecycle`. */
   case class OrderLifecycle(order_id: String, n_order_events: Long,

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Runnable streaming demo:
@@ -10,13 +9,7 @@ import java.nio.file.{Files, Paths}
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val in = Files.createTempDirectory("stream_demo_in").toString
     val out = Files.createTempDirectory("stream_demo_out").toString
     val cp = Files.createTempDirectory("stream_demo_cp").toString

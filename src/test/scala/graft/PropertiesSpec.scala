@@ -188,7 +188,7 @@ class PropertiesSpec extends SparkSuite {
     // the worst share is 200·sqrt(50)/(6·sqrt(50)) = 33 ≤ 50
     val cntsGen = Gen.listOfN(6, Gen.chooseNum(50L, 400L))
     for ((cnts, si) <- samples(cntsGen, 4).zipWithIndex) {
-      val dir = java.nio.file.Files.createTempDirectory(s"temp_prop$si").toString
+      val dir = tempDir(s"temp_prop$si")
       var id = 0L
       val rows = cnts.zipWithIndex.flatMap { case (c, s) =>
         (1L to c).map { _ => id += 1; (id, s"src$s", "en", 10L, s"tok$id words") }
@@ -213,7 +213,7 @@ class PropertiesSpec extends SparkSuite {
     // cnts (1, 400, 400): the tiny source's α-share is 200·1/41 ≈ 4 > 1
     // doc — a silent shortfall under proportional-style selection; the
     // quota guard must raise instead
-    val dir = java.nio.file.Files.createTempDirectory("temp_guard").toString
+    val dir = tempDir("temp_guard")
     var id = 0L
     val rows = Seq(1L, 400L, 400L).zipWithIndex.flatMap { case (c, s) =>
       (1L to c).map { _ => id += 1; (id, s"src$s", "en", 10L, s"tok$id words") }
@@ -266,7 +266,7 @@ class PropertiesSpec extends SparkSuite {
   }
 
   test("dd_substring reports exactly the planted maximal spans") {
-    val dir = java.nio.file.Files.createTempDirectory("substr_prop").toString
+    val dir = tempDir("substr_prop")
     def toks(p: String, n: Int) = (1 to n).map(i => s"$p$i")
     val S12 = (1 to 12).map(i => s"sh$i") // 12-token shared run: reported
     val S9 = (1 to 9).map(i => s"nn$i")   // 9 tokens: one below MinSpan
@@ -291,7 +291,7 @@ class PropertiesSpec extends SparkSuite {
   }
 
   test("txt_self_span reports planted intra-document repeats") {
-    val dir = java.nio.file.Files.createTempDirectory("selfspan_prop").toString
+    val dir = tempDir("selfspan_prop")
     def toks(p: String, n: Int) = (1 to n).map(i => s"$p$i")
     val S12 = (1 to 12).map(i => s"sh$i")
     val S2 = Seq("nn1", "nn2")

@@ -3,7 +3,7 @@ package graft
 class ScratchSpec extends SparkSuite {
 
   test("scratch root honors spark.graft.scratchDir") {
-    val custom = java.nio.file.Files.createTempDirectory("scratch_root").toString
+    val custom = tempDir("scratch_root")
     val s2 = spark.newSession()
     s2.conf.set("spark.graft.scratchDir", custom)
     val d = Scratch.dir(s2, "spec_")
@@ -15,7 +15,7 @@ class ScratchSpec extends SparkSuite {
   }
 
   test("scratch falls back to the checkpoint dir before local temp") {
-    val cp = java.nio.file.Files.createTempDirectory("scratch_cp").toString
+    val cp = tempDir("scratch_cp")
     val prev = spark.sparkContext.getCheckpointDir
     spark.sparkContext.setCheckpointDir(cp)
     try {

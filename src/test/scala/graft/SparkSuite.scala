@@ -7,26 +7,32 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  def tempDir(prefix: String): String = SparkSuite.tempDir(prefix)
 }
 
 object SparkSuite {
+  // every directory a spec writes — temp dirs and the session's warehouse
+  // — lives under one per-JVM root, deleted at exit
+  private lazy val root: java.io.File = {
+    val r = java.nio.file.Files.createTempDirectory("graft_test").toFile
+    // after Spark's own hooks (context stop at 50, its temp dirs at 25),
+    // before Hadoop closes its cached FileSystems (10)
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => { org.apache.hadoop.fs.FileUtil.fullyDelete(r); () }, 20)
+    r
+  }
+
+  /** A fresh directory under the suite root, deleted at JVM exit. */
+  def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(root.toPath, prefix).toString
+
+  /** The contract [[Session]] — the confs the bench times and the oracle
+    * gate certifies — with its warehouse under the suite root, so tables
+    * the specs save never land in the working directory.
+    */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // same production extensions Verify/Bench run with — the specs must
-      // exercise the sessions users actually get
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // production DPP conf (see Verify.scala): reuse-only mode can never
-      // prune the partitioned staged indexes' scans under a hinted
-      // broadcast join; standalone pruning subqueries let the cost model
-      // decide — the shape the IvfConfSpec scan-metrics test certifies
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly",
-        "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Session(Seq("spark.sql.warehouse.dir" -> tempDir("warehouse")))
     // The repo's only unpartitioned windows are the DELIBERATE K-row
     // frames (ds_mixture / ds_temperature / ds_interleave quota math —
     // bounded by the language/source domain, commented at each site), so

@@ -81,8 +81,7 @@ class MediaStoreSpec extends SparkSuite {
   test("fingerprint store lifecycle: ingest -> compact -> ingest -> " +
     "forget -> replay serves near-dups equal to the one-pass index " +
     "over live media") {
-    val dir = java.nio.file.Files.createTempDirectory("mediastore")
-      .toString + "/prints"
+    val dir = tempDir("mediastore") + "/prints"
     MediaStore.bootstrap(spark, dir, hashesOf(Seq(1L, 2L, 3L, 4L)))
     MediaStore.ingest(spark, dir, hashesOf(Seq(5L, 6L)), 0L, "spec_seq")
     MediaStore.compact(spark, dir)
@@ -117,8 +116,7 @@ class MediaStoreSpec extends SparkSuite {
   test("fingerprint-family rotation: re-print live media (resize-" +
     "normalized aHash), swap with a generation, reject stale-family " +
     "replays loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("mediastore_rot")
-      .toString + "/prints"
+    val dir = tempDir("mediastore_rot") + "/prints"
     MediaStore.bootstrap(spark, dir, hashesOf(Seq(1L, 2L, 3L, 4L)))
     MediaStore.ingest(spark, dir, hashesOf(Seq(5L, 6L)), 0L, "spec_seq")
     MediaStore.forget(spark, dir, Seq(4L).toDF("media_id"))
@@ -146,10 +144,9 @@ class MediaStoreSpec extends SparkSuite {
   test("streamed print ingest (MediaStream) equals batch ingest, and a " +
     "wiped-checkpoint restart on the compacted store fails serve loudly") {
     import java.nio.file.Files
-    val printDir = Files.createTempDirectory("mediastream_p").toString
-    val storeDir = Files.createTempDirectory("mediastream_s")
-      .toString + "/prints"
-    val ckpt = Files.createTempDirectory("mediastream_c").toString + "/ck"
+    val printDir = tempDir("mediastream_p")
+    val storeDir = tempDir("mediastream_s") + "/prints"
+    val ckpt = tempDir("mediastream_c") + "/ck"
     MediaStore.bootstrap(spark, storeDir, hashesOf(Seq(1L, 2L)))
     hashesOf(Seq(3L, 4L)).write.mode("overwrite")
       .parquet(s"$printDir/p0.parquet")
@@ -205,8 +202,7 @@ class MediaStoreSpec extends SparkSuite {
     import spark.implicits._
     val clips = Seq((100L, wav(1)), (101L, wav(1)), (102L, wav(9)))
       .map { case (id, b) => Media.MediaRow(id, "audio", b, 0, 0) }.toDS()
-    val dir = java.nio.file.Files.createTempDirectory("mediastore_audio")
-      .toString + "/prints"
+    val dir = tempDir("mediastore_audio") + "/prints"
     MediaStore.bootstrap(spark, dir, Media.audioFingerprints(clips))
     val pairs = MediaStore.nearDups(spark, dir, maxHamming = 0).collect()
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSet

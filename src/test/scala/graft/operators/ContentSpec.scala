@@ -78,7 +78,7 @@ class ContentSpec extends SparkSuite {
     // ScaleUp-shaped flood: identical text under shifted ids — the regime
     // the collapse exists for. Written as parquet so the derivations read
     // it through the same Tables loader the shipped queries use.
-    val dir = java.nio.file.Files.createTempDirectory("graft_content_spec").toString
+    val dir = tempDir("graft_content_spec")
     val base = Tables.documents(spark, sf).limit(30).collect()
     val flood = (0 until 40).flatMap { r =>
       base.map { row =>
@@ -181,7 +181,7 @@ class ContentSpec extends SparkSuite {
     // rep frame's hash sees the normalized value; an unnormalized
     // member-side hash would disagree and the re-expansion join would
     // silently DROP the row (naive + oracle emit every vec_id)
-    val dir = java.nio.file.Files.createTempDirectory("graft_negzero").toString
+    val dir = tempDir("graft_negzero")
     def v(head: Float, rest: Float): Seq[Float] = head +: Seq.fill(7)(rest)
     Seq(
       (1L, v(-0.0f, 1.0f), 0),

@@ -297,7 +297,7 @@ class TextDedupSpec extends SparkSuite {
       (10L, "en", 40L, nearText), // near-dup of 1, shares a band
       (11L, "en", 40L, "totally unrelated fresh novel content here")))
     val idx = TextDedup.minhashBandIndex(corpus, 2, 4, 4)
-    val dir = java.nio.file.Files.createTempDirectory("band_idx").toString
+    val dir = tempDir("band_idx")
     idx.write.mode("overwrite").parquet(dir)
     val fromDisk = TextDedup.incrementalNearDups(spark.read.parquet(dir),
         batch, 2, 4, 4, minEst = 0.25)

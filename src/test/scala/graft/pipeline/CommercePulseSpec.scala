@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths}
   */
 class CommercePulseSpec extends SparkSuite {
 
-  private lazy val dir = Files.createTempDirectory("cp_fixture").toString
+  private lazy val dir = tempDir("cp_fixture")
 
   // --- fixture corpus: 3 vendor dialects + drift + noise ---
   private val liveLines = Seq(
@@ -120,15 +120,25 @@ class CommercePulseSpec extends SparkSuite {
   }
 
   test("runAll end-to-end is idempotent (re-run changes nothing)") {
-    val out = Files.createTempDirectory("cp_out").toString
+    val out = tempDir("cp_out")
+    // (rows, distinct keys) of each id-keyed fact
+    def facts(): Map[String, (Long, Long)] =
+      Seq("fact_orders" -> "order_id", "fact_payments" -> "payment_id",
+          "fact_refunds" -> "refund_id").map { case (t, k) =>
+        val df = spark.read.parquet(s"$out/$t")
+        t -> (df.count(), df.select(k).distinct().count())
+      }.toMap
     val counts1 = CommercePulse.runAll(spark,
       Seq(s"$dir/historical.json"), Seq(s"$dir/live/events.jsonl"), out)
-    val ordersAfter1 = spark.read.parquet(s"$out/fact_orders").count()
+    val factsAfter1 = facts()
     val counts2 = CommercePulse.runAll(spark,
       Seq(s"$dir/historical.json"), Seq(s"$dir/live/events.jsonl"), out)
-    val ordersAfter2 = spark.read.parquet(s"$out/fact_orders").count()
+    val factsAfter2 = facts()
     assert(counts1 == counts2)
-    assert(ordersAfter1 == ordersAfter2) // upsert sink: replay-safe
+    // upsert sinks: replay-safe, one row per key
+    assert(factsAfter1 == factsAfter2)
+    assert(factsAfter2("fact_payments") == ((5L, 5L)))
+    assert(factsAfter2("fact_refunds") == ((1L, 1L)))
     assert(spark.read.parquet(s"$out/dim_date").count() == 1461)
   }
 }

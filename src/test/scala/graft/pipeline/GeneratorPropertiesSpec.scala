@@ -14,7 +14,7 @@ class GeneratorPropertiesSpec extends SparkSuite {
   private lazy val cfg = EventGenerator.Config(events = 10000, seed = 7L)
   private lazy val gen = EventGenerator.generate(cfg)
   private lazy val path = {
-    val dir = java.nio.file.Files.createTempDirectory("gen_events").toString
+    val dir = tempDir("gen_events")
     EventGenerator.writeJsonl(cfg, dir)
   }
   private lazy val ingested =

@@ -151,9 +151,9 @@ class IvfConfSpec extends SparkSuite {
     // (SimilarityQueries.queryBatch) — a filter-over-corpus query side
     // would carry the corpus file's size estimate and the cost model
     // would (correctly, by its own numbers) conclude the pruning
-    // subquery costs a corpus scan. Round-10 DppCheck measurements:
-    // 2/64 files here and at the 100×/1000× rungs, with wall-clock
-    // 1.4× at 1000× (BENCH_NOTES).
+    // subquery costs a corpus scan. Round-10 measurements (BENCH_NOTES,
+    // "IVF-PQ scan prune, un-forced"): 2/64 files here and at the
+    // 100×/1000× rungs, with wall-clock 1.4× at 1000×.
     val d01 = "/root/testdata/sf0.01"
     withConf("spark.graft.ivf.cells", Some("64")) {
       val (coarse, rcent, codes) = SimilarityQueries.ivfpqIndex(spark, d01)
@@ -180,7 +180,8 @@ class IvfConfSpec extends SparkSuite {
       // over real file sizes + autoBroadcastJoinThreshold), not graft
       // code: a Spark version bump or regenerated testdata can flip it
       // to 64/64 without any bug here. If it fires with no graft diff,
-      // re-measure with DppCheck before touching the query code.
+      // re-measure against BENCH_NOTES round 10 ("IVF-PQ scan prune,
+      // un-forced") before touching the query code.
       assert(scans.forall(_ <= 2),
         s"un-forced prune read ${scans.mkString(",")} of 64 cell files " +
           "(expected <=nprobe=2). This is a cost-model regression check: " +
@@ -199,8 +200,7 @@ class IvfConfSpec extends SparkSuite {
     val d01 = "/root/testdata/sf0.01"
     withConf("spark.graft.ivf.cells", Some("64")) {
       val (coarse, rcent, codes) = SimilarityQueries.ivfpqIndex(spark, d01)
-      val dir = java.nio.file.Files.createTempDirectory("quiesced")
-        .toString + "/store"
+      val dir = tempDir("quiesced") + "/store"
       codes.write.mode("overwrite").parquet(s"$dir/base")
       graft.sources.KeyedStore.forget(spark, dir, "vec_id",
         Seq(123L).toDF("vec_id"), atMs = 1000L)
@@ -240,7 +240,8 @@ class IvfConfSpec extends SparkSuite {
     // The round-11 residual, closed with an honest twist. Feared: the
     // union+anti-join reconcile hides the hive scan from DPP, so a
     // store with ANY churn (its steady state) full-scans the compacted
-    // 99.9% on every probe. Measured (StoreDppCheck, BENCH_NOTES r12):
+    // 99.9% on every probe. Measured (BENCH_NOTES round 12, "Busy-store
+    // DPP"):
     // this Spark's DPP reaches the scan through the plain reconcile in
     // most shapes — but whether it ENGAGES is a cost-model estimate.
     // The cell-pruned path (`partPrune`: the probe's cells semi-joined
@@ -252,8 +253,7 @@ class IvfConfSpec extends SparkSuite {
     val d01 = "/root/testdata/sf0.01"
     withConf("spark.graft.ivf.cells", Some("64")) {
       val (coarse, rcent, codes) = SimilarityQueries.ivfpqIndex(spark, d01)
-      val dir = java.nio.file.Files.createTempDirectory("busystore")
-        .toString + "/store"
+      val dir = tempDir("busystore") + "/store"
       // bulk compacted into cid=*/ dirs; a tail batch stays PENDING and
       // one key is freshly forgotten — the store never quiesces here
       codes.filter(col("vec_id") % 97 =!= 0)

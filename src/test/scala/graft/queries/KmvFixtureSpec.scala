@@ -24,7 +24,7 @@ class KmvFixtureSpec extends SparkSuite {
 
   test("planted corpus: all three estimator-branch rows match the " +
     "offline big-int computation bit-for-bit") {
-    val dir = java.nio.file.Files.createTempDirectory("kmv_fixture").toString
+    val dir = tempDir("kmv_fixture")
     val ts = java.sql.Timestamp.valueOf("2024-03-15 12:00:00")
     val rows =
       (1L to 150L).map(u => (u, "view")) ++ (101L to 230L).map(u => (u, "purchase"))

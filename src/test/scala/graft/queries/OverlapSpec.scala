@@ -60,7 +60,7 @@ class OverlapSpec extends SparkSuite {
     // (150 timelines, 450 users) and same-fp pairs must count ALL |T|²
     // session combos — the regime the a_fp == b_fp join exists for.
     val K = 3
-    val dir = java.nio.file.Files.createTempDirectory("ovl_rep").toString
+    val dir = tempDir("ovl_rep")
     graft.Tables.events(spark, sf)
       .withColumn("__r", explode(sequence(lit(0L), lit(K - 1L))))
       .withColumn("user_id", col("user_id") + col("__r") * 100000000L)

@@ -96,7 +96,7 @@ class PqShuffleSpec extends SparkSuite {
     // dropping half the docs must not move any survivor to a new shard or
     // reorder two survivors — their positions just compact
     val full = TextQueries.dsShuffle(spark, sf)
-    val halfDir = java.nio.file.Files.createTempDirectory("graft_shuf").toString
+    val halfDir = tempDir("graft_shuf")
     graft.Tables.documents(spark, sf).filter(col("doc_id") % 2 === 0)
       .write.mode("overwrite").parquet(s"$halfDir/documents.parquet")
     val half = TextQueries.dsShuffle(spark, halfDir)

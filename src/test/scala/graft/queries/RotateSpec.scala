@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.SparkSuite
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -50,7 +49,7 @@ class RotateSpec extends SparkSuite {
 
   test("rotation retrains on the live view, swaps atomically, carries " +
     "tombstones, and does not lose recall vs the stale quantizers") {
-    val dir = Files.createTempDirectory("rot").toString + "/store"
+    val dir = tempDir("rot") + "/store"
     val emb = graft.Tables.embeddings(spark, sf)
     val (coarse0, rcent0, baseCodes) =
       SimilarityQueries.ivfpqIndexOn(spark, sf, Some(base))

@@ -31,7 +31,7 @@ class SemTauGateSpec extends SparkSuite {
     assert(st.inBand(pinned),
       f"pinned tau $pinned drifted out of [q0.001=${st.q0001}%.4g, " +
         f"q0.01=${st.q001}%.4g] — the testdata's embedding space moved; " +
-        "re-run graft.SemTauCheck and update OracleDefaults + the " +
+        s"pin the recommended ${st.recommended} in OracleDefaults + the " +
         "static oracle SQL together")
     // and the executable recommendation reproduces the pinned conf
     assert(st.recommended.contains(pinned),

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSuite
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -23,7 +22,7 @@ class KeyedStoreSpec extends SparkSuite {
     ids.map(i => (i, i % 3, v)).toDF("id", "part", "v")
 
   private def newStore(): String =
-    Files.createTempDirectory("kstore").toString + "/store"
+    tempDir("kstore") + "/store"
 
   private def serve(dir: String) =
     KeyedStore.serve(spark, dir, Seq("part"), schema, "id")

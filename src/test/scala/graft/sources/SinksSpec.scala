@@ -7,7 +7,7 @@ import java.nio.file.Files
 class SinksSpec extends SparkSuite {
 
   test("date-partitioned writes prune partitions at the scan") {
-    val out = Files.createTempDirectory("part_out").toString + "/orders"
+    val out = tempDir("part_out") + "/orders"
     val o = graft.Tables.orders(spark, sf)
       .withColumn("order_date", col("o_orderdate").cast("date").cast("string"))
     Sinks.writeDatePartitioned(o.select("o_orderkey", "o_totalprice", "order_date"),
@@ -24,7 +24,7 @@ class SinksSpec extends SparkSuite {
 
   test("upsert sinks: first-write works, corrupt existing table propagates") {
     import spark.implicits._
-    val base = Files.createTempDirectory("sink_guard").toString
+    val base = tempDir("sink_guard")
     // first write: missing path means fresh table, not an error
     Sinks.upsertParquet(spark, Seq((1L, "a")).toDF("k", "v"), s"$base/t",
       Seq("k"), Seq(col("v").desc))
@@ -46,7 +46,7 @@ class SinksSpec extends SparkSuite {
   }
 
   test("compaction collapses a small-files directory and preserves content exactly") {
-    val out = Files.createTempDirectory("compact_out").toString + "/ev"
+    val out = tempDir("compact_out") + "/ev"
     val src = graft.Tables.events(spark, sf)
       .select("event_id", "user_id", "value")
     src.repartition(64).write.parquet(out) // the streaming-ingest disease

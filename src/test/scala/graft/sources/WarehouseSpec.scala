@@ -15,7 +15,7 @@ class WarehouseSpec extends SparkSuite {
 
   test("full star-schema DDL + truncate-load round-trips through the catalog") {
     val db = "wh_spec"
-    val root = java.nio.file.Files.createTempDirectory("wh_spec")
+    val root = java.nio.file.Paths.get(tempDir("wh_spec"))
     val dbDir = root.resolve(s"$db.db")
     spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
     // a fresh location keeps the spec off the shared warehouse dir;

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkSuite
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Streaming ANN probe vs batch `sim_pq` — bit equality, not an error
@@ -13,8 +12,8 @@ import org.apache.spark.sql.functions._
 class AnnStreamSpec extends SparkSuite {
 
   test("streamed PQ verdicts are bit-equal to batch sim_pq on the same queries") {
-    val qDir = Files.createTempDirectory("ann_q").toString
-    val outDir = Files.createTempDirectory("ann_out").toString + "/probe"
+    val qDir = tempDir("ann_q")
+    val outDir = tempDir("ann_out") + "/probe"
     val emb = graft.Tables.embeddings(spark, sf)
     // two micro-batches that split the full batch query set in half, so
     // the equality only holds if the probe is per-batch pure
@@ -24,7 +23,7 @@ class AnnStreamSpec extends SparkSuite {
     emb.filter(col("vec_id") >= nq / 2 && col("vec_id") < nq)
       .write.mode("overwrite").parquet(s"$qDir/b1.parquet")
 
-    val ckpt = Files.createTempDirectory("ann_ckpt").toString
+    val ckpt = tempDir("ann_ckpt")
     val q = AnnStream.pqProbeStream(spark, qDir, sf, outDir,
       maxFilesPerTrigger = Some(1), checkpointDir = Some(ckpt))
     try { q.processAllAvailable() } finally { q.stop() }
@@ -43,8 +42,8 @@ class AnnStreamSpec extends SparkSuite {
   }
 
   test("streamed IVF-PQ verdicts are bit-equal to batch sim_ivfpq") {
-    val qDir = Files.createTempDirectory("ivfpq_q").toString
-    val outDir = Files.createTempDirectory("ivfpq_out").toString + "/probe"
+    val qDir = tempDir("ivfpq_q")
+    val outDir = tempDir("ivfpq_out") + "/probe"
     val emb = graft.Tables.embeddings(spark, sf)
     val nq = graft.queries.SimilarityQueries.PqNQ
     emb.filter(col("vec_id") < nq / 2)
@@ -71,8 +70,8 @@ class AnnStreamSpec extends SparkSuite {
   test("streaming index maintenance: the ingested code store equals the " +
     "one-pass encode, and probes through it match batch sim_ivfpq_incr") {
     import graft.queries.SimilarityQueries
-    val vecDir = Files.createTempDirectory("ivfpq_ingest_v").toString
-    val storeDir = Files.createTempDirectory("ivfpq_ingest_s").toString + "/codes"
+    val vecDir = tempDir("ivfpq_ingest_v")
+    val storeDir = tempDir("ivfpq_ingest_s") + "/codes"
     val emb = graft.Tables.embeddings(spark, sf)
     val base = 400L
     // two ingest micro-batches splitting the post-base corpus — equality
@@ -139,8 +138,8 @@ class AnnStreamSpec extends SparkSuite {
     "micro-batch replay, and the recurring compaction makes the delete physical") {
     import graft.queries.SimilarityQueries
     import spark.implicits._
-    val vecDir = Files.createTempDirectory("ivfpq_forget_v").toString
-    val storeDir = Files.createTempDirectory("ivfpq_forget_s").toString + "/codes"
+    val vecDir = tempDir("ivfpq_forget_v")
+    val storeDir = tempDir("ivfpq_forget_s") + "/codes"
     val emb = graft.Tables.embeddings(spark, sf)
     val base = 400L
     emb.filter(col("vec_id") >= base && col("vec_id") < 450)
@@ -212,8 +211,8 @@ class AnnStreamSpec extends SparkSuite {
     "bootstrap stream refuses a rotated store, and the RESUME stream " +
     "(fresh checkpoint, stamped batches) serves ≡ batch rebuild-on-live") {
     import graft.queries.SimilarityQueries
-    val vecDir = Files.createTempDirectory("rot_drill_v").toString
-    val storeDir = Files.createTempDirectory("rot_drill_s").toString + "/codes"
+    val vecDir = tempDir("rot_drill_v")
+    val storeDir = tempDir("rot_drill_s") + "/codes"
     val emb = graft.Tables.embeddings(spark, sf)
     val base = 400L
     val q = AnnStream.ivfpqIngestStream(spark, vecDir, sf, base, storeDir,
@@ -263,7 +262,7 @@ class AnnStreamSpec extends SparkSuite {
       .write.mode("overwrite").parquet(s"$vecDir/b1.parquet")
     val q2 = AnnStream.ivfpqResumeIngestStream(spark, vecDir, storeDir,
       coarse1, rcent1, generation = tag, maxFilesPerTrigger = Some(1),
-      checkpointDir = Some(Files.createTempDirectory("rot_ckpt2").toString))
+      checkpointDir = Some(tempDir("rot_ckpt2")))
     try q2.processAllAvailable() finally q2.stop()
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "cid", "m", "code").collect().map(_.toSeq).toSet
@@ -281,8 +280,7 @@ class AnnStreamSpec extends SparkSuite {
 
   test("ckptIdentity follows checkpoint CONTENT, not path: a wiped-and-" +
     "recreated checkpoint at the same path gets a new identity") {
-    val dir = java.nio.file.Files.createTempDirectory("ckpt_id")
-      .toString + "/ck"
+    val dir = tempDir("ckpt_id") + "/ck"
     val a = AnnStream.ckptIdentity(spark, Some(dir))
     assert(a == AnnStream.ckptIdentity(spark, Some(dir)),
       "restarts of the SAME checkpoint must read the same identity back")

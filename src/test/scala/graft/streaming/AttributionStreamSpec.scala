@@ -43,7 +43,7 @@ class AttributionStreamSpec extends SparkSuite {
         }
       }
       .option("checkpointLocation",
-        Files.createTempDirectory("attrib_ck").toString)
+        tempDir("attrib_ck"))
       .start()
     q.processAllAvailable(); q.stop()
     (finalV.asScala.toMap, emitted.asScala.toSeq)
@@ -72,7 +72,7 @@ class AttributionStreamSpec extends SparkSuite {
   }
 
   test("late cross-batch touch revises the verdict; final map equals batch as-of") {
-    val dir = Files.createTempDirectory("attrib_fx").toString
+    val dir = tempDir("attrib_fx")
     def ev(id: Long, user: Long, ts: String, et: String, v: Option[Double]) =
       (id, java.sql.Timestamp.valueOf(ts), user, et,
         v.map(Double.box).orNull.asInstanceOf[java.lang.Double], null: String)
@@ -97,7 +97,7 @@ class AttributionStreamSpec extends SparkSuite {
     val all = f1 ++ f2
     val schema = all.toDF(cols: _*).schema
     Seq(f1, f2).zipWithIndex.foreach { case (rows, i) =>
-      val tmp = Files.createTempDirectory(s"attrib_part$i").toString
+      val tmp = tempDir(s"attrib_part$i")
       rows.toDF(cols: _*).coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = Files.list(Paths.get(tmp)).iterator().asScala
         .find(_.toString.endsWith(".parquet")).get
@@ -116,7 +116,7 @@ class AttributionStreamSpec extends SparkSuite {
 
   test("sf0.001 events in three time-ordered chunks match batch ev_attribution") {
     val ev = Tables.events(spark, sf)
-    val dir = Files.createTempDirectory("attrib_sf").toString
+    val dir = tempDir("attrib_sf")
     // log-arrival order: three consecutive time ranges (days 1-10, 11-20,
     // 21-30) — each later chunk is entirely inside the 7-day lateness
     // horizon of the previous chunk's watermark, so nothing is dropped
@@ -126,7 +126,7 @@ class AttributionStreamSpec extends SparkSuite {
       ev.filter(col("ts") >= cuts(0) && col("ts") < cuts(1)),
       ev.filter(col("ts") >= cuts(1)))
     chunks.zipWithIndex.foreach { case (c, i) =>
-      val tmp = Files.createTempDirectory(s"attrib_sfp$i").toString
+      val tmp = tempDir(s"attrib_sfp$i")
       c.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = Files.list(Paths.get(tmp)).iterator().asScala
         .find(_.toString.endsWith(".parquet")).get

@@ -18,10 +18,10 @@ class DeconStreamSpec extends SparkSuite {
   test("streamed lexical evidence + streamed ADC candidates serve " +
     "verdicts row-equal to batch dd_decon_fused on the same corpus") {
     import java.nio.file.Files
-    val docDir = Files.createTempDirectory("decon_docs").toString
-    val vecDir = Files.createTempDirectory("decon_vecs").toString
-    val lexOut = Files.createTempDirectory("decon_lex").toString + "/lex"
-    val semOut = Files.createTempDirectory("decon_sem").toString + "/sem"
+    val docDir = tempDir("decon_docs")
+    val vecDir = tempDir("decon_vecs")
+    val lexOut = tempDir("decon_lex") + "/lex"
+    val semOut = tempDir("decon_sem") + "/sem"
     val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
     val emb = graft.Tables.embeddings(spark, sf)
     // three micro-batches per family, id-striped so every batch mixes
@@ -65,8 +65,8 @@ class DeconStreamSpec extends SparkSuite {
   test("a replayed micro-batch overwrites its own evidence instead of " +
     "double-counting (idempotent sink contract)") {
     import java.nio.file.Files
-    val docDir = Files.createTempDirectory("decon_docs2").toString
-    val lexOut = Files.createTempDirectory("decon_lex2").toString + "/lex"
+    val docDir = tempDir("decon_docs2")
+    val lexOut = tempDir("decon_lex2") + "/lex"
     val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
     docs.write.mode("overwrite").parquet(s"$docDir/b0.parquet")
     val q = DeconStream.lexicalEvidenceStream(spark, docDir, sf, lexOut)
@@ -85,10 +85,10 @@ class DeconStreamSpec extends SparkSuite {
   test("a vector arriving in TWO source files still serves verdicts " +
     "equal to batch (duplicate candidates min-reduced before the top-k)") {
     import java.nio.file.Files
-    val vecDir = Files.createTempDirectory("decon_vecs3").toString
-    val lexDir = Files.createTempDirectory("decon_docs3").toString
-    val lexOut = Files.createTempDirectory("decon_lex3").toString + "/lex"
-    val semOut = Files.createTempDirectory("decon_sem3").toString + "/sem"
+    val vecDir = tempDir("decon_vecs3")
+    val lexDir = tempDir("decon_docs3")
+    val lexOut = tempDir("decon_lex3") + "/lex"
+    val semOut = tempDir("decon_sem3") + "/sem"
     val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
     val emb = graft.Tables.embeddings(spark, sf)
     docs.write.mode("overwrite").parquet(s"$lexDir/b0.parquet")

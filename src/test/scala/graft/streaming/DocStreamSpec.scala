@@ -11,8 +11,8 @@ class DocStreamSpec extends SparkSuite {
     "index, forget holds across a replayed batch, compaction re-runnable") {
     import java.nio.file.Files
     import spark.implicits._
-    val docDir = Files.createTempDirectory("band_ingest_d").toString
-    val storeDir = Files.createTempDirectory("band_ingest_s").toString + "/band"
+    val docDir = tempDir("band_ingest_d")
+    val storeDir = tempDir("band_ingest_s") + "/band"
     val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
     val base = 400L
     docs.filter(col("doc_id") >= base && col("doc_id") < 450)
@@ -70,7 +70,7 @@ class DocStreamSpec extends SparkSuite {
     "family, swap atomically, keep forgotten docs unmatched") {
     import java.nio.file.Files
     import spark.implicits._
-    val storeDir = Files.createTempDirectory("band_rot").toString + "/band"
+    val storeDir = tempDir("band_rot") + "/band"
     val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
     val base = 400L
     // build the store one-pass (base + one appended batch), then forget
@@ -113,7 +113,7 @@ class DocStreamSpec extends SparkSuite {
     // ---- the rotation drill, band-store side (AnnStreamSpec twin) ----
     // the rotated store is generation-stamped: the old bootstrap
     // definition (old family, rewrites base/) must refuse outright
-    val docDir = Files.createTempDirectory("band_resume_d").toString
+    val docDir = tempDir("band_resume_d")
     intercept[IllegalStateException] {
       DocStream.bandIndexIngestStream(spark, docDir, sf, base, storeDir,
         shingleN = 2, bands = 4, rowsPerBand = 4)
@@ -132,7 +132,7 @@ class DocStreamSpec extends SparkSuite {
     val q2 = DocStream.bandIndexResumeIngestStream(spark, docDir, storeDir,
       shingleN = 2, bands = 8, rowsPerBand = 2,
       maxFilesPerTrigger = Some(1),
-      checkpointDir = Some(Files.createTempDirectory("band_ckpt2").toString))
+      checkpointDir = Some(tempDir("band_ckpt2")))
     try q2.processAllAvailable() finally q2.stop()
     val served2 = DocStream.storeBandIndex(spark, storeDir, schema)
     assert(rows(served2) ==

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSuite
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.functions.col
 
 class EventStreamSpec extends SparkSuite {
 
@@ -17,7 +18,7 @@ class EventStreamSpec extends SparkSuite {
   }
 
   test("streaming dedup + windowed daily agg matches batch semantics") {
-    val dir = Files.createTempDirectory("stream_in").toString
+    val dir = tempDir("stream_in")
     writeFixture(dir)
     val stream = EventStream.readLiveStream(spark, dir)
     assert(stream.isStreaming)
@@ -34,7 +35,7 @@ class EventStreamSpec extends SparkSuite {
   }
 
   test("sliding and session windows over the deduped stream") {
-    val dir = Files.createTempDirectory("stream_in3").toString
+    val dir = tempDir("stream_in3")
     writeFixture(dir)
     val deduped = EventStream.dedupWithWatermark(EventStream.readLiveStream(spark, dir))
 
@@ -56,7 +57,7 @@ class EventStreamSpec extends SparkSuite {
   }
 
   test("streaming HLL window: per-day approx distinct orders tracks exact within 5%") {
-    val dir = Files.createTempDirectory("stream_hll").toString
+    val dir = tempDir("stream_hll")
     Files.createDirectories(Paths.get(dir))
     // day 1: 300 events over 120 distinct refs; day 2: 30 distinct refs
     val lines =
@@ -82,7 +83,7 @@ class EventStreamSpec extends SparkSuite {
   }
 
   test("stream-static dim enrichment joins without stream state") {
-    val dir = Files.createTempDirectory("stream_in4").toString
+    val dir = tempDir("stream_in4")
     writeFixture(dir)
     import SparkSuite.session.implicits._
     val dim = Seq(("vendor_a", "Alpha Corp"), ("vendor_b", "Beta GmbH"))
@@ -99,10 +100,10 @@ class EventStreamSpec extends SparkSuite {
   }
 
   test("streaming daily refresh upserts the same grains as the batch aggregate") {
-    val dir = Files.createTempDirectory("stream_in5").toString
+    val dir = tempDir("stream_in5")
     writeFixture(dir)
-    val out = Files.createTempDirectory("stream_daily").toString
-    val cp = Files.createTempDirectory("stream_daily_cp").toString
+    val out = tempDir("stream_daily")
+    val cp = tempDir("stream_daily_cp")
     val q = EventStream.startDailyRefresh(spark,
       EventStream.dedupWithWatermark(EventStream.readLiveStream(spark, dir)),
       s"$out/fact_order_daily", cp)
@@ -119,7 +120,7 @@ class EventStreamSpec extends SparkSuite {
   }
 
   test("daily refresh merges grains spanning micro-batches (equals batch recompute)") {
-    val dir = Files.createTempDirectory("stream_in7").toString
+    val dir = tempDir("stream_in7")
     Files.createDirectories(Paths.get(dir))
     // one (2024-01-02, vendor_b) grain split across two files; with
     // maxFilesPerTrigger=1 each file is its own micro-batch
@@ -131,8 +132,8 @@ class EventStreamSpec extends SparkSuite {
       """{"event_id":"m3","event_type":"order_created","event_time":"2024-01-02T14:00:00","vendor":"vendor_b","payload":"{\"order_id\":\"B-2\",\"created_at\":\"2024-01-02T14:00:00\",\"totalAmount\":100.0}","ingested_at":"2024-01-02T15:00:00"}""",
       """{"event_id":"m4","event_type":"payment_succeeded","event_time":"2024-01-02T16:00:00","vendor":"vendor_b","payload":"{\"order_id\":\"B-2\",\"paid_at\":\"2024-01-02T16:00:00\",\"payment_status\":\"success\",\"amountPaid\":100.0,\"transaction_id\":\"TX-2\"}","ingested_at":"2024-01-02T17:00:00"}"""
     ).mkString("\n"))
-    val out = Files.createTempDirectory("stream_daily2").toString
-    val cp = Files.createTempDirectory("stream_daily2_cp").toString
+    val out = tempDir("stream_daily2")
+    val cp = tempDir("stream_daily2_cp")
     val q = EventStream.startDailyRefresh(spark,
       EventStream.dedupWithWatermark(
         EventStream.readLiveStream(spark, dir, maxFilesPerTrigger = Some(1))),
@@ -157,8 +158,71 @@ class EventStreamSpec extends SparkSuite {
     assert(r.getAs[Long]("order_count") == batchRecompute.getAs[Long]("order_count"))
   }
 
+  test("daily refresh: the trailing 0-row batch rewrites neither the store nor the table") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import scala.jdk.CollectionConverters._
+    val dir = tempDir("stream_in11")
+    // two single-file data batches; the second advances the watermark, so
+    // an AvailableNow run closes with a watermark-only batch of 0 rows
+    Files.writeString(Paths.get(s"$dir/a.jsonl"), Seq(
+      """{"event_id":"e1","event_type":"order_created","event_time":"2024-01-02T10:00:00","vendor":"vendor_b","payload":"{\"order_id\":\"B-1\",\"created_at\":\"2024-01-02T10:00:00\",\"totalAmount\":200.0}","ingested_at":"2024-01-02T11:00:00"}""",
+      """{"event_id":"e2","event_type":"payment_succeeded","event_time":"2024-01-02T12:00:00","vendor":"vendor_b","payload":"{\"order_id\":\"B-1\",\"paid_at\":\"2024-01-02T12:00:00\",\"payment_status\":\"success\",\"amountPaid\":200.0,\"transaction_id\":\"TX-1\"}","ingested_at":"2024-01-02T13:00:00"}"""
+    ).mkString("\n"))
+    Files.writeString(Paths.get(s"$dir/b.jsonl"), Seq(
+      """{"event_id":"e3","event_type":"order_created","event_time":"2024-01-03T14:00:00","vendor":"vendor_a","payload":"{\"orderRef\":\"A-1\",\"created\":\"2024-01-03 14:00\",\"total\":100.0}","ingested_at":"2024-01-03T15:00:00"}""",
+      """{"event_id":"e4","event_type":"payment_succeeded","event_time":"2024-01-03T16:00:00","vendor":"vendor_a","payload":"{\"orderRef\":\"A-1\",\"paidAt\":\"2024/01/03 16:00:00\",\"status\":\"SUCCESS\",\"amount\":100.0,\"method\":\"card\",\"txRef\":\"TX-2\"}","ingested_at":"2024-01-03T17:00:00"}"""
+    ).mkString("\n"))
+    // the file source takes the oldest file first: pin a before b
+    Files.setLastModifiedTime(Paths.get(s"$dir/a.jsonl"),
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 60000L))
+    val out = tempDir("stream_daily4") + "/fact_order_daily"
+    val cp = tempDir("stream_daily4_cp")
+    def parts(p: String): Set[String] =
+      Option(new java.io.File(p).list()).toSet.flatten.filter(_.startsWith("part-"))
+    // (query, batch, input rows, store part files, table part files)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (java.util.UUID, Long, Long, Set[String], Set[String])]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit =
+        seen.add((e.progress.id, e.progress.batchId, e.progress.numInputRows,
+          parts(s"${out}_events"), parts(out)))
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    val batches = try {
+      val q = EventStream.startDailyRefresh(spark,
+        EventStream.dedupWithWatermark(
+          EventStream.readLiveStream(spark, dir, maxFilesPerTrigger = Some(1))),
+        out, cp)
+      q.awaitTermination(120000)
+      // progress reaches listeners asynchronously: wait for the last one
+      val n = q.recentProgress.length
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def mine = seen.asScala.filter(_._1 == q.id).toSeq
+      while (mine.size < n && System.nanoTime() < deadline) Thread.sleep(50)
+      mine.sortBy(_._2)
+    } finally spark.streams.removeListener(listener)
+    assert(batches.map(_._3) == Seq(2L, 2L, 0L),
+      s"expected two data batches and a trailing 0-row batch: $batches")
+    val (_, _, _, storeAfterData, tableAfterData) = batches(1)
+    val (_, _, _, storeAfterEmpty, tableAfterEmpty) = batches(2)
+    assert(storeAfterData.nonEmpty && tableAfterData.nonEmpty)
+    assert(storeAfterEmpty == storeAfterData, "0-row batch rewrote the store")
+    assert(tableAfterEmpty == tableAfterData, "0-row batch rewrote the table")
+    val all = graft.pipeline.CommercePulse.readLive(spark, s"$dir/*.jsonl")
+    val recompute = graft.pipeline.CommercePulse.factOrderDaily(
+      graft.pipeline.CommercePulse.normalizeOrders(all),
+      graft.pipeline.CommercePulse.normalizePayments(all),
+      graft.pipeline.CommercePulse.normalizeRefunds(all))
+    val table = spark.read.parquet(out).select(recompute.columns.map(col): _*)
+    assert(table.collect().toSet == recompute.collect().toSet)
+    assert(table.count() == 2)
+  }
+
   test("daily refresh retracts a grain when a late update moves the order's date") {
-    val dir = Files.createTempDirectory("stream_in8").toString
+    val dir = tempDir("stream_in8")
     Files.createDirectories(Paths.get(dir))
     Files.writeString(Paths.get(s"$dir/a.jsonl"),
       """{"event_id":"g1","event_type":"order_created","event_time":"2024-01-02T10:00:00","vendor":"vendor_b","payload":"{\"order_id\":\"C-1\",\"created_at\":\"2024-01-02T10:00:00\",\"totalAmount\":50.0}","ingested_at":"2024-01-02T11:00:00"}""")
@@ -166,8 +230,8 @@ class EventStreamSpec extends SparkSuite {
     // migrates from the 01-02 grain to 01-05 — the old grain must vanish
     Files.writeString(Paths.get(s"$dir/b.jsonl"),
       """{"event_id":"g2","event_type":"order_updated","event_time":"2024-01-05T10:00:00","vendor":"vendor_b","payload":"{\"order_id\":\"C-1\",\"created_at\":\"2024-01-05T10:00:00\",\"totalAmount\":50.0}","ingested_at":"2024-01-05T11:00:00"}""")
-    val out = Files.createTempDirectory("stream_daily3").toString
-    val cp = Files.createTempDirectory("stream_daily3_cp").toString
+    val out = tempDir("stream_daily3")
+    val cp = tempDir("stream_daily3_cp")
     val q = EventStream.startDailyRefresh(spark,
       EventStream.dedupWithWatermark(
         EventStream.readLiveStream(spark, dir, maxFilesPerTrigger = Some(1))),
@@ -179,7 +243,7 @@ class EventStreamSpec extends SparkSuite {
   }
 
   test("orderLifecycle: flatMapGroupsWithState folds per-order state across batches") {
-    val dir = Files.createTempDirectory("stream_in9").toString
+    val dir = tempDir("stream_in9")
     Files.createDirectories(Paths.get(dir))
     // A-1 created then paid (across two batches); B-1 created, paid,
     // refunded; C-1 only created
@@ -218,7 +282,7 @@ class EventStreamSpec extends SparkSuite {
     // regression: the first micro-batch runs with watermark 0; setting a
     // timeout of 0+ttl (1970) evicted every first-batch-only order as
     // soon as the watermark went live
-    val dir = Files.createTempDirectory("stream_in10").toString
+    val dir = tempDir("stream_in10")
     Files.createDirectories(Paths.get(dir))
     Files.writeString(Paths.get(s"$dir/a.jsonl"),
       """{"event_id":"w1","event_type":"order_created","event_time":"2024-01-02T10:00:00","vendor":"v","payload":"{\"order_id\":\"X-1\"}","ingested_at":"2024-01-02T10:01:00"}""")
@@ -244,7 +308,7 @@ class EventStreamSpec extends SparkSuite {
   }
 
   test("corrupt line accounting matches the reference's skip counting") {
-    val dir = Files.createTempDirectory("stream_in6").toString
+    val dir = tempDir("stream_in6")
     Files.createDirectories(Paths.get(dir))
     Files.writeString(Paths.get(s"$dir/events.jsonl"), Seq(
       """{"event_id":"ok1","event_type":"order_created","event_time":"2024-01-01T10:00:00","vendor":"v","payload":"{}","ingested_at":"2024-01-01T11:00:00"}""",
@@ -257,7 +321,7 @@ class EventStreamSpec extends SparkSuite {
   }
 
   test("stream-stream join: payments attach within the horizon, both sides watermarked") {
-    val dir = Files.createTempDirectory("stream_in_ssj").toString
+    val dir = tempDir("stream_in_ssj")
     Files.createDirectories(Paths.get(dir))
     Files.writeString(Paths.get(s"$dir/events.jsonl"), Seq(
       // A-1 ordered 10:00; its only payment lands NEXT DAY — outside the 2h horizon
@@ -279,10 +343,10 @@ class EventStreamSpec extends SparkSuite {
   }
 
   test("foreachBatch order upsert: streaming writes the same warehouse state as batch") {
-    val dir = Files.createTempDirectory("stream_in2").toString
+    val dir = tempDir("stream_in2")
     writeFixture(dir)
-    val out = Files.createTempDirectory("stream_out").toString
-    val cp = Files.createTempDirectory("stream_cp").toString
+    val out = tempDir("stream_out")
+    val cp = tempDir("stream_cp")
     val stream = EventStream.readLiveStream(spark, dir)
     val q = EventStream.startOrderUpsert(spark,
       EventStream.dedupWithWatermark(stream), s"$out/fact_orders", cp)

@@ -21,7 +21,7 @@ class KmvStreamSpec extends SparkSuite {
   private val K = 64
 
   test("streaming per-day KMV sketch is bit-equal to the batch sketch") {
-    val dir = Files.createTempDirectory("stream_kmv").toString
+    val dir = tempDir("stream_kmv")
     def line(id: String, day: String, ref: String): String =
       s"""{"event_id":"$id","event_type":"order_created","event_time":"${day}T10:00:00","vendor":"vendor_b","payload":"{\\"order_id\\":\\"$ref\\"}","ingested_at":"${day}T11:00:00"}"""
     // day 1: 100 distinct refs (> K, some repeated across files so the

@@ -43,7 +43,7 @@ class SessionizeStreamSpec extends SparkSuite {
         }
       }
       .option("checkpointLocation",
-        Files.createTempDirectory("sess_ck").toString)
+        tempDir("sess_ck"))
       .start()
     q.processAllAvailable(); q.stop()
     (latest.asScala.toMap, tombstones.get())
@@ -58,7 +58,7 @@ class SessionizeStreamSpec extends SparkSuite {
 
   private def writeChunk(dir: String, idx: Int,
                          df: org.apache.spark.sql.DataFrame): Unit = {
-    val tmp = Files.createTempDirectory(s"sess_part$idx").toString
+    val tmp = tempDir(s"sess_part$idx")
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = Files.list(Paths.get(tmp)).iterator().asScala
       .find(_.toString.endsWith(".parquet")).get
@@ -67,7 +67,7 @@ class SessionizeStreamSpec extends SparkSuite {
   }
 
   test("late bridging event merges sessions, shifts ids, tombstones the tail") {
-    val dir = Files.createTempDirectory("sess_fx").toString
+    val dir = tempDir("sess_fx")
     def ev(id: Long, user: Long, ts: String) =
       (id, java.sql.Timestamp.valueOf(ts), user, "view",
         null.asInstanceOf[java.lang.Double], null: String)
@@ -99,7 +99,7 @@ class SessionizeStreamSpec extends SparkSuite {
     assert(s1 === java.sql.Timestamp.valueOf("2024-01-05 10:00:00"))
     assert(e1 === java.sql.Timestamp.valueOf("2024-01-05 11:20:00"))
     // and the stream's final rows equal the batch window query on the union
-    val tmp = Files.createTempDirectory("sess_union").toString
+    val tmp = tempDir("sess_union")
     all.toDF(cols: _*).write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val want = graft.queries.Extended.evSessionize(spark, tmp)
       .as[(Long, Long, Long, java.sql.Timestamp, java.sql.Timestamp)]
@@ -110,7 +110,7 @@ class SessionizeStreamSpec extends SparkSuite {
 
   test("sf0.001 events in three time-ordered chunks match batch ev_sessionize") {
     val ev = Tables.events(spark, sf)
-    val dir = Files.createTempDirectory("sess_sf").toString
+    val dir = tempDir("sess_sf")
     val cuts = Seq("2024-01-11", "2024-01-21")
     val chunks = Seq(
       ev.filter(col("ts") < cuts(0)),

@@ -15,7 +15,7 @@ import java.nio.file.{Files, Paths}
 class TypeShiftSpec extends SparkSuite {
 
   test("streaming type-shift verdicts converge to the batch day-over-day deltas") {
-    val dir = Files.createTempDirectory("stream_shift").toString
+    val dir = tempDir("stream_shift")
     var id = 0
     def line(day: String, et: String): String = {
       id += 1
