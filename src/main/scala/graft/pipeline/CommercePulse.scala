@@ -106,12 +106,21 @@ object CommercePulse {
 
   /** Orders normalization: D1 latest-wins current state per order. */
   def normalizeOrders(events: DataFrame): DataFrame =
-    Dedup.latestWins(normalizeOrdersAll(events), Seq("order_id"),
-      Seq(col("created_at").desc_nulls_last, col("event_id").desc))
+    Dedup.latestWins(normalizeOrdersAll(events), Seq("order_id"), OrderLatest)
 
-  /** Payments normalization (reference `src/transformer.py:44-89`). */
-  def normalizePayments(events: DataFrame): DataFrame = {
-    val base = events.filter(col("event_type").isin(PaymentTypes: _*))
+  /** Latest-wins order among versions of one order_id: the normalizer's
+    * dedup and the order upsert sinks rank by the same.
+    */
+  val OrderLatest: Seq[Column] =
+    Seq(col("created_at").desc_nulls_last, col("event_id").desc)
+
+  /** Payments normalization WITHOUT the first-wins collapse — one row per
+    * payment event version (reference `src/transformer.py:44-89`). The
+    * incremental refresher reads it to find every order a payment has
+    * ever named.
+    */
+  def normalizePaymentsAll(events: DataFrame): DataFrame =
+    events.filter(col("event_type").isin(PaymentTypes: _*))
       .select(
         pick("transaction_id", "payment_id", "id", "paymentId", "txRef", "txn")
           .as("payment_id"),
@@ -127,9 +136,12 @@ object CommercePulse {
             col("event_time"))).as("payment_date"),
         col("event_id"))
       .filter(col("payment_id").isNotNull)
-    // D2: first-wins per payment_id (append-only log, replays collapse)
-    Dedup.firstWins(base, Seq("payment_id"), PaymentFirst)
-  }
+
+  /** Payments normalization: D2 first-wins per payment_id (append-only
+    * log, replays collapse).
+    */
+  def normalizePayments(events: DataFrame): DataFrame =
+    Dedup.firstWins(normalizePaymentsAll(events), Seq("payment_id"), PaymentFirst)
 
   /** First-wins order among versions of one payment_id / refund_id: the
     * normalizers' dedup and `runAll`'s upsert sinks rank by the same.
@@ -147,10 +159,11 @@ object CommercePulse {
     * loss bug (preserved faithfully in `normalizeRefundsStrict`). Here an
     * id-less refund gets a deterministic fallback id derived from its
     * event_id: replays of the same event still collapse, distinct refunds
-    * survive.
+    * survive. One row per refund event version, before the first-wins
+    * collapse of [[normalizeRefunds]].
     */
-  def normalizeRefunds(events: DataFrame): DataFrame = {
-    val base = events.filter(col("event_type").isin(RefundTypes: _*))
+  def normalizeRefundsAll(events: DataFrame): DataFrame =
+    events.filter(col("event_type").isin(RefundTypes: _*))
       .select(
         coalesce(pick("refund_id", "id", "transaction_id"),
           concat(lit("RF-"), md5(col("event_id")))).as("refund_id"),
@@ -166,8 +179,10 @@ object CommercePulse {
             col("event_time"))).as("refund_date"),
         col("event_id"))
       .filter(col("refund_id").isNotNull)
-    Dedup.firstWins(base, Seq("refund_id"), RefundFirst)
-  }
+
+  /** Refunds normalization: first-wins per refund_id. */
+  def normalizeRefunds(events: DataFrame): DataFrame =
+    Dedup.firstWins(normalizeRefundsAll(events), Seq("refund_id"), RefundFirst)
 
   // ---- Reference-fidelity ("strict") mode --------------------------------
   // The reference transformer recognizes ONLY the restricted event-type
@@ -386,7 +401,7 @@ object CommercePulse {
     }
 
     graft.sources.Sinks.upsertParquet(spark, orders, s"$outDir/fact_orders",
-      Seq("order_id"), Seq(col("created_at").desc_nulls_last, col("event_id").desc))
+      Seq("order_id"), OrderLatest)
     // payments and refunds upsert on their ids too: re-running on the
     // same outDir must not duplicate them
     graft.sources.Sinks.upsertParquet(spark, payments, s"$outDir/fact_payments",

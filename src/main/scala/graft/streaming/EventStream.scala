@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.normalize.Drift
+import graft.operators.Dedup
 import graft.pipeline.CommercePulse
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -204,7 +205,10 @@ object EventStream {
     * keyed by event_id (`<outPath>_events`), (2) derives the set of
     * (order_date, vendor) grains the batch can affect — every grain any
     * touched order has EVER occupied, so an update that moves an order's
-    * date also retracts its old grain, (3) recomputes exactly those grains
+    * date also retracts its old grain; an order is touched when the batch
+    * names it or names a payment or refund that any stored version ties
+    * to it, so a re-send that moves a payment to another order also
+    * retracts it from the old one, (3) recomputes exactly those grains
     * from the FULL store with the same library call batch uses, and
     * (4) grain-replaces them in the fact (retracting grains that
     * recomputed to empty). Replaying a batch is idempotent end-to-end.
@@ -212,11 +216,14 @@ object EventStream {
     * Round 1 upserted per-batch partial aggregates with
     * largest-partial-wins ordering, which permanently undercounted any
     * grain whose events span micro-batches — partials were never merged.
-    * Scale shape: recompute cost is proportional to the touched grains'
-    * event volume, not the store; the store upsert shuffles on event_id
-    * only. A micro-batch with no rows writes nothing, so a stream that
-    * never delivers an event writes no tables at all: neither the store
-    * nor `outPath` exists afterwards.
+    * Scale shape: every batch is still O(history). The store upsert reads
+    * and rewrites the whole store, and the recompute JSON-normalizes the
+    * whole store once per entity (orders, payments, refunds), whatever
+    * the number of touched grains; the filter to those grains comes after
+    * the parse. O(batch) work needs normalized stores keyed by order_id
+    * that the recompute can read by key. A micro-batch with no rows
+    * writes nothing, so a stream that never delivers an event writes no
+    * tables at all: neither the store nor `outPath` exists afterwards.
     */
   def startDailyRefresh(spark: SparkSession, deduped: DataFrame, outPath: String,
                         checkpoint: String): StreamingQuery =
@@ -234,39 +241,59 @@ object EventStream {
       }
       .start()
 
-  /** One non-empty micro-batch of [[startDailyRefresh]]: steps (1)-(4). */
+  /** One non-empty micro-batch of [[startDailyRefresh]]: steps (1)-(4).
+    * Each entity's JSON in the store is parsed once: the per-version
+    * projections are cached and feed both the touched set and the deduped
+    * entities, and the grain set is cached and feeds both the recompute
+    * and the retraction.
+    */
   private def refreshGrains(spark: SparkSession, b: DataFrame,
                             outPath: String): Unit = {
+    import CommercePulse._
     val store = s"${outPath}_events"
     graft.sources.Sinks.upsertParquet(spark, b, store,
       Seq("event_id"), Seq(col("ingested_at").desc_nulls_last))
     val full = spark.read.parquet(store)
-    // order ids this batch references through any entity
-    val touched = CommercePulse.normalizeOrders(b).select("order_id")
-      .unionByName(CommercePulse.normalizePayments(b).select("order_id"))
-      .unionByName(CommercePulse.normalizeRefunds(b).select("order_id"))
-      .filter(col("order_id").isNotNull).distinct()
+    val orderVersions = normalizeOrdersAll(full).cache()
+    val paymentVersions = normalizePaymentsAll(full).cache()
+    val refundVersions = normalizeRefundsAll(full).cache()
+    def versionsOf(stored: DataFrame, batch: DataFrame, key: String) =
+      stored.join(batch.select(key), Seq(key), "left_semi").select("order_id")
+    // order ids any version of any entity in this batch names, plus every
+    // order a stored version of a re-sent payment or refund names: a
+    // re-send that sorts first moves it to its new order, and the old
+    // order's grain must lose it. A superset of the affected orders is
+    // harmless, every extra grain is recomputed from the full store. Only
+    // semi- and anti-joins read these ids and the grains, so neither is
+    // made distinct here: each distinct is one more shuffle job per batch
+    val touched = normalizeOrdersAll(b).select("order_id")
+      .unionByName(versionsOf(paymentVersions, normalizePaymentsAll(b), "payment_id"))
+      .unionByName(versionsOf(refundVersions, normalizeRefundsAll(b), "refund_id"))
     // every grain a touched order has ever occupied (pre-dedup view:
     // includes dates from superseded versions => old grains retract)
-    val grains = CommercePulse.normalizeOrdersAll(full)
+    val grains = orderVersions
       .join(touched, Seq("order_id"), "left_semi")
       .select(col("created_at").cast("date").as("order_date"), col("vendor"))
-      .filter(col("order_date").isNotNull).distinct()
-    val g = grains
-      .withColumnRenamed("order_date", "__gd").withColumnRenamed("vendor", "__gv")
-    val orders = CommercePulse.normalizeOrders(full)
-    // vendor compares null-safely: live events aren't vendor-defaulted
-    // (only readHistorical coalesces to 'unknown'), and a plain ===
-    // would silently exclude null-vendor grains from the recompute —
-    // they could then never be retracted either
-    val ordersInGrains = orders.join(g,
-      orders("created_at").cast("date") === col("__gd")
-        && (orders("vendor") <=> col("__gv")), "left_semi")
-    val daily = CommercePulse.factOrderDaily(ordersInGrains,
-      CommercePulse.normalizePayments(full),
-      CommercePulse.normalizeRefunds(full))
-    graft.sources.Sinks.replaceKeysParquet(spark, daily, outPath,
-      Seq("order_date", "vendor"), deleteKeys = Some(grains))
+      .filter(col("order_date").isNotNull)
+      .cache()
+    try {
+      val g = grains
+        .withColumnRenamed("order_date", "__gd").withColumnRenamed("vendor", "__gv")
+      val orders = Dedup.latestWins(orderVersions, Seq("order_id"), OrderLatest)
+      // vendor compares null-safely: live events aren't vendor-defaulted
+      // (only readHistorical coalesces to 'unknown'), and a plain ===
+      // would silently exclude null-vendor grains from the recompute —
+      // they could then never be retracted either
+      val ordersInGrains = orders.join(g,
+        orders("created_at").cast("date") === col("__gd")
+          && (orders("vendor") <=> col("__gv")), "left_semi")
+      val daily = factOrderDaily(ordersInGrains,
+        Dedup.firstWins(paymentVersions, Seq("payment_id"), PaymentFirst),
+        Dedup.firstWins(refundVersions, Seq("refund_id"), RefundFirst))
+      graft.sources.Sinks.replaceKeysParquet(spark, daily, outPath,
+        Seq("order_date", "vendor"), deleteKeys = Some(grains))
+    } finally
+      Seq(grains, orderVersions, paymentVersions, refundVersions).foreach(_.unpersist())
   }
 
   /** Per-order lifecycle state for `orderLifecycle`. */
@@ -701,8 +728,7 @@ object EventStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val orders = CommercePulse.normalizeOrders(batch)
         graft.sources.Sinks.upsertParquet(spark, orders, outPath,
-          Seq("order_id"),
-          Seq(col("created_at").desc_nulls_last, col("event_id").desc))
+          Seq("order_id"), CommercePulse.OrderLatest)
       }
       .start()
 }

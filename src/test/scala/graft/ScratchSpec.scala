@@ -22,12 +22,10 @@ class ScratchSpec extends SparkSuite {
       val s2 = spark.newSession() // no spark.graft.scratchDir set
       assert(Scratch.root(s2).contains(new java.io.File(cp).getName))
     } finally {
-      // SparkContext has no unset: restore the previous dir, or — when
-      // none was set — point at the JVM temp dir so every later suite
-      // sharing this context still resolves scratch under temp, matching
-      // the no-checkpoint fallback this test would otherwise clobber
-      spark.sparkContext.setCheckpointDir(
-        prev.getOrElse(System.getProperty("java.io.tmpdir")))
+      // restore the previous state exactly, so every later suite sharing
+      // this context resolves scratch as before: any `setCheckpointDir`
+      // call would create a UUID-named subdirectory that nothing deletes
+      org.apache.spark.SparkInternals.restoreCheckpointDir(spark.sparkContext, prev)
     }
   }
 
