@@ -384,10 +384,11 @@ object CommercePulse {
     val refunds = normalizeRefunds(events).cache()
     // daily is consumed up to three times (warehouse load, parquet sink,
     // final count) and its 3-shuffle join+aggregate is the most expensive
-    // plan of the run — cache it too, released with the rest. The dims
-    // are built once for the same reason.
+    // plan of the run — cache it too, released with the rest. dim_customer
+    // (an aggregate over orders) feeds the warehouse load and its sink, so
+    // it is cached as well; dim_date and dim_product come from constants.
     val daily = factOrderDaily(orders, payments, refunds).cache()
-    val custDim = dimCustomer(orders)
+    val custDim = dimCustomer(orders).cache()
     val dateDim = dimDate(spark)
     val prodDim = dimProduct(spark)
     val report = qualityReport(orders, payments, refunds)
@@ -421,7 +422,7 @@ object CommercePulse {
       "refunds" -> refunds.count(),
       "daily" -> daily.count())
     // all sinks and counts have materialized — release the run's caches
-    Seq(events, orders, payments, refunds, daily)
+    Seq(events, orders, payments, refunds, daily, custDim)
       .foreach(_.unpersist(blocking = false))
     counts
   }
