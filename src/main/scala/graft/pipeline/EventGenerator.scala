@@ -244,13 +244,10 @@ object EventGenerator {
     }
   }
 
-  def generate(cfg: Config): Seq[GenEvent] = events(cfg).toVector
-
-  /** The corpus, one envelope at a time. Each event draws from `r` in a
-    * fixed order, and a duplicate reuses its original's envelope up to
-    * `ingested_at`.
+  /** The corpus. Each event draws from `r` in a fixed order, and a
+    * duplicate reuses its original's envelope up to `ingested_at`.
     */
-  private def events(cfg: Config): Iterator[GenEvent] = {
+  def generate(cfg: Config): Seq[GenEvent] = {
     val r = new Random(cfg.seed)
     val dayStart = cfg.day.atStartOfDay()
     val dayTag = cfg.day.format(FmtDayTag)
@@ -261,7 +258,8 @@ object EventGenerator {
     var created = 0
     val sb = new StringBuilder(1024)
 
-    Iterator.range(0, cfg.events).flatMap { _ =>
+    val out = Vector.newBuilder[GenEvent]
+    (1 to cfg.events).foreach { _ =>
       val vendor = Vendors(r.nextInt(Vendors.length))
       val et = eventType(r)
       val orderId =
@@ -303,17 +301,19 @@ object EventGenerator {
       }
       val ev = GenEvent(line(iso(ingestedAt)), eventId, et, vendor, orderId, paymentId,
         isDup = false)
+      out += ev
       if (r.nextDouble() < cfg.dupRate) {
         val dupIngested =
           if (r.nextDouble() < 0.5) iso(ingestedAt.plusMinutes((1 + r.nextInt(180)).toLong))
           else iso(ingestedAt)
-        Iterator(ev, ev.copy(line = line(dupIngested), isDup = true))
-      } else Iterator.single(ev)
+        out += ev.copy(line = line(dupIngested), isDup = true)
+      }
     }
+    out.result()
   }
 
   /** Write a generated corpus as a dated JSONL directory (the reference's
-    * on-disk layout), one line at a time as it is generated.
+    * on-disk layout).
     */
   def writeJsonl(cfg: Config, outRoot: String): String = {
     val dir = java.nio.file.Paths.get(outRoot, cfg.day.toString)
@@ -322,7 +322,7 @@ object EventGenerator {
     val out = java.nio.file.Files.newBufferedWriter(path, UTF_8)
     try {
       var sep = false
-      events(cfg).foreach { e =>
+      generate(cfg).foreach { e =>
         if (sep) out.write('\n') else sep = true
         out.write(e.line)
       }

@@ -176,10 +176,7 @@ class CommercePulseSpec extends SparkSuite {
     }
     info(s"jobs per runAll: ${jobs.get}")
     // the first call into an empty outDir, with the catalog load; the
-    // count is the same at 1 and 4 local cores. Caching dim_customer
-    // leaves it unchanged: adaptive execution fills a cache in a job of
-    // its own (the load runs 3 jobs, not 2), and the sink then reads the
-    // cache in 1 job, not 2
+    // count is the same at 1 and 4 local cores
     val budget = 57
     assert(jobs.get <= budget, s"runAll ran ${jobs.get} jobs, budget $budget")
   }

@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """Parent/change A/B pairs of one perfbench workload.
 
-Runs `python3 perfbench/run.py` alternately in two checkouts of the
-repository, one pair per seed (seeds FIRST .. FIRST+PAIRS-1; even pairs
+Runs `python3 perfbench/run.py` for the parent's BENCHMARK.json
+`run_seconds` alternately in two checkouts of the repository, one pair
+per seed (seeds FIRST .. FIRST+PAIRS-1; even pairs
 run the parent first, odd pairs the change first), and for every
 end-to-end metric in the parent's BENCHMARK.json prints:
 
@@ -32,8 +33,10 @@ import subprocess
 import sys
 import time
 
+RUN_TIMEOUT_S = 900  # one run; an elt_rebuild run takes about a minute
 
-def run_once(checkout, workload, seed, seconds, timeout):
+
+def run_once(checkout, workload, seed, seconds):
     """One benchmark run; returns its result line (a dict, with the detail
     line under `detail`), or a dict with `error` when the run printed
     none."""
@@ -42,9 +45,9 @@ def run_once(checkout, workload, seed, seconds, timeout):
     t0 = time.time()
     try:
         p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True,
-                           timeout=timeout)
+                           timeout=RUN_TIMEOUT_S)
     except subprocess.TimeoutExpired:
-        return {"error": f"timed out after {timeout} s"}
+        return {"error": f"timed out after {RUN_TIMEOUT_S} s"}
     lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
     try:
         res = json.loads(lines[-1])
@@ -103,15 +106,11 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--seed", type=int, required=True, help="seed of the first pair")
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="run length (default: run_seconds of BENCHMARK.json)")
-    ap.add_argument("--timeout", type=float, default=900, help="per run, in seconds")
     ap.add_argument("--out", help="append every run's result line here (JSONL)")
     args = ap.parse_args()
 
     with open(os.path.join(args.parent, "BENCHMARK.json")) as fh:
         spec = json.load(fh)
-    seconds = args.seconds if args.seconds is not None else spec["run_seconds"]
     metrics = spec["end_to_end"]
     sides = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
 
@@ -121,7 +120,7 @@ def main():
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         pair = {}
         for side in order:
-            res = run_once(sides[side], args.workload, seed, seconds, args.timeout)
+            res = run_once(sides[side], args.workload, seed, spec["run_seconds"])
             pair[side] = res
             if args.out:
                 with open(args.out, "a") as fh:
