@@ -124,12 +124,8 @@ object MediaStore {
     */
   def rotate(s: SparkSession, storeDir: String, newHashes: DataFrame,
              generation: String,
-             retireHorizonMs: Option[Long] = None): Unit = {
-    val snap = KeyedStore.flatSnapshot(s, storeDir, PartCols)
-    val live = serve(s, storeDir).select("media_id").distinct()
-    KeyedStore.replaceAll(s, storeDir, PartCols,
-      Media.band64(newHashes.join(live, Seq("media_id"), "left_semi")),
-      "media_id", retireHorizonMs = retireHorizonMs,
-      sinceSnapshot = Some(snap), newGeneration = Some(generation))
-  }
+             retireHorizonMs: Option[Long] = None): Unit =
+    KeyedStore.replaceAll(s, storeDir, PartCols, Schema, "media_id",
+        generation, retireHorizonMs = retireHorizonMs)(live =>
+      Media.band64(newHashes.join(live, Seq("media_id"), "left_semi")))
 }

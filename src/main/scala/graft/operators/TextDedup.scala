@@ -198,7 +198,8 @@ object TextDedup {
     * plan is a pure append — the common crawl-ingest case where ids are
     * fresh, and the shape that lets a 100 TB index be maintained as
     * partition appends plus an occasional compaction
-    * (`Sinks.compactParquet`) rather than rewrites.
+    * (`KeyedStore.compact`, through `DocStream.compactBandStore`) rather
+    * than rewrites.
     */
   def mergeBandIndex(corpusIndex: DataFrame, batch: DataFrame,
                      shingleN: Int, bands: Int, rowsPerBand: Int,

@@ -1400,7 +1400,8 @@ object SimilarityQueries {
     * re-ingested vec_ids (batch id set broadcasts — batches are small at
     * any corpus scale); `false` is the pure-append crawl-ingest shape:
     * partition appends to the cid layout plus an occasional
-    * `Sinks.compactParquet`, never a corpus rewrite. Because codes are a
+    * `KeyedStore.compact` (through `AnnStream.compactStore`), never a
+    * corpus rewrite. Because codes are a
     * pure per-vector function of the frozen quantizers, the merged table
     * is row-identical to encoding (corpus ∖ replaced) ∪ batch in one
     * pass — spec-asserted (AnnMaintenanceSpec) and value-certified by
@@ -2019,13 +2020,13 @@ object SimilarityQueries {
     * leaves the previous index recoverable). Tombstones are carried
     * minus retirement: the rotation made every delete physical, but
     * replays of PRE-rotation batches still need guarding until the
-    * horizon passes. Operational contract (documented, spec-enforced
-    * by convention not code): rotation changes the pure per-key
-    * encode function, so the ingest stream's checkpoint must be reset
-    * across a rotation — a pre-rotation batch replayed afterwards
-    * would re-land rows encoded with the RETIRED quantizers, which the
-    * latest-batch-wins reconcile would faithfully serve. Returns the
-    * fresh (coarse centroids, residual codebooks) for the probe side.
+    * horizon passes. Operational contract: rotation changes the pure
+    * per-key encode function, so the ingest stream's checkpoint must be
+    * reset across a rotation — a pre-rotation batch replayed afterwards
+    * would re-land rows encoded with the RETIRED quantizers; the
+    * generation stamp makes serve fail on it instead of serving it.
+    * Returns the fresh (coarse centroids, residual codebooks) for the
+    * probe side.
     */
   private[graft] def rotateIvfpqIndex(s: SparkSession, storeDir: String,
                                       d: String,
@@ -2034,23 +2035,20 @@ object SimilarityQueries {
                                       retireHorizonMs: Option[Long] = None,
                                       nowMs: Long = System.currentTimeMillis())
       : (DataFrame, DataFrame) = {
-    import graft.sources.KeyedStore
-    // snapshot BEFORE serving the live view: ingest landing anywhere in
-    // the serve → retrain → swap window must fail the swap loudly
-    // (those rows would be stale-quantizer data in the rotated store)
-    val snap = KeyedStore.flatSnapshot(s, storeDir, Seq("cid"))
-    val live = KeyedStore.serve(s, storeDir, Seq("cid"), schema, "vec_id")
-      .select("vec_id").distinct()
-    val corpus = Tables.embeddings(s, d).join(live, Seq("vec_id"), "left_semi")
-    val (coarse, rcent, codes) = ivfpqBuild(s, corpus, tag)
+    var quantizers: (DataFrame, DataFrame) = null
     // the staging tag IS the generation identity: the rotated store is
     // stamped with it, so a pre-rotation batch replayed afterwards (old
     // stamp or none) fails serve/compact loudly instead of re-landing
     // stale-quantizer rows — the checkpoint-reset contract in code
-    KeyedStore.replaceAll(s, storeDir, Seq("cid"), codes, "vec_id",
-      retireHorizonMs = retireHorizonMs, nowMs = nowMs,
-      sinceSnapshot = Some(snap), newGeneration = Some(tag))
-    (coarse, rcent)
+    graft.sources.KeyedStore.replaceAll(s, storeDir, Seq("cid"), schema,
+        "vec_id", tag, retireHorizonMs = retireHorizonMs, nowMs = nowMs) {
+      live =>
+        val (coarse, rcent, codes) = ivfpqBuild(s,
+          Tables.embeddings(s, d).join(live, Seq("vec_id"), "left_semi"), tag)
+        quantizers = (coarse, rcent)
+        codes
+    }
+    quantizers
   }
 
   /** Serve queries through the store AFTER a quantizer rotation: base

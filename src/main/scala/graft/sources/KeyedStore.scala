@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, input_file_name, lit, max, regexp_extract, when}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Lifecycle of an append-maintained keyed index store — the shape every
@@ -9,9 +10,13 @@ import org.apache.spark.sql.types.StructType
   * one flat `batch_<id>/` per ingested micro-batch, periodically folded
   * into ONE Hive-partitioned layout by [[compact]], with durable
   * right-to-be-forgotten tombstones. Shared by the IVF-PQ code store
-  * (`AnnStream`, key = vec_id, partitioned by cid) and the MinHash band
-  * index store (`DocStream`, key = doc_id, partitioned by band) — one
-  * lifecycle, two index families.
+  * (`AnnStream`, key = vec_id, partitioned by cid), the MinHash band
+  * index store (`DocStream`, key = doc_id, partitioned by band) and the
+  * fingerprint store (`MediaStore`/`MediaStream`, key = media_id,
+  * partitioned by band) — one lifecycle, three index families. The
+  * clients supply only their schema and their pure index function: the
+  * stream ingest ([[ingestStream]]), the compaction ([[compact]]) and
+  * the rotation ([[replaceAll]]) are written once, here.
   *
   * Invariants the entry points maintain together:
   *  - index rows must be a PURE per-key function of frozen parameters
@@ -76,6 +81,7 @@ object KeyedStore {
   private val BatchGenFile = "_gen"
   private val BatchCkptFile = "_ckpt"
   private val CommitMarker = "_SUCCESS"
+  private val CkptIdentityFile = "_graft_identity"
 
   /** Conf: byte bound on the flat half above which [[serve]] drops its
     * compacted-vs-recent broadcast hint and lets the planner choose the
@@ -208,6 +214,93 @@ object KeyedStore {
           "its uncommitted offsets will replay it")
   }
 
+  /** The identity a landed batch's `_ckpt` stamp records. For a stream
+    * WITH a checkpoint the identity must follow the checkpoint's
+    * CONTENT, not its path: the common "fresh checkpoint" in practice
+    * is wiping and reusing the same directory, where batch ids restart
+    * at 0 — a path-derived identity would stay unchanged and serve's
+    * loud-loss gate would silently swallow the restarted batches, the
+    * exact loss mode the gate exists to catch. So the identity is a
+    * UUID marker (`_graft_identity`) written into the checkpoint
+    * directory on first use: restarts of the SAME checkpoint read the
+    * same marker back, and a wiped-and-recreated directory mints a new
+    * one (the wipe deletes the marker along with the offsets). Spark
+    * ignores foreign files at the checkpoint root, so the marker rides
+    * in the one location whose lifetime IS the batch sequence's.
+    * Ephemeral-checkpoint streams never resume, so every definition is
+    * genuinely a new sequence and gets a fresh token.
+    */
+  private[graft] def ckptIdentity(s: SparkSession,
+                                  checkpointDir: Option[String]): String =
+    checkpointDir match {
+      case None =>
+        "ephemeral_" + java.util.UUID.randomUUID().toString.take(12)
+      case Some(dir) =>
+        readMarker(s, dir, CkptIdentityFile).getOrElse {
+          val id = "ckpt_" + java.util.UUID.randomUUID().toString.take(12)
+          val (fs, p) = hadoopFs(s, dir)
+          // no overwrite: lose the race loudly
+          val out = fs.create(
+            new org.apache.hadoop.fs.Path(p, CkptIdentityFile), false)
+          try out.write(id.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          finally out.close()
+          id
+        }
+    }
+
+  /** The one stream ingest of a maintained store: parquet files of
+    * `inputSchema` rows arriving under `inputDir`, each micro-batch
+    * indexed by the client's pure per-key function and landed as one
+    * `batch_<id>` through [[landBatch]] (atomic data + `_gen` + `_ckpt`
+    * commit, replay-idempotent; exactly-once with `checkpointDir`).
+    *
+    * `gen` is the generation the index function encodes under: None for
+    * a bootstrap stream (the store must be UNSTAMPED — a rotated store's
+    * rows live under other parameters), the rotation's generation for a
+    * resume stream (the store must carry exactly it). The check runs at
+    * DEFINITION, before any write: failing before a batch lands (or a
+    * bootstrap rewrites `base/` with stale rows) beats failing at the
+    * first serve. `setup` runs only after the check passed — a bootstrap
+    * client writes `base/` there — and returns the per-batch index
+    * function. Use a FRESH checkpoint across a rotation: the old
+    * sequence's offsets describe batches the rotation already folded in.
+    */
+  private[graft] def ingestStream(s: SparkSession, storeDir: String,
+                                  gen: Option[String], inputDir: String,
+                                  inputSchema: String,
+                                  maxFilesPerTrigger: Option[Int],
+                                  checkpointDir: Option[String])
+                                 (setup: => DataFrame => DataFrame)
+      : StreamingQuery = {
+    val storeGen = generation(s, storeDir)
+    if (storeGen != gen)
+      throw new IllegalStateException(
+        s"KeyedStore ingest: store $storeDir is at generation " +
+          s"'${storeGen.getOrElse("<unstamped>")}' but this stream would " +
+          s"land batches under '${gen.getOrElse("<unstamped>")}'. A " +
+          "rotated store takes ingest only from its resume stream, under " +
+          "the store's current generation and with a fresh checkpoint.")
+    val ckpt = ckptIdentity(s, checkpointDir)
+    val index = setup
+    // input files usually arrive as per-batch DIRECTORIES (a Spark
+    // writer's output); the file source needs the recursive flag to see
+    // their part files (hidden _SUCCESS markers stay filtered)
+    val reader = s.readStream.schema(inputSchema)
+      .option("recursiveFileLookup", "true")
+    val input = maxFilesPerTrigger
+      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
+      .parquet(inputDir)
+    val writer = input.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        landBatch(s, storeDir, batchId, gen, ckpt) { dst =>
+          index(batch).write.mode("overwrite").parquet(dst)
+        }
+        ()
+      }
+    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d))
+      .start()
+  }
+
   /** `batch_<id>` dir-name rank — the same ordering [[serve]]'s
     * newest-wins reconcile derives from file paths (`base/` and any
     * non-`batch_<n>` name rank -1, below every batch).
@@ -300,6 +393,39 @@ object KeyedStore {
     fresh
   }
 
+  /** The two layout halves of the store tree, read apart: the
+    * `col=value/` dirs of prior [[compact]]s (partition values live in
+    * the DIRECTORY NAMES; `partitionBy` stripped them from the files)
+    * and the named flat dirs (`base/`, `batch_<id>/` — values live IN
+    * the data files). One `recursiveFileLookup` read over the mixed tree
+    * is wrong twice: the flag disables partition inference, so
+    * directory-encoded values vanish, and Spark then either throws
+    * (column missing) or fills nulls depending on which footer it
+    * samples. Each half is read under the caller's explicit `schema`
+    * (partition-column types must never be re-inferred — the
+    * `Scratch.stagedFramePartitioned` contract); [[serve]] reconciles
+    * them.
+    */
+  private def readPartitionedTreeParts(s: SparkSession, storeDir: String,
+                                       partCols: Seq[String],
+                                       schema: StructType,
+                                       flatDirs: Set[String])
+      : (Option[DataFrame], Option[DataFrame]) = {
+    val (fs, p) = hadoopFs(s, storeDir)
+    val hive = fs.listStatus(p).iterator.filter { e =>
+      val n = e.getPath.getName
+      e.isDirectory && partCols.exists(c => n.startsWith(c + "="))
+    }.map(_.getPath.toString).toIndexedSeq
+    val flat = flatDirs.toIndexedSeq.sorted.map(d => s"$storeDir/$d")
+    val cols = schema.fieldNames.map(col).toIndexedSeq
+    (if (hive.isEmpty) None
+     else Some(s.read.schema(schema).option("basePath", storeDir)
+       .parquet(hive: _*).select(cols: _*)),
+     if (flat.isEmpty) None
+     else Some(s.read.schema(schema).option("recursiveFileLookup", "true")
+       .parquet(flat: _*).select(cols: _*)))
+  }
+
   /** The serving view: mixed-tree read (prior compactions + appended
     * batches) under the caller's explicit schema, replay and re-send
     * duplicates reconciled, tombstoned keys filtered. This is the ONE
@@ -338,8 +464,7 @@ object KeyedStore {
             partPrune: Option[DataFrame] = None): DataFrame = {
     val admitted = admittedFlatDirs(s, storeDir, partCols)
     val (hive, flat) =
-      Sinks.readPartitionedTreeParts(s, storeDir, partCols, schema,
-        flatAdmit = admitted)
+      readPartitionedTreeParts(s, storeDir, partCols, schema, admitted)
     def prune(df: DataFrame): DataFrame = partPrune.fold(df)(p =>
       // semi join ignores multiplicity, so the cells frame needs no
       // distinct; the hint is safe — nprobe cells per query, always tiny
@@ -601,62 +726,54 @@ object KeyedStore {
     (before, countDataFiles(s, storeDir))
   }
 
-  /** Snapshot of the store's flat (appended-batch) dir names — take one
-    * BEFORE reading the served view that feeds a re-index, and pass it
-    * to [[replaceAll]] so ingest landing anywhere in the
-    * serve → retrain → swap window is detected, not just during the
-    * final rewrite.
-    */
-  private[graft] def flatSnapshot(s: SparkSession, storeDir: String,
-                                  partCols: Seq[String]): Set[String] =
-    flatDirNames(s, storeDir, partCols)
-
-  /** Full re-index swap — the quantizer-rotation cadence: replace the
-    * store's DATA wholesale with `newData` (already re-encoded against
-    * fresh parameters, tombstoned keys excluded by the caller serving
-    * through [[serve]]), written as one partitioned layout through the
-    * same crash-safe swap as [[compact]]. Tombstones are carried minus
-    * retirement — the rotation made every delete physical, but replays
-    * of pre-rotation batches still need guarding until the horizon
-    * passes. The store stays readable throughout: the old tree is only
-    * renamed away after the new one is fully written.
+  /** Full re-index swap — the rotation cadence of every index family
+    * (quantizers, hash family, fingerprint family): serve the store's
+    * LIVE keys (tombstoned keys excluded), hand them to `reindex` — the
+    * caller's re-index under its fresh parameters — and replace the
+    * store's DATA wholesale with the result, written as one partitioned
+    * layout through the same crash-safe swap as [[compact]]. Tombstones
+    * are carried minus retirement — the rotation made every delete
+    * physical, but replays of pre-rotation batches still need guarding
+    * until the horizon passes. The store stays readable throughout: the
+    * old tree is only renamed away after the new one is fully written.
     *
-    * The swapped store starts a NEW generation: `newGeneration` (or a
-    * timestamp-derived id) lands in the `_generation` marker, so a
-    * pre-rotation batch replayed afterwards — rows encoded under the
-    * retired parameters, stamped with the old generation or not at all
-    * — makes [[serve]]/[[compact]] fail loudly instead of silently
-    * winning the newest-wins reconcile. The compaction `_watermark` is
-    * deliberately NOT carried: the caller resets the ingest checkpoint
-    * across a rotation (that contract is what the generation stamp
-    * enforces), so batch ids restart and an old watermark would
-    * swallow the new sequence's first batches.
+    * A re-index REQUIRES quiesced ingest: the flat dirs are listed
+    * BEFORE the live keys are served, and a batch landing anywhere in
+    * the serve → re-index → swap window fails the swap (its rows were
+    * derived under the OLD parameters — carrying it would serve them
+    * via the newest-wins reconcile, dropping it would silently lose a
+    * committed batch). Stop ingest and re-run the rotation.
+    *
+    * The swapped store starts generation `gen` (the `_generation`
+    * marker), so a pre-rotation batch replayed afterwards — rows encoded
+    * under the retired parameters, stamped with the old generation or
+    * not at all — makes [[serve]]/[[compact]] fail loudly instead of
+    * silently winning the newest-wins reconcile. The compaction
+    * `_watermark` is deliberately NOT carried: the caller resets the
+    * ingest checkpoint across a rotation (that contract is what the
+    * generation stamp enforces), so batch ids restart and an old
+    * watermark would swallow the new sequence's first batches.
     */
   def replaceAll(s: SparkSession, storeDir: String, partCols: Seq[String],
-                 newData: DataFrame, keyCol: String,
+                 schema: StructType, keyCol: String, gen: String,
                  maxRecordsPerFile: Option[Long] = None,
                  retireHorizonMs: Option[Long] = None,
-                 nowMs: Long = System.currentTimeMillis(),
-                 sinceSnapshot: Option[Set[String]] = None,
-                 newGeneration: Option[String] = None): Unit = {
-    val before = sinceSnapshot.getOrElse(flatDirNames(s, storeDir, partCols))
+                 nowMs: Long = System.currentTimeMillis())
+                (reindex: DataFrame => DataFrame): Unit = {
+    val before = flatDirNames(s, storeDir, partCols)
+    val newData = reindex(
+      serve(s, storeDir, partCols, schema, keyCol).select(keyCol).distinct())
     Sinks.writeSwapWith(s, storeDir) { tmp =>
       writePartitioned(newData, tmp, partCols, maxRecordsPerFile)
-      // a re-index REQUIRES quiesced ingest (stronger than compact's
-      // carry-over): a batch landed during the rewrite holds rows
-      // derived under the OLD parameters — carrying it would serve
-      // stale-parameter rows via the newest-wins reconcile, dropping it
-      // would silently lose a committed batch. Fail the swap instead
-      // (writeSwapWith aborts before any rename, old tree intact) and
-      // make the caller stop ingest and re-run the rotation.
+      // checked after the rewrite, the last moment before the swap
+      // (writeSwapWith aborts before any rename, old tree intact)
       val landed = flatDirNames(s, storeDir, partCols) -- before
       if (landed.nonEmpty)
         throw new IllegalStateException(
           s"replaceAll: ingest batches landed during the re-index " +
             s"(${landed.mkString(", ")}) — stop the ingest stream across " +
             "a rotation, then re-run it")
-      writeMarker(s, tmp, GenerationFile,
-        newGeneration.getOrElse(s"gen_$nowMs"))
+      writeMarker(s, tmp, GenerationFile, gen)
       carryTombstones(s, storeDir, tmp, keyCol, retireHorizonMs, nowMs)
     }
   }

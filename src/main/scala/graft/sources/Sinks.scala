@@ -93,12 +93,8 @@ object Sinks {
     */
   private[graft] def readExisting(spark: SparkSession, path: String,
                                   cols: Seq[String]): Option[DataFrame] =
-    try Some(spark.read.parquet(path)
-      .select(cols.map(org.apache.spark.sql.functions.col): _*))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-        if e.getErrorClass == "PATH_NOT_FOUND" => None
-    }
+    readExistingAny(spark, path)
+      .map(_.select(cols.map(org.apache.spark.sql.functions.col): _*))
 
   /** [[readExisting]] without a column contract — for callers that must
     * inspect what columns an existing table HAS before deciding how to
@@ -177,7 +173,9 @@ object Sinks {
     * (safe even though the plan reads the path it replaces; a crash
     * leaves the previous table recoverable). Flat directories only —
     * compact date-partitioned layouts one partition directory at a time,
-    * which is also the only granularity that bounds the rewrite at scale.
+    * which is also the only granularity that bounds the rewrite at scale;
+    * a maintained keyed store (`base/` + `batch_<id>/` + `col=value/`
+    * dirs, tombstones, markers) compacts through `KeyedStore.compact`.
     * Returns (files_before, files_after).
     */
   def compactParquet(spark: SparkSession, path: String,
@@ -192,117 +190,6 @@ object Sinks {
     val target = math.max(1L,
       (df.count() + maxRecordsPerFile - 1) / maxRecordsPerFile).toInt
     writeSwap(df.repartition(target), path)
-    (before, dataFiles())
-  }
-
-  /** Read an append-maintained partitioned store whose tree can MIX two
-    * layouts across compaction cycles: flat appended dirs
-    * (`base/`, `batch_<id>/` — partition values live IN the data files)
-    * and `col=value/` dirs from a previous [[compactPartitioned]] run
-    * (values live in the DIRECTORY NAMES; `partitionBy` stripped them
-    * from the files). A single `recursiveFileLookup` read over such a
-    * tree is wrong twice: the flag disables partition inference, so
-    * directory-encoded values vanish, and Spark then either throws
-    * (column missing) or fills nulls depending on which file's footer it
-    * samples. So the two layouts are listed apart and read separately —
-    * each under the caller's explicit `schema` (the
-    * `Scratch.stagedFramePartitioned` contract: partition-column types
-    * must never be re-inferred) — then unioned by name.
-    */
-  def readPartitionedTree(spark: SparkSession, path: String,
-                          partCols: Seq[String],
-                          schema: org.apache.spark.sql.types.StructType)
-      : DataFrame = {
-    val (hive, flat) =
-      readPartitionedTreeParts(spark, path, partCols, schema)
-    val parts = Seq(hive, flat).flatten
-    require(parts.nonEmpty, s"readPartitionedTree: no data under $path")
-    parts.reduce(_ unionByName _)
-  }
-
-  /** The two layout halves of a mixed store tree, separately:
-    * `(hive-partitioned dirs from a prior compaction, flat appended
-    * dirs)` — for callers that must RECONCILE the halves (a micro-batch
-    * replayed after compaction re-lands rows the compacted half already
-    * holds; the reconcile is an anti-join of big-compacted vs
-    * small-recent, which needs the halves apart — see
-    * `AnnStream.storeCodes`).
-    */
-  private[graft] def readPartitionedTreeParts(
-      spark: SparkSession, path: String, partCols: Seq[String],
-      schema: org.apache.spark.sql.types.StructType,
-      // which flat dirs to read (by name) — KeyedStore.serve narrows to
-      // its admitted set (committed, above the compaction watermark,
-      // generation-stamped); the default reads them all
-      flatAdmit: String => Boolean = _ => true)
-      : (Option[DataFrame], Option[DataFrame]) = {
-    import org.apache.spark.sql.functions.col
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = fs.listStatus(p).filter { e =>
-      val n = e.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    val (hive, flatAll) = entries.partition(e =>
-      e.isDirectory && partCols.exists(c => e.getPath.getName.startsWith(c + "=")))
-    val flat = flatAll.filter(e => flatAdmit(e.getPath.getName))
-    val cols = schema.fieldNames.map(col).toIndexedSeq
-    (if (hive.isEmpty) None
-     else Some(spark.read.schema(schema).option("basePath", path)
-       .parquet(hive.map(_.getPath.toString).toIndexedSeq: _*)
-       .select(cols: _*)),
-     if (flat.isEmpty) None
-     else Some(spark.read.schema(schema).option("recursiveFileLookup", "true")
-       .parquet(flat.map(_.getPath.toString).toIndexedSeq: _*)
-       .select(cols: _*)))
-  }
-
-  /** [[compactParquet]] for a PARTITIONED store: fold a directory tree
-    * of appended batch outputs (the `AnnStream.ivfpqIngestStream` shape —
-    * `base/` plus one flat `batch_<id>/` per micro-batch) back into ONE
-    * Hive-partitioned layout, the scan-prunable form the staged-index
-    * probes rely on. This is the RECURRING compaction cadence every
-    * append-maintained index runs — compact, ingest more batches,
-    * compact again — so the input is read through
-    * [[readPartitionedTree]], which handles the mixed tree a second run
-    * sees (prior run's `col=value/` dirs + fresh flat batch dirs); the
-    * caller supplies the store schema explicitly, the same reason
-    * `Scratch.stagedFramePartitioned` carries one. `transform` (default
-    * identity) edits rows inside the same crash-safe rewrite — pass a
-    * key anti-join to run a right-to-be-forgotten delete and the
-    * compaction as ONE pass over the store. `maxRecordsPerFile` bounds a
-    * hot partition value into ceil(rows/max) files instead of one
-    * unbounded file — scans still prune at partition granularity. Same
-    * two-rename swap as every other sink here. Returns
-    * (dataFilesBefore, dataFilesAfter).
-    */
-  def compactPartitioned(spark: SparkSession, path: String,
-                         partCols: Seq[String],
-                         schema: org.apache.spark.sql.types.StructType,
-                         transform: DataFrame => DataFrame = identity,
-                         maxRecordsPerFile: Option[Long] = None)
-      : (Long, Long) = {
-    import org.apache.spark.sql.functions.col
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(): Long = {
-      var n = 0L
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      }
-      n
-    }
-    val before = dataFiles()
-    // the writer below runs while the old tree still exists, so lineage
-    // reading `path` is safe — the swap happens only after the write
-    val df = transform(readPartitionedTree(spark, path, partCols, schema))
-    writeSwapWith(spark, path) { tmp =>
-      val w = df.repartition(partCols.map(col): _*)
-        .write.mode("overwrite")
-      maxRecordsPerFile.fold(w)(n => w.option("maxRecordsPerFile", n))
-        .partitionBy(partCols: _*).parquet(tmp)
-    }
     (before, dataFiles())
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.queries.SimilarityQueries
+import graft.sources.KeyedStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -24,6 +25,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object AnnStream {
 
+  private val VecSchema = "vec_id BIGINT, embedding ARRAY<FLOAT>"
+
   /** Probe a parquet stream of (vec_id, embedding) query vectors against
     * the PQ index of `indexDir`'s corpus; write per-batch top-k verdicts
     * under `outDir` (one `batch_<id>` subdirectory per micro-batch — read
@@ -43,7 +46,7 @@ object AnnStream {
                     maxFilesPerTrigger: Option[Int] = None,
                     checkpointDir: Option[String] = None): StreamingQuery = {
     val (cent, codes) = SimilarityQueries.pqIndex(s, indexDir)
-    val reader = s.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
+    val reader = s.readStream.schema(VecSchema)
       // query files usually arrive as per-batch DIRECTORIES (a Spark
       // writer's output); the flat file source needs the recursive flag
       // to see their part files (hidden _SUCCESS markers stay filtered)
@@ -75,7 +78,7 @@ object AnnStream {
                        maxFilesPerTrigger: Option[Int] = None,
                        checkpointDir: Option[String] = None): StreamingQuery = {
     val (coarse, rcent, codes) = SimilarityQueries.ivfpqIndex(s, indexDir)
-    val reader = s.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
+    val reader = s.readStream.schema(VecSchema)
       .option("recursiveFileLookup", "true")
     val queries = maxFilesPerTrigger
       .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
@@ -99,95 +102,34 @@ object AnnStream {
     * idempotent partition append. The maintained store is
     * self-contained under `codesOutDir`: `base/` (written once here,
     * overwrite-idempotent) plus one `batch_<id>/` per micro-batch —
-    * read it back with `recursiveFileLookup` and serve probes through
-    * it directly. A replayed micro-batch overwrites its own `batch_<id>`
-    * path (exactly-once with `checkpointDir`, the pqProbeStream
-    * contract). Because codes are a pure per-vector function of the
-    * frozen quantizers, the store is row-identical to a one-pass encode
-    * of base ∪ every ingested batch — AnnStreamSpec asserts equality to
-    * the batch `sim_ivfpq_incr` serving path. Per-batch cost:
-    * O(batch encode) — the corpus is never touched; compact the
-    * accumulated batch dirs on the `Sinks.compactParquet` cadence.
+    * serve probes through [[storeCodes]]. A replayed micro-batch
+    * overwrites its own `batch_<id>` path (exactly-once with
+    * `checkpointDir`, the pqProbeStream contract). Because codes are a
+    * pure per-vector function of the frozen quantizers, the store is
+    * row-identical to a one-pass encode of base ∪ every ingested batch
+    * — AnnStreamSpec asserts equality to the batch `sim_ivfpq_incr`
+    * serving path. Per-batch cost: O(batch encode) — the corpus is never
+    * touched; fold the accumulated batch dirs back into one
+    * cid-partitioned layout with [[compactStore]]
+    * (`KeyedStore.compact`).
+    *
+    * This stream BOOTSTRAPS an unrotated store: it refuses a rotated one
+    * at definition, before `base/` is rewritten — resume those with
+    * [[ivfpqResumeIngestStream]]. Its batches stay generation-unstamped
+    * (the first rotation stamps the store, after which a replay of them
+    * is rejected as '<unstamped>') but carry their checkpoint identity
+    * ([[KeyedStore.ingestStream]]).
     */
   def ivfpqIngestStream(s: SparkSession, vecDir: String, indexDir: String,
                         baseBound: Long, codesOutDir: String,
                         maxFilesPerTrigger: Option[Int] = None,
-                        checkpointDir: Option[String] = None): StreamingQuery = {
-    // this wrapper BOOTSTRAPS a store with base-index quantizers; a
-    // store that has been through a rotation carries a `_generation`
-    // marker and its data is encoded under DIFFERENT quantizers — this
-    // stream would overwrite `base/` with stale rows and land
-    // stale-encoded batches (exactly what the generation stamp exists
-    // to catch), so it refuses at definition instead of at first serve
-    graft.sources.KeyedStore.generation(s, codesOutDir).foreach { g =>
-      throw new IllegalStateException(
-        s"ivfpqIngestStream: store $codesOutDir was rotated (generation " +
-          s"'$g') — resume ingest with ivfpqResumeIngestStream(rotated " +
-          "quantizers, that generation) and a fresh checkpoint")
-    }
-    val (coarse, rcent, baseCodes) =
-      SimilarityQueries.ivfpqIndexOn(s, indexDir, Some(baseBound))
-    baseCodes.write.mode("overwrite").parquet(s"$codesOutDir/base")
-    // batches stay generation-UNSTAMPED here — an unrotated store has no
-    // generation to stamp against; the first rotation stamps the store,
-    // after which a replay of these batches is rejected as
-    // '<unstamped>' (pre-rotation content under retired quantizers).
-    // The checkpoint identity IS stamped (landBatch `_ckpt`), so a
-    // fresh-checkpoint restart on a compacted store fails serve loudly
-    // instead of having its restarted ids swallowed by the watermark.
-    val ckptId = ckptIdentity(s, checkpointDir)
-    val reader = s.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("recursiveFileLookup", "true")
-    val vecs = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(vecDir)
-    val writer = vecs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.KeyedStore.landBatch(s, codesOutDir, batchId,
-          None, ckptId) { dst =>
-          SimilarityQueries.ivfpqEncode(batch, coarse, rcent)
-            .write.mode("overwrite").parquet(dst)
-        }
-        ()
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d))
-      .start()
-  }
-
-  /** The identity a landed batch's `_ckpt` stamp records. For a stream
-    * WITH a checkpoint the identity must follow the checkpoint's
-    * CONTENT, not its path: the common "fresh checkpoint" in practice
-    * is wiping and reusing the same directory, where batch ids restart
-    * at 0 — a path-derived identity would stay unchanged and serve's
-    * loud-loss gate would silently swallow the restarted batches, the
-    * exact loss mode the gate exists to catch. So the identity is a
-    * UUID marker (`_graft_identity`) written into the checkpoint
-    * directory on first use: restarts of the SAME checkpoint read the
-    * same marker back, and a wiped-and-recreated directory mints a new
-    * one (the wipe deletes the marker along with the offsets). Spark
-    * ignores foreign files at the checkpoint root, so the marker rides
-    * in the one location whose lifetime IS the batch sequence's.
-    * Ephemeral-checkpoint streams never resume, so every definition is
-    * genuinely a new sequence and gets a fresh token.
-    */
-  private[streaming] def ckptIdentity(s: SparkSession,
-                                      checkpointDir: Option[String]): String =
-    checkpointDir match {
-      case None =>
-        "ephemeral_" + java.util.UUID.randomUUID().toString.take(12)
-      case Some(dir) =>
-        val p = new org.apache.hadoop.fs.Path(dir, "_graft_identity")
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) {
-          val in = fs.open(p)
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        } else {
-          val id = "ckpt_" + java.util.UUID.randomUUID().toString.take(12)
-          val out = fs.create(p, false) // no overwrite: lose the race loudly
-          try out.write(id.getBytes("UTF-8")) finally out.close()
-          id
-        }
+                        checkpointDir: Option[String] = None): StreamingQuery =
+    KeyedStore.ingestStream(s, codesOutDir, None, vecDir, VecSchema,
+        maxFilesPerTrigger, checkpointDir) {
+      val (coarse, rcent, baseCodes) =
+        SimilarityQueries.ivfpqIndexOn(s, indexDir, Some(baseBound))
+      baseCodes.write.mode("overwrite").parquet(s"$codesOutDir/base")
+      SimilarityQueries.ivfpqEncode(_, coarse, rcent)
     }
 
   /** Resume ingest into a ROTATED store — the post-[[rotateStore]]
@@ -195,12 +137,8 @@ object AnnStream {
     * with the CALLER-SUPPLIED (rotated) quantizers, stamps every batch
     * with their `generation` (the rotation's staging tag), and touches
     * no `base/` (the rotated store's data already IS the re-encoded
-    * corpus — the bootstrap wrapper's base write would plant stale
-    * rows). Fails at DEFINITION time if the store's `_generation`
-    * differs from `generation`: restarting an old stream definition
-    * against a rotated store is exactly the stale-quantizer hazard the
-    * stamp exists to catch, and failing before any batch lands beats
-    * failing at the first serve. Use a FRESH `checkpointDir`: the
+    * corpus). Fails at DEFINITION time if the store's `_generation`
+    * differs from `generation`. Use a FRESH `checkpointDir`: the
     * pre-rotation checkpoint's offsets describe batches the rotation
     * already folded in, and its ids would collide with the new
     * sequence.
@@ -211,37 +149,10 @@ object AnnStream {
                               generation: String,
                               maxFilesPerTrigger: Option[Int] = None,
                               checkpointDir: Option[String] = None)
-      : StreamingQuery = {
-    val storeGen = graft.sources.KeyedStore.generation(s, storeDir)
-    if (!storeGen.contains(generation))
-      throw new IllegalStateException(
-        s"ivfpqResumeIngestStream: store $storeDir is at generation " +
-          s"'${storeGen.getOrElse("<unstamped>")}' but this stream would " +
-          s"encode under '$generation' — redefine the ingest with the " +
-          "store's current quantizers (rotateStore's staging tag) and a " +
-          "fresh checkpoint")
-    val ckptId = ckptIdentity(s, checkpointDir)
-    val reader = s.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("recursiveFileLookup", "true")
-    val vecs = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(vecDir)
-    val writer = vecs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // landBatch makes commit + `_gen` stamp ONE rename: the old
-        // write-then-stamp sequence left a committed-but-unstamped
-        // window where every concurrent serve/compact threw spuriously
-        // (and a crash in it left the store throwing until replay)
-        graft.sources.KeyedStore.landBatch(s, storeDir, batchId,
-          Some(generation), ckptId) { dst =>
-          SimilarityQueries.ivfpqEncode(batch, coarse, rcent)
-            .write.mode("overwrite").parquet(dst)
-        }
-        ()
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d))
-      .start()
-  }
+      : StreamingQuery =
+    KeyedStore.ingestStream(s, storeDir, Some(generation), vecDir,
+        VecSchema, maxFilesPerTrigger, checkpointDir)(
+      SimilarityQueries.ivfpqEncode(_, coarse, rcent))
 
   // ---- maintained-store lifecycle: serve / forget / compact ----
   // All three delegate to the shared graft.sources.KeyedStore lifecycle
@@ -253,11 +164,11 @@ object AnnStream {
   /** The serving view of an [[ivfpqIngestStream]] store — the ONE
     * read-side reconcile every probe goes through: mixed-tree read,
     * post-compaction replay duplicates reconciled, forgotten vectors
-    * filtered ([[graft.sources.KeyedStore.serve]]).
+    * filtered ([[KeyedStore.serve]]).
     */
   def storeCodes(s: SparkSession, storeDir: String,
                  schema: org.apache.spark.sql.types.StructType): DataFrame =
-    graft.sources.KeyedStore.serve(s, storeDir, Seq("cid"), schema, "vec_id")
+    KeyedStore.serve(s, storeDir, Seq("cid"), schema, "vec_id")
 
   /** Right-to-be-forgotten over the maintained store: durable tombstone
     * upsert — [[storeCodes]] filters the ids on every read (including
@@ -266,7 +177,7 @@ object AnnStream {
     */
   def forgetVectors(s: SparkSession, storeDir: String,
                     ids: DataFrame): Unit =
-    graft.sources.KeyedStore.forget(s, storeDir, "vec_id", ids)
+    KeyedStore.forget(s, storeDir, "vec_id", ids)
 
   /** Compaction cadence: fold the whole tree through the [[storeCodes]]
     * reconcile into ONE cid-partitioned layout (crash-safe swap) —
@@ -274,7 +185,7 @@ object AnnStream {
     * again. `maxRecordsPerFile` bounds hot cells into multiple files;
     * `retireHorizonMs` (the ingest stream's checkpoint retention)
     * retires tombstones no replay can need — see
-    * [[graft.sources.KeyedStore.compact]]. Returns
+    * [[KeyedStore.compact]]. Returns
     * (dataFilesBefore, dataFilesAfter).
     */
   def compactStore(s: SparkSession, storeDir: String,
@@ -282,8 +193,8 @@ object AnnStream {
                    maxRecordsPerFile: Option[Long] = None,
                    retireHorizonMs: Option[Long] = None)
       : (Long, Long) =
-    graft.sources.KeyedStore.compact(s, storeDir, Seq("cid"), schema,
-      "vec_id", maxRecordsPerFile, retireHorizonMs)
+    KeyedStore.compact(s, storeDir, Seq("cid"), schema, "vec_id",
+      maxRecordsPerFile, retireHorizonMs)
 
   /** Quantizer rotation over the maintained store — the scheduled
     * re-index: retrain both codebook levels on the served view minus

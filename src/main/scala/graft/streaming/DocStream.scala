@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.TextDedup
+import graft.sources.KeyedStore
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -114,11 +115,17 @@ object DocStream {
 
   // ---- persisted band-index store: ingest / serve / forget / compact ----
   // The dedup index family gets the SAME maintained-store lifecycle as
-  // the ANN code store (graft.sources.KeyedStore; AnnStream is the other
-  // client): band-index rows are a pure per-document function of the
-  // fixed hash family, so streamed appends ≡ one-pass rebuild, replayed
-  // batches re-land identical rows, and right-to-forget has TRUE rebuild
-  // parity.
+  // the ANN code store (graft.sources.KeyedStore; AnnStream and
+  // MediaStore are the other clients): band-index rows are a pure
+  // per-document function of the fixed hash family, so streamed appends
+  // ≡ one-pass rebuild, replayed batches re-land identical rows, and
+  // right-to-forget has TRUE rebuild parity.
+
+  private val DocSchema = "doc_id BIGINT, text STRING"
+
+  /** The generation identity of a banding family: its parameters. */
+  private def family(shingleN: Int, bands: Int, rowsPerBand: Int): String =
+    s"band_${shingleN}_${bands}x$rowsPerBand"
 
   /** Streaming INDEX MAINTENANCE for the persisted MinHash band index —
     * the dedup sibling of `AnnStream.ivfpqIngestStream`: the historical
@@ -129,7 +136,9 @@ object DocStream {
     * `batch_<id>` append. A replayed micro-batch overwrites its own
     * `batch_<id>` path (exactly-once with `checkpointDir`). Serve
     * probes through [[storeBandIndex]]; run [[compactBandStore]] on the
-    * maintenance cadence.
+    * maintenance cadence. Bootstrap-only, the
+    * `AnnStream.ivfpqIngestStream` contract: a rotated store refuses at
+    * definition — resume it with [[bandIndexResumeIngestStream]].
     */
   def bandIndexIngestStream(s: org.apache.spark.sql.SparkSession,
                             docDir: String, corpusDir: String,
@@ -137,42 +146,15 @@ object DocStream {
                             shingleN: Int, bands: Int, rowsPerBand: Int,
                             maxFilesPerTrigger: Option[Int] = None,
                             checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // bootstrap-only, the AnnStream.ivfpqIngestStream contract: a
-    // rotated store's rows live under a NEW hash family — this stream
-    // would overwrite `base/` and land old-family batches, so it
-    // refuses at definition; resume with [[bandIndexResumeIngestStream]]
-    graft.sources.KeyedStore.generation(s, outDir).foreach { g =>
-      throw new IllegalStateException(
-        s"bandIndexIngestStream: store $outDir was rotated (generation " +
-          s"'$g') — resume ingest with bandIndexResumeIngestStream under " +
-          "the rotated family and a fresh checkpoint")
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    KeyedStore.ingestStream(s, outDir, None, docDir, DocSchema,
+        maxFilesPerTrigger, checkpointDir) {
+      val base = graft.Tables.documents(s, corpusDir)
+        .filter(col("doc_id") < baseBound).select("doc_id", "text")
+      TextDedup.minhashBandIndex(base, shingleN, bands, rowsPerBand)
+        .write.mode("overwrite").parquet(s"$outDir/base")
+      TextDedup.minhashBandIndex(_, shingleN, bands, rowsPerBand)
     }
-    val base = graft.Tables.documents(s, corpusDir)
-      .filter(col("doc_id") < baseBound).select("doc_id", "text")
-    TextDedup.minhashBandIndex(base, shingleN, bands, rowsPerBand)
-      .write.mode("overwrite").parquet(s"$outDir/base")
-    // batches stay generation-unstamped pre-rotation, but carry their
-    // checkpoint identity (`_ckpt`) so a fresh-checkpoint restart on a
-    // compacted store fails serve loudly instead of being swallowed
-    val ckptId = AnnStream.ckptIdentity(s, checkpointDir)
-    val reader = s.readStream.schema("doc_id BIGINT, text STRING")
-      .option("recursiveFileLookup", "true")
-    val docs = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(docDir)
-    val writer = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.KeyedStore.landBatch(s, outDir, batchId,
-          None, ckptId) { dst =>
-          TextDedup.minhashBandIndex(batch, shingleN, bands, rowsPerBand)
-            .write.mode("overwrite").parquet(dst)
-        }
-        ()
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d))
-      .start()
-  }
 
   /** Resume ingest into a ROTATED band store — the post-
     * [[rotateBandStore]] continuation of [[bandIndexIngestStream]]:
@@ -190,35 +172,11 @@ object DocStream {
                                   rowsPerBand: Int,
                                   maxFilesPerTrigger: Option[Int] = None,
                                   checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val gen = s"band_${shingleN}_${bands}x$rowsPerBand"
-    val storeGen = graft.sources.KeyedStore.generation(s, storeDir)
-    if (!storeGen.contains(gen))
-      throw new IllegalStateException(
-        s"bandIndexResumeIngestStream: store $storeDir is at generation " +
-          s"'${storeGen.getOrElse("<unstamped>")}' but this stream would " +
-          s"sign under '$gen' — resume with the store's rotated family " +
-          "and a fresh checkpoint")
-    val ckptId = AnnStream.ckptIdentity(s, checkpointDir)
-    val reader = s.readStream.schema("doc_id BIGINT, text STRING")
-      .option("recursiveFileLookup", "true")
-    val docs = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(docDir)
-    val writer = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // atomic commit+stamp (KeyedStore.landBatch): no window where a
-        // committed-but-unstamped dir makes concurrent serves throw
-        graft.sources.KeyedStore.landBatch(s, storeDir, batchId,
-          Some(gen), ckptId) { dst =>
-          TextDedup.minhashBandIndex(batch, shingleN, bands, rowsPerBand)
-            .write.mode("overwrite").parquet(dst)
-        }
-        ()
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d))
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    KeyedStore.ingestStream(s, storeDir,
+        Some(family(shingleN, bands, rowsPerBand)), docDir, DocSchema,
+        maxFilesPerTrigger, checkpointDir)(
+      TextDedup.minhashBandIndex(_, shingleN, bands, rowsPerBand))
 
   /** Serving view of the maintained band-index store (mixed-tree read,
     * replay reconcile, tombstones filtered) — feed it to
@@ -227,8 +185,7 @@ object DocStream {
   def storeBandIndex(s: org.apache.spark.sql.SparkSession, storeDir: String,
                      schema: org.apache.spark.sql.types.StructType)
       : DataFrame =
-    graft.sources.KeyedStore.serve(s, storeDir, Seq("band"), schema,
-      "doc_id")
+    KeyedStore.serve(s, storeDir, Seq("band"), schema, "doc_id")
 
   /** Right-to-be-forgotten over the maintained band index: durable
     * tombstones now, physical at the next [[compactBandStore]]. A
@@ -238,7 +195,7 @@ object DocStream {
     */
   def forgetDocs(s: org.apache.spark.sql.SparkSession, storeDir: String,
                  ids: DataFrame): Unit =
-    graft.sources.KeyedStore.forget(s, storeDir, "doc_id", ids)
+    KeyedStore.forget(s, storeDir, "doc_id", ids)
 
   /** Compaction cadence: fold base + batches + tombstones into ONE
     * band-partitioned layout (one file per band — the bucket-join's
@@ -253,8 +210,8 @@ object DocStream {
                        maxRecordsPerFile: Option[Long] = None,
                        retireHorizonMs: Option[Long] = None)
       : (Long, Long) =
-    graft.sources.KeyedStore.compact(s, storeDir, Seq("band"), schema,
-      "doc_id", maxRecordsPerFile, retireHorizonMs)
+    KeyedStore.compact(s, storeDir, Seq("band"), schema, "doc_id",
+      maxRecordsPerFile, retireHorizonMs)
 
   /** Hash-family ROTATION — the band-index twin of the ANN quantizer
     * rotation (`SimilarityQueries.rotateIvfpqIndex`): re-index the
@@ -275,20 +232,15 @@ object DocStream {
                       schema: org.apache.spark.sql.types.StructType,
                       shingleN: Int, bands: Int, rowsPerBand: Int,
                       retireHorizonMs: Option[Long] = None,
-                      nowMs: Long = System.currentTimeMillis()): Unit = {
-    val snap = graft.sources.KeyedStore.flatSnapshot(s, storeDir, Seq("band"))
-    val live = graft.sources.KeyedStore
-      .serve(s, storeDir, Seq("band"), schema, "doc_id")
-      .select("doc_id").distinct()
-    val docs = graft.Tables.documents(s, corpusDir)
-      .join(live, Seq("doc_id"), "left_semi").select("doc_id", "text")
-    graft.sources.KeyedStore.replaceAll(s, storeDir, Seq("band"),
-      TextDedup.minhashBandIndex(docs, shingleN, bands, rowsPerBand),
-      "doc_id", retireHorizonMs = retireHorizonMs, nowMs = nowMs,
-      sinceSnapshot = Some(snap),
-      // the banding parameters ARE the generation identity: a
-      // pre-rotation batch replayed after the swap (hashed under the
-      // old family, stamped with it or not at all) fails serve loudly
-      newGeneration = Some(s"band_${shingleN}_${bands}x$rowsPerBand"))
-  }
+                      nowMs: Long = System.currentTimeMillis()): Unit =
+    // the banding parameters ARE the generation identity: a
+    // pre-rotation batch replayed after the swap (hashed under the old
+    // family, stamped with it or not at all) fails serve loudly
+    KeyedStore.replaceAll(s, storeDir, Seq("band"), schema, "doc_id",
+        family(shingleN, bands, rowsPerBand),
+        retireHorizonMs = retireHorizonMs, nowMs = nowMs) { live =>
+      val docs = graft.Tables.documents(s, corpusDir)
+        .join(live, Seq("doc_id"), "left_semi").select("doc_id", "text")
+      TextDedup.minhashBandIndex(docs, shingleN, bands, rowsPerBand)
+    }
 }

@@ -717,7 +717,10 @@ object EventStream {
   }
 
   /** foreachBatch upsert of normalized current-order state — streaming
-    * writes through the same idempotent sink as batch.
+    * writes through the same idempotent sink as batch. A micro-batch
+    * with no order version (the watermark-only batch that closes an
+    * AvailableNow run, a payments-only batch) writes nothing, so a
+    * stream that never delivers an order creates no table.
     */
   def startOrderUpsert(spark: SparkSession, deduped: DataFrame, outPath: String,
                        checkpoint: String): StreamingQuery =
@@ -726,9 +729,11 @@ object EventStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val orders = CommercePulse.normalizeOrders(batch)
-        graft.sources.Sinks.upsertParquet(spark, orders, outPath,
-          Seq("order_id"), CommercePulse.OrderLatest)
+        val orders = CommercePulse.normalizeOrders(batch).persist()
+        try if (!orders.isEmpty)
+          graft.sources.Sinks.upsertParquet(spark, orders, outPath,
+            Seq("order_id"), CommercePulse.OrderLatest)
+        finally orders.unpersist()
       }
       .start()
 }

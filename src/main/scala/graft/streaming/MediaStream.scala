@@ -1,7 +1,8 @@
 package graft.streaming
 
-import graft.multimodal.MediaStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.multimodal.{Media, MediaStore}
+import graft.sources.KeyedStore
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming ingest for the maintained multimodal fingerprint store —
@@ -13,11 +14,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * prints are ~32 B/media, so streaming prints instead of pixels is
   * also the only shape whose micro-batches stay small at 100 TB of
   * media) — and each micro-batch lands banded via
-  * [[graft.sources.KeyedStore.landBatch]]: atomic data+stamp commit,
+  * [[graft.sources.KeyedStore.ingestStream]]: atomic data+stamp commit,
   * `batch_<id>` replay-idempotent, checkpoint identity stamped so a
   * fresh-sequence restart on a compacted store fails serve loudly.
   */
 object MediaStream {
+
+  private val PrintSchema = "media_id BIGINT, h64 BIGINT"
 
   /** Bootstrap-phase ingest into an UNROTATED store: batches stay
     * family-unstamped (there is no generation yet — the first
@@ -30,16 +33,9 @@ object MediaStream {
   def printIngestStream(s: SparkSession, printDir: String, storeDir: String,
                         maxFilesPerTrigger: Option[Int] = None,
                         checkpointDir: Option[String] = None)
-      : StreamingQuery = {
-    graft.sources.KeyedStore.generation(s, storeDir).foreach { g =>
-      throw new IllegalStateException(
-        s"printIngestStream: store $storeDir was rotated (generation " +
-          s"'$g') — resume ingest with printResumeIngestStream under the " +
-          "rotated family and a fresh checkpoint")
-    }
-    start(s, printDir, storeDir, gen = None, maxFilesPerTrigger,
-      checkpointDir)
-  }
+      : StreamingQuery =
+    KeyedStore.ingestStream(s, storeDir, None, printDir, PrintSchema,
+      maxFilesPerTrigger, checkpointDir)(Media.band64)
 
   /** Resume ingest into a ROTATED store — the post-[[MediaStore.rotate]]
     * continuation: arriving prints MUST have been computed under the
@@ -53,33 +49,7 @@ object MediaStream {
                               storeDir: String, generation: String,
                               maxFilesPerTrigger: Option[Int] = None,
                               checkpointDir: Option[String] = None)
-      : StreamingQuery = {
-    val storeGen = graft.sources.KeyedStore.generation(s, storeDir)
-    if (!storeGen.contains(generation))
-      throw new IllegalStateException(
-        s"printResumeIngestStream: store $storeDir is at generation " +
-          s"'${storeGen.getOrElse("<unstamped>")}' but this stream would " +
-          s"land prints stamped '$generation' — resume with the store's " +
-          "rotated family and a fresh checkpoint")
-    start(s, printDir, storeDir, gen = Some(generation), maxFilesPerTrigger,
-      checkpointDir)
-  }
-
-  private def start(s: SparkSession, printDir: String, storeDir: String,
-                    gen: Option[String], maxFilesPerTrigger: Option[Int],
-                    checkpointDir: Option[String]): StreamingQuery = {
-    val ckptId = AnnStream.ckptIdentity(s, checkpointDir)
-    val reader = s.readStream.schema("media_id BIGINT, h64 BIGINT")
-      .option("recursiveFileLookup", "true")
-    val prints = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(printDir)
-    val writer = prints.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        MediaStore.ingest(s, storeDir, batch, batchId, ckptId, gen)
-        ()
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d))
-      .start()
-  }
+      : StreamingQuery =
+    KeyedStore.ingestStream(s, storeDir, Some(generation), printDir,
+      PrintSchema, maxFilesPerTrigger, checkpointDir)(Media.band64)
 }

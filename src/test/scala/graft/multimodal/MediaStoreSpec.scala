@@ -75,6 +75,14 @@ class MediaStoreSpec extends SparkSuite {
     Media.imageHashes(mediaOf(ids.map(i => (i, bytesById(i))): _*))
       .withColumnRenamed("ahash", "h64")
 
+  /** The rotated family: aHash over 32x32-normalized pixels — a
+    * genuinely different print space (a normalization change IS a family
+    * change).
+    */
+  private def v2Hashes(ids: Seq[Long]) = Media.imageHashes(
+    Media.resizeImages(mediaOf(ids.map(i => (i, bytesById(i))): _*), 32, 32))
+    .withColumnRenamed("ahash", "h64")
+
   private def pairSet(df: org.apache.spark.sql.DataFrame) =
     df.select("id_a", "id_b", "hamming").collect().map(_.toSeq).toSet
 
@@ -121,11 +129,6 @@ class MediaStoreSpec extends SparkSuite {
     MediaStore.ingest(spark, dir, hashesOf(Seq(5L, 6L)), 0L, "spec_seq")
     MediaStore.forget(spark, dir, Seq(4L).toDF("media_id"))
 
-    // the new family: aHash over 32x32-normalized pixels — a genuinely
-    // different print space (a normalization change IS a family change)
-    def v2Hashes(ids: Seq[Long]) = Media.imageHashes(
-      Media.resizeImages(mediaOf(ids.map(i => (i, bytesById(i))): _*), 32, 32))
-      .withColumnRenamed("ahash", "h64")
     MediaStore.rotate(spark, dir, v2Hashes(Seq(1L, 2L, 3L, 4L, 5L, 6L)),
       generation = "ahash_norm32")
 
@@ -177,6 +180,57 @@ class MediaStoreSpec extends SparkSuite {
     try q2.processAllAvailable() finally q2.stop()
     intercept[IllegalStateException](
       MediaStore.nearDups(spark, storeDir, 6).collect())
+  }
+
+  test("print-store rotation drill: the bootstrap stream refuses a " +
+    "rotated store, the resume stream cross-checks its generation, and " +
+    "resumed batches land stamped and serve the one-pass index") {
+    val dir = tempDir("mediastream_rot") + "/prints"
+    val printDir = tempDir("mediastream_rot_p")
+    MediaStore.bootstrap(spark, dir, hashesOf(Seq(1L, 2L, 3L, 4L)))
+    MediaStore.forget(spark, dir, Seq(4L).toDF("media_id"))
+    MediaStore.rotate(spark, dir, v2Hashes(Seq(1L, 2L, 3L, 4L)),
+      generation = "ahash_norm32")
+
+    // the bootstrap definition would land unstamped old-family prints
+    // into the rotated Hamming space: it refuses at definition
+    val boot = intercept[IllegalStateException] {
+      graft.streaming.MediaStream.printIngestStream(spark, printDir, dir)
+    }
+    assert(boot.getMessage.contains("'ahash_norm32'"), boot.getMessage)
+    // and a resume under another family cross-checks its generation
+    intercept[IllegalStateException] {
+      graft.streaming.MediaStream.printResumeIngestStream(spark, printDir,
+        dir, generation = "ahash_raw")
+    }
+    def batchDirs = new java.io.File(dir).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("batch_"))
+    assert(batchDirs.isEmpty, "a refused definition must land nothing")
+
+    // RESUME under the store's family: new prints (7 is a byte copy of
+    // 3) arrive in two micro-batches with a fresh checkpoint
+    v2Hashes(Seq(5L, 6L)).write.mode("overwrite")
+      .parquet(s"$printDir/p0.parquet")
+    v2Hashes(Seq(7L, 8L)).write.mode("overwrite")
+      .parquet(s"$printDir/p1.parquet")
+    val q = graft.streaming.MediaStream.printResumeIngestStream(spark,
+      printDir, dir, generation = "ahash_norm32",
+      maxFilesPerTrigger = Some(1),
+      checkpointDir = Some(tempDir("mediastream_rot_c")))
+    try q.processAllAvailable() finally q.stop()
+    assert(batchDirs.nonEmpty && batchDirs.forall { d =>
+        val g = new java.io.File(d, "_gen")
+        g.isFile && java.nio.file.Files.readString(g.toPath).trim ==
+          "ahash_norm32"
+      }, "every resumed batch dir must carry the store's generation")
+    val live = Seq(1L, 2L, 3L, 5L, 6L, 7L, 8L)
+    val served = pairSet(MediaStore.nearDups(spark, dir, maxHamming = 6))
+    assert(served ==
+      pairSet(Media.bandedHammingPairs(v2Hashes(live), maxHamming = 6)),
+      "post-rotation streamed serve must equal the one-pass index of " +
+        "live ∪ resumed prints under the rotated family")
+    assert(served.exists(r => r.take(2) == Seq(3L, 7L)),
+      s"the resumed copy must pair with its live original: $served")
   }
 
   test("the audio print family shares the same store machinery") {

@@ -158,12 +158,13 @@ class KeyedStoreSpec extends SparkSuite {
     "or silently dropped)") {
     val dir = newStore()
     rows(0L to 9L, 1).write.parquet(s"$dir/base")
-    val snap = KeyedStore.flatSnapshot(spark, dir, Seq("part"))
-    // the hazard: a batch lands while the caller retrains/re-encodes
-    rows(10L to 12L, 2).write.parquet(s"$dir/batch_7")
     intercept[IllegalStateException] {
-      KeyedStore.replaceAll(spark, dir, Seq("part"), rows(0L to 9L, 9),
-        "id", sinceSnapshot = Some(snap))
+      KeyedStore.replaceAll(spark, dir, Seq("part"), schema, "id",
+          "g2") { live =>
+        // the hazard: a batch lands while the caller retrains/re-encodes
+        rows(10L to 12L, 2).write.parquet(s"$dir/batch_7")
+        rows(0L to 9L, 9).join(live, Seq("id"), "left_semi")
+      }
     }
     // the failed swap left the old tree fully intact, batch included
     assert(servedIds(dir) == (0L to 12L).toSet)
@@ -217,8 +218,8 @@ class KeyedStoreSpec extends SparkSuite {
     val dir = newStore()
     rows(0L to 4L, 1).write.parquet(s"$dir/base")
     // the rotation: wholesale re-index, store stamped generation g2
-    KeyedStore.replaceAll(spark, dir, Seq("part"), rows(0L to 4L, 2),
-      "id", newGeneration = Some("g2"))
+    KeyedStore.replaceAll(spark, dir, Seq("part"), schema, "id", "g2")(
+      _ => rows(0L to 4L, 2))
     assert(KeyedStore.generation(spark, dir).contains("g2"))
     assert(servedIds(dir) == (0L to 4L).toSet)
     // the replay: a pre-rotation batch re-lands, UNSTAMPED (it was
@@ -247,8 +248,8 @@ class KeyedStoreSpec extends SparkSuite {
     "fold (a rotated store stays guarded through its next compact)") {
     val dir = newStore()
     rows(0L to 4L, 1).write.parquet(s"$dir/base")
-    KeyedStore.replaceAll(spark, dir, Seq("part"), rows(0L to 4L, 2),
-      "id", newGeneration = Some("g2"))
+    KeyedStore.replaceAll(spark, dir, Seq("part"), schema, "id", "g2")(
+      _ => rows(0L to 4L, 2))
     rows(5L to 6L, 3).write.parquet(s"$dir/batch_0")
     KeyedStore.stampBatch(spark, dir, "batch_0", "g2")
     KeyedStore.compact(spark, dir, Seq("part"), schema, "id")
@@ -306,8 +307,8 @@ class KeyedStoreSpec extends SparkSuite {
     "unstamped window) and a replay overwrites itself") {
     val dir = newStore()
     rows(0L to 4L, 1).write.parquet(s"$dir/base")
-    KeyedStore.replaceAll(spark, dir, Seq("part"), rows(0L to 4L, 2),
-      "id", newGeneration = Some("g2"))
+    KeyedStore.replaceAll(spark, dir, Seq("part"), schema, "id", "g2")(
+      _ => rows(0L to 4L, 2))
     KeyedStore.landBatch(spark, dir, 0L, Some("g2"), "ck") { dst =>
       rows(Seq(9L), 3).write.parquet(dst)
     }
@@ -393,5 +394,22 @@ class KeyedStoreSpec extends SparkSuite {
     assert(tombCount(dir) == 1,
       "stamped tombstone retires; the legacy backfill must not")
     assert(servedIds(dir) == ((0L to 9L).toSet -- Set(3L, 4L)))
+  }
+
+  test("ckptIdentity follows checkpoint CONTENT, not path: a wiped-and-" +
+    "recreated checkpoint at the same path gets a new identity") {
+    val dir = tempDir("ckpt_id") + "/ck"
+    val a = KeyedStore.ckptIdentity(spark, Some(dir))
+    assert(a == KeyedStore.ckptIdentity(spark, Some(dir)),
+      "restarts of the SAME checkpoint must read the same identity back")
+    // the practical "fresh checkpoint": wipe and reuse the same path —
+    // batch ids restart at 0, so the identity MUST change or the serve
+    // gate would silently swallow the restarted batches
+    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+    assert(KeyedStore.ckptIdentity(spark, Some(dir)) != a,
+      "a wiped-and-recreated checkpoint is a new batch sequence")
+    assert(KeyedStore.ckptIdentity(spark, None)
+      != KeyedStore.ckptIdentity(spark, None),
+      "ephemeral-checkpoint definitions never resume: fresh token each")
   }
 }

@@ -111,8 +111,8 @@ class AnnStreamSpec extends SparkSuite {
     // parity must survive, and the file count must actually drop
     val storeSchema = store.schema
     val nCids = store.select("cid").distinct().count()
-    val (nBefore, nAfter) = graft.sources.Sinks.compactPartitioned(
-      spark, storeDir, Seq("cid"), storeSchema)
+    val (nBefore, nAfter) = AnnStream.compactStore(spark, storeDir,
+      storeSchema)
     // the invariant is BOUNDEDNESS, not strict shrinkage: after
     // compaction the file count is one per populated cell, independent
     // of how many ingest batches accumulated (here 2 batches + base can
@@ -152,22 +152,29 @@ class AnnStreamSpec extends SparkSuite {
     val schema = spark.read.option("recursiveFileLookup", "true")
       .parquet(storeDir).schema
 
-    // compaction cycle 1 folds base/ + batch dirs into cid=*/ layout
-    graft.sources.Sinks.compactPartitioned(spark, storeDir, Seq("cid"), schema)
+    // compaction cycle 1 folds base/ + batch dirs into cid=*/ layout and
+    // records the folded batch ids (0, 1) as the watermark
+    AnnStream.compactStore(spark, storeDir, schema)
 
     // forget one base vector and one streamed vector (durable tombstones)
     val dels = Seq(123L, 457L)
     AnnStream.forgetVectors(spark, storeDir, dels.toDF("vec_id"))
 
     // REPLAY: a micro-batch re-lands AFTER its rows were folded away —
-    // exactly the write its foreachBatch would repeat on recovery. The
-    // store tree now mixes cid=*/ dirs, a duplicate flat batch dir, and
-    // one replayed row of a forgotten vector (457)
+    // exactly the write its foreachBatch would repeat on recovery. At or
+    // below the watermark (batch_1) the fold subsumes it wholesale; ABOVE
+    // it (batch_2, a batch the fold never saw) it is served, so only the
+    // tombstone keeps the replayed rows of forgotten vector 457 hidden.
+    // The store tree now mixes cid=*/ dirs and two flat replay dirs
     val (coarse, rcent, _) =
       SimilarityQueries.ivfpqIndexOn(spark, sf, Some(base))
-    SimilarityQueries.ivfpqEncode(emb.filter(col("vec_id") >= 450),
-        coarse, rcent)
-      .write.mode("overwrite").parquet(s"$storeDir/batch_1")
+    val replay = SimilarityQueries.ivfpqEncode(
+      emb.filter(col("vec_id") >= 450), coarse, rcent)
+    replay.write.mode("overwrite").parquet(s"$storeDir/batch_1")
+    replay.write.mode("overwrite").parquet(s"$storeDir/batch_2")
+    assert(spark.read.parquet(s"$storeDir/batch_2")
+      .filter(col("vec_id") === 457L).count() > 0,
+      "the above-watermark replay must physically carry forgotten 457")
 
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "cid", "m", "code").collect().map(_.toSeq).toSet
@@ -179,6 +186,8 @@ class AnnStreamSpec extends SparkSuite {
     assert(rows(view) == truth,
       "serving view must equal the one-pass encode minus forgotten ids, " +
         "even over the replay-duplicated tree")
+    assert(view.filter(col("vec_id").isin(dels: _*)).isEmpty,
+      "the tombstones must hide the forgotten ids the replay re-landed")
     val queries = emb.filter(col("vec_id") < SimilarityQueries.PqNQ)
     def neighbors(codes: org.apache.spark.sql.DataFrame) =
       SimilarityQueries.ivfpqProbe(queries, coarse, rcent, codes)
@@ -217,24 +226,28 @@ class AnnStreamSpec extends SparkSuite {
     val base = 400L
     val q = AnnStream.ivfpqIngestStream(spark, vecDir, sf, base, storeDir,
       maxFilesPerTrigger = Some(1))
-    // (a) the rotation window opens while the stream is LIVE: snapshot
-    // taken, then a micro-batch lands before the swap — replaceAll must
-    // refuse (exercised from the stream side; the spec-side twin stages
-    // the batch by hand)
-    val snap = graft.sources.KeyedStore.flatSnapshot(spark, storeDir,
-      Seq("cid"))
-    emb.filter(col("vec_id") >= base && col("vec_id") < 450)
-      .write.mode("overwrite").parquet(s"$vecDir/b0.parquet")
-    try q.processAllAvailable() finally q.stop()
     val schema = spark.read.option("recursiveFileLookup", "true")
       .parquet(storeDir).schema
     val (_, _, baseCodes) =
       SimilarityQueries.ivfpqIndexOn(spark, sf, Some(base))
-    intercept[IllegalStateException] {
+    // (a) the rotation window opens while the stream is LIVE: replaceAll
+    // has listed the flat dirs and served the live keys, then a
+    // micro-batch lands inside the re-index — the swap must refuse
+    // (exercised from the stream side; the spec-side twin stages the
+    // batch by hand)
+    val refused = intercept[IllegalStateException] {
       graft.sources.KeyedStore.replaceAll(spark, storeDir, Seq("cid"),
-        baseCodes, "vec_id", sinceSnapshot = Some(snap),
-        newGeneration = Some("never"))
+          schema, "vec_id", "never") { _ =>
+        emb.filter(col("vec_id") >= base && col("vec_id") < 450)
+          .write.mode("overwrite").parquet(s"$vecDir/b0.parquet")
+        try q.processAllAvailable() finally q.stop()
+        baseCodes
+      }
     }
+    assert(refused.getMessage.contains("landed during the re-index"),
+      refused.getMessage)
+    assert(new java.io.File(storeDir, "batch_0").isDirectory,
+      "the stream must have landed its batch inside the window")
     assert(graft.sources.KeyedStore.generation(spark, storeDir).isEmpty,
       "the refused swap must leave the store unstamped and intact")
 
@@ -276,22 +289,5 @@ class AnnStreamSpec extends SparkSuite {
     assert(stamped.nonEmpty &&
       stamped.forall(d => new java.io.File(d, "_gen").isFile),
       "every resumed batch dir must carry its generation stamp")
-  }
-
-  test("ckptIdentity follows checkpoint CONTENT, not path: a wiped-and-" +
-    "recreated checkpoint at the same path gets a new identity") {
-    val dir = tempDir("ckpt_id") + "/ck"
-    val a = AnnStream.ckptIdentity(spark, Some(dir))
-    assert(a == AnnStream.ckptIdentity(spark, Some(dir)),
-      "restarts of the SAME checkpoint must read the same identity back")
-    // the practical "fresh checkpoint": wipe and reuse the same path —
-    // batch ids restart at 0, so the identity MUST change or the serve
-    // gate would silently swallow the restarted batches
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    assert(AnnStream.ckptIdentity(spark, Some(dir)) != a,
-      "a wiped-and-recreated checkpoint is a new batch sequence")
-    assert(AnnStream.ckptIdentity(spark, None)
-      != AnnStream.ckptIdentity(spark, None),
-      "ephemeral-checkpoint definitions never resume: fresh token each")
   }
 }

@@ -33,20 +33,30 @@ class DocStreamSpec extends SparkSuite {
       == rows(onePass(docs)),
       "streamed store must equal the one-pass index (pure per-doc rows)")
 
-    // compaction cycle 1, then forget one base doc and one streamed doc
-    graft.sources.Sinks.compactPartitioned(spark, storeDir, Seq("band"), schema)
+    // compaction cycle 1 (watermark = folded batch 1), then forget one
+    // base doc and one streamed doc
+    DocStream.compactBandStore(spark, storeDir, schema)
     val dels = Seq(123L, 457L)
     DocStream.forgetDocs(spark, storeDir, dels.toDF("doc_id"))
-    // REPLAY: batch_1 re-lands after its rows were folded away — its
-    // rows physically carry forgotten doc 457 again
-    TextDedup.minhashBandIndex(docs.filter(col("doc_id") >= 450), 2, 4, 4)
-      .write.mode("overwrite").parquet(s"$storeDir/batch_1")
+    // REPLAY: batch_1 re-lands after its rows were folded away (at the
+    // watermark: subsumed wholesale), and as batch_2 above it (served,
+    // so only the tombstone hides it) — both physically carry forgotten
+    // doc 457 again
+    val replay =
+      TextDedup.minhashBandIndex(docs.filter(col("doc_id") >= 450), 2, 4, 4)
+    replay.write.mode("overwrite").parquet(s"$storeDir/batch_1")
+    replay.write.mode("overwrite").parquet(s"$storeDir/batch_2")
+    assert(spark.read.parquet(s"$storeDir/batch_2")
+      .filter(col("doc_id") === 457L).count() > 0,
+      "the above-watermark replay must physically carry forgotten 457")
 
     val truthDocs = docs.filter(!col("doc_id").isin(dels: _*))
     val view = DocStream.storeBandIndex(spark, storeDir, schema)
     assert(rows(view) == rows(onePass(truthDocs)),
       "TRUE rebuild parity: serving view == index over corpus minus " +
         "forgotten, even over the replay-duplicated tree")
+    assert(view.filter(col("doc_id").isin(dels: _*)).isEmpty,
+      "the tombstones must hide the forgotten ids the replay re-landed")
     // a forgotten doc can never surface as a match: probe with an exact
     // copy of doc 457's text under a fresh id
     val probe = docs.filter(col("doc_id") === 457L)

@@ -178,24 +178,22 @@ class EventStreamSpec extends SparkSuite {
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 60000L))
     val out = tempDir("stream_daily4") + "/fact_order_daily"
     val cp = tempDir("stream_daily4_cp")
+    val orders = tempDir("stream_orders4") + "/fact_orders"
     def parts(p: String): Set[String] =
       Option(new java.io.File(p).list()).toSet.flatten.filter(_.startsWith("part-"))
-    // (query, batch, input rows, store part files, table part files)
+    // (query, batch, input rows, store / table / order-table part files)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[
-      (java.util.UUID, Long, Long, Set[String], Set[String])]()
+      (java.util.UUID, Long, Long, Set[String], Set[String], Set[String])]()
     val listener = new StreamingQueryListener {
       def onQueryStarted(e: QueryStartedEvent): Unit = ()
       def onQueryProgress(e: QueryProgressEvent): Unit =
         seen.add((e.progress.id, e.progress.batchId, e.progress.numInputRows,
-          parts(s"${out}_events"), parts(out)))
+          parts(s"${out}_events"), parts(out), parts(orders)))
       def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }
-    spark.streams.addListener(listener)
-    val batches = try {
-      val q = EventStream.startDailyRefresh(spark,
-        EventStream.dedupWithWatermark(
-          EventStream.readLiveStream(spark, dir, maxFilesPerTrigger = Some(1))),
-        out, cp)
+    def deduped(in: String) = EventStream.dedupWithWatermark(
+      EventStream.readLiveStream(spark, in, maxFilesPerTrigger = Some(1)))
+    def progressOf(q: org.apache.spark.sql.streaming.StreamingQuery) = {
       q.awaitTermination(120000)
       // progress reaches listeners asynchronously: wait for the last one
       val n = q.recentProgress.length
@@ -203,14 +201,41 @@ class EventStreamSpec extends SparkSuite {
       def mine = seen.asScala.filter(_._1 == q.id).toSeq
       while (mine.size < n && System.nanoTime() < deadline) Thread.sleep(50)
       mine.sortBy(_._2)
+    }
+    // a payments-only stream: its batches normalize to no order row
+    val payDir = tempDir("stream_in11_pay")
+    Files.writeString(Paths.get(s"$payDir/p.jsonl"),
+      """{"event_id":"p1","event_type":"payment_succeeded","event_time":"2024-01-04T12:00:00","vendor":"vendor_b","payload":"{\"order_id\":\"B-1\",\"paid_at\":\"2024-01-04T12:00:00\",\"payment_status\":\"success\",\"amountPaid\":200.0,\"transaction_id\":\"TX-9\"}","ingested_at":"2024-01-04T13:00:00"}""")
+    val payOrders = tempDir("stream_orders4_pay") + "/fact_orders"
+    spark.streams.addListener(listener)
+    val (batches, orderBatches) = try {
+      val daily = progressOf(
+        EventStream.startDailyRefresh(spark, deduped(dir), out, cp))
+      val upserts = progressOf(EventStream.startOrderUpsert(spark,
+        deduped(dir), orders, tempDir("stream_orders4_cp")))
+      progressOf(EventStream.startOrderUpsert(spark, deduped(payDir),
+        payOrders, tempDir("stream_orders4_pay_cp")))
+      (daily, upserts)
     } finally spark.streams.removeListener(listener)
     assert(batches.map(_._3) == Seq(2L, 2L, 0L),
       s"expected two data batches and a trailing 0-row batch: $batches")
-    val (_, _, _, storeAfterData, tableAfterData) = batches(1)
-    val (_, _, _, storeAfterEmpty, tableAfterEmpty) = batches(2)
+    val (_, _, _, storeAfterData, tableAfterData, _) = batches(1)
+    val (_, _, _, storeAfterEmpty, tableAfterEmpty, _) = batches(2)
     assert(storeAfterData.nonEmpty && tableAfterData.nonEmpty)
     assert(storeAfterEmpty == storeAfterData, "0-row batch rewrote the store")
     assert(tableAfterEmpty == tableAfterData, "0-row batch rewrote the table")
+    // the order upsert over the same input: same batches, and its
+    // trailing 0-row batch leaves the order table's files untouched
+    assert(orderBatches.map(_._3) == Seq(2L, 2L, 0L),
+      s"expected two data batches and a trailing 0-row batch: $orderBatches")
+    val ordersAfterData = orderBatches(1)._6
+    assert(ordersAfterData.nonEmpty)
+    assert(orderBatches(2)._6 == ordersAfterData,
+      "0-row batch rewrote the order table")
+    assert(spark.read.parquet(orders).select("order_id").collect()
+      .map(_.getString(0)).toSet == Set("A-1", "B-1"))
+    assert(!new java.io.File(payOrders).exists(),
+      "a stream that never delivered an order created an order table")
     val all = graft.pipeline.CommercePulse.readLive(spark, s"$dir/*.jsonl")
     val recompute = graft.pipeline.CommercePulse.factOrderDaily(
       graft.pipeline.CommercePulse.normalizeOrders(all),
