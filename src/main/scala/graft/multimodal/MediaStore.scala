@@ -43,28 +43,11 @@ object MediaStore {
 
   /** Bootstrap the store's `base/` corpus print table — idempotent
     * overwrite, ranked below every batch by [[KeyedStore.serve]]'s
-    * reconcile. `hashes` is (media_id, h64).
+    * reconcile. `hashes` is (media_id, h64). Batches land through
+    * `graft.streaming.MediaStream`'s ingest streams.
     */
   def bootstrap(s: SparkSession, storeDir: String, hashes: DataFrame): Unit =
     Media.band64(hashes).write.mode("overwrite").parquet(s"$storeDir/base")
-
-  /** Land one fingerprint ingest batch through
-    * [[KeyedStore.landBatch]] — atomic data+stamp commit, so the batch
-    * carries its sequence identity (`ckptId`) like the ANN and band
-    * families' batches do: a fresh-sequence restart that reuses batch
-    * ids on a compacted store then fails serve LOUDLY instead of having
-    * its new prints silently swallowed by the watermark. `gen` is the
-    * fingerprint FAMILY the prints were computed under: None before any
-    * rotation; after [[rotate]], pass the store's generation (a stale
-    * None replay is then rejected at serve — old-family prints must
-    * never share the Hamming space).
-    */
-  def ingest(s: SparkSession, storeDir: String, hashes: DataFrame,
-             batchId: Long, ckptId: String,
-             gen: Option[String] = None): Unit =
-    KeyedStore.landBatch(s, storeDir, batchId, gen, ckptId) { dst =>
-      Media.band64(hashes).write.mode("overwrite").parquet(dst)
-    }
 
   /** The reconciled serving view of the banded print table (replay
     * duplicates resolved, tombstoned media filtered).

@@ -1,8 +1,9 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.DailyRevenue
 import graft.functions.TextFns
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -23,9 +24,6 @@ object Analytics {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private def moneySum(c: Column, scale: Long): Column =
-    graft.operators.DailyRevenue.sumMoney(c, scale)
-
   // ---- J5: full outer join (daily order grain vs daily event grain) ----
   // The two calendars barely overlap (TPC-H order years vs the 2024-01
   // event month), so both null sides are genuinely exercised. A `using`
@@ -36,7 +34,7 @@ object Analytics {
     val o = Tables.orders(s, d)
       .groupBy(col("o_orderdate").cast("date").as("day"))
       .agg(count(lit(1)).as("order_cnt"),
-        moneySum(col("o_totalprice"), 100L).as("order_gross"))
+        DailyRevenue.sumMoney(col("o_totalprice"), 100L).as("order_gross"))
     val e = Tables.events(s, d)
       .filter(col("ts").isNotNull)
       .groupBy(col("ts").cast("date").as("day"))
@@ -71,7 +69,7 @@ object Analytics {
     Tables.orders(s, d)
       .cube(col("o_orderpriority"), col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
-        moneySum(col("o_totalprice"), 100L).as("gross"),
+        DailyRevenue.sumMoney(col("o_totalprice"), 100L).as("gross"),
         grouping(col("o_orderpriority")).cast("long").as("g_pri"),
         grouping(col("o_orderstatus")).cast("long").as("g_st"))
       .select(
@@ -372,7 +370,7 @@ object Analytics {
         && col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
       .groupBy(col("o_orderpriority").as("priority"),
         col("o_orderdate").cast("date").as("day"))
-      .agg(moneySum(col("o_totalprice"), 100L).as("gross"))
+      .agg(DailyRevenue.sumMoney(col("o_totalprice"), 100L).as("gross"))
     val spine = Tables.orders(s, d)
       .select(col("o_orderpriority").as("priority")).distinct()
       .crossJoin(

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.DailyRevenue
 import graft.normalize.Drift
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -19,9 +20,6 @@ import org.apache.spark.sql.functions._
 object Extended {
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def moneySum(c: org.apache.spark.sql.Column, scale: Long) =
-    graft.operators.DailyRevenue.sumMoney(c, scale)
 
   // ---- S1/S2/S6: JSONL round-trip with corrupt-line skip ----
   def s1JsonRoundtrip(s: SparkSession, d: String): DataFrame = {
@@ -44,7 +42,7 @@ object Extended {
       .filter(col("event_id").isNotNull)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
-        (moneySum(col("value"), 10000L)).as("sum_value"),
+        (DailyRevenue.sumMoney(col("value"), 10000L)).as("sum_value"),
         max(Drift.parseTimestampMulti(col("event_time")).cast("date")).as("max_date"))
       .orderBy("event_type")
   }
@@ -177,9 +175,10 @@ object Extended {
       .agg(
         round(sum("l_quantity"), 2).as("sum_qty"),
         round(sum("l_extendedprice"), 2).as("sum_base_price"),
-        moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")), 1000000L)
+        DailyRevenue.sumMoney(
+          col("l_extendedprice") * (lit(1) - col("l_discount")), 1000000L)
           .as("sum_disc_price"),
-        moneySum(col("l_extendedprice") * (lit(1) - col("l_discount"))
+        DailyRevenue.sumMoney(col("l_extendedprice") * (lit(1) - col("l_discount"))
           * (lit(1) + col("l_tax")), 1000000L).as("sum_charge"),
         round(avg("l_quantity"), 4).as("avg_qty"),
         round(avg("l_discount"), 4).as("avg_disc"),
@@ -210,7 +209,7 @@ object Extended {
         && col("l_shipdate") < lit("1996-01-01").cast("timestamp")
         && col("l_discount").between(0.05, 0.07)
         && col("l_quantity") < 24)
-      .agg(moneySum(col("l_extendedprice") * col("l_discount"), 1000000L)
+      .agg(DailyRevenue.sumMoney(col("l_extendedprice") * col("l_discount"), 1000000L)
         .as("revenue"),
         count(lit(1)).as("n_rows"))
 
@@ -232,7 +231,8 @@ object Extended {
     l.join(o, l("l_orderkey") === o("o_orderkey"))
       .join(c, o("o_custkey") === c("c_custkey"))
       .groupBy(col("l_orderkey"), col("o_orderdate").cast("date").as("order_date"))
-      .agg(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")), 1000000L)
+      .agg(DailyRevenue.sumMoney(
+        col("l_extendedprice") * (lit(1) - col("l_discount")), 1000000L)
         .as("revenue"))
       .orderBy(desc("revenue"), col("l_orderkey"))
       .limit(10)
@@ -796,7 +796,8 @@ object Extended {
       .join(broadcast(sup), col("l_suppkey") === col("s_suppkey")
         && col("c_nationkey") === col("s_nationkey"))
       .groupBy("n_name")
-      .agg(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")), 1000000L)
+      .agg(DailyRevenue.sumMoney(
+        col("l_extendedprice") * (lit(1) - col("l_discount")), 1000000L)
         .as("revenue"))
       .orderBy(desc("revenue"), col("n_name"))
   }
@@ -839,7 +840,7 @@ object Extended {
     Tables.orders(s, d)
       .groupBy("o_orderpriority")
       .pivot("o_orderstatus", Seq("F", "O", "P"))
-      .agg(moneySum(col("o_totalprice"), 100L))
+      .agg(DailyRevenue.sumMoney(col("o_totalprice"), 100L))
       .na.fill(0.0, Seq("F", "O", "P"))
       .withColumnRenamed("F", "rev_f").withColumnRenamed("O", "rev_o")
       .withColumnRenamed("P", "rev_p")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Scratch, Tables}
+import graft.operators.DailyRevenue
 import graft.functions.TextFns
 import graft.sources.Sinks
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -22,9 +23,6 @@ import org.apache.spark.sql.functions._
 object ScaleOps {
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def moneySum(c: Column, scale: Long): Column =
-    graft.operators.DailyRevenue.sumMoney(c, scale)
 
   // ---- MB: market-basket co-purchase pairs ----
   // Parts bought together in one order. The naive formulation is a
@@ -165,7 +163,8 @@ object ScaleOps {
         ct, "c_custkey", 8)
     s.table(ot).join(s.table(ct), col("o_custkey") === col("c_custkey"))
       .groupBy("c_nationkey")
-      .agg(count(lit(1)).as("orders"), moneySum(col("o_totalprice"), 100L).as("revenue"))
+      .agg(count(lit(1)).as("orders"),
+        DailyRevenue.sumMoney(col("o_totalprice"), 100L).as("revenue"))
       .orderBy("c_nationkey")
   }
 
@@ -343,7 +342,7 @@ object ScaleOps {
         expectedKeys = 1L << 20, fpp = 0.01)
       .groupBy(date_trunc("month", col("o_orderdate")).cast("date").as("month"))
       .agg(count(lit(1)).as("orders"),
-        moneySum(col("o_totalprice"), 100L).as("revenue"))
+        DailyRevenue.sumMoney(col("o_totalprice"), 100L).as("revenue"))
       .orderBy("month")
   }
 

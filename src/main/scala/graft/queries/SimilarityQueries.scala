@@ -413,8 +413,9 @@ object SimilarityQueries {
   //    CodegenFallback, allocating an array and interpreting two lambdas
   //    per pair; it's the algebraic expansion |q|² − 2q·c + |c|² over
   //    the codegen'd integer dot product (plans/DotProductL), with |q|²
-  //    staged once per vector and |c|² once per centroid. Long math is
-  //    associative, so the expansion is bit-equal to the per-dim fold.
+  //    computed once per vector and |c|² once per centroid ([[argmin]]).
+  //    Long math is associative, so the expansion is bit-equal to the
+  //    per-dim fold.
   //  - each iteration's 8-row centroid table is STAGED to scratch
   //    parquet (PageRank's pattern): chaining iteration k's plan onto
   //    iteration k−1's re-embeds every earlier assignment into one
@@ -422,6 +423,73 @@ object SimilarityQueries {
   private val KmK = 8
   private val KmIters = 3
   private val KmScale = 1048576L // 2^20
+
+  /** The columns that tell one integer Lloyd's round from another's —
+    * emb_kmeans, the PQ codebooks and both IVF-PQ quantizers train
+    * through the same [[argmin]] and [[lloydStep]]. `key` is the
+    * subspace column that pairs rows with centroids (PQ codebooks: `m`;
+    * whole-vector k-means: none), `id` the centroid id, `vec` the
+    * integer vector, and `weight` a per-row replica mass (emb_kmeans'
+    * content collapse; none = 1 per row). Trained frames hold one row
+    * per (vec_id, key); centroid tables are (key, id, cvec).
+    */
+  private case class Lloyd(key: Option[String], id: String, vec: String,
+                           weight: Option[String])
+
+  private val KmLloyd = Lloyd(None, "cid", "q", Some(graft.operators.Content.G))
+  private val CellLloyd = Lloyd(None, "cid", "q", None)
+  private val CodeLloyd = Lloyd(Some("m"), "code", "sub", None)
+
+  /** Nearest centroid per (vec_id, key): the centroid table broadcast
+    * (crossed, or joined on the key), the exact integer squared L2 as
+    * |v|² − 2v·c + |c|² with each norm computed once per row or
+    * centroid, and a struct-min over (dist, id), so ties go to the
+    * lowest id. Returns (vec_id, key, id, dist), plus the weight.
+    *
+    * The struct carries (dist, id) ONLY: carrying the vector in it would
+    * save [[lloydStep]]'s re-join, but a 512-byte array in every
+    * partial-agg buffer update is a copy per input row; the compact agg
+    * plus a join against the staged vectors is measurably cheaper.
+    */
+  private def argmin(on: DataFrame, cent: DataFrame, l: Lloyd): DataFrame = {
+    import graft.plans.DotProductL.dotL
+    val v = col(l.vec)
+    val rows = on.withColumn("vv", dotL(v, v))
+    val c = broadcast(cent.withColumn("cc", dotL(col("cvec"), col("cvec"))))
+    val keys = ("vec_id" +: l.key.toSeq).map(col)
+    l.key.fold(rows.crossJoin(c))(rows.join(c, _))
+      .withColumn("dist", col("vv") - lit(2L) * dotL(v, col("cvec")) + col("cc"))
+      .groupBy(keys: _*)
+      .agg(min(struct(col("dist"), col(l.id))).as("mm"),
+        l.weight.map(w => max(col(w)).as(w)).toSeq: _*)
+      .select(keys ++ Seq(col(s"mm.${l.id}").as(l.id), col("mm.dist").as("dist")) ++
+        l.weight.map(col): _*)
+  }
+
+  /** One Lloyd's round over `on`: [[argmin]], then per (key, id,
+    * position) the weighted coordinate sum `sx` and mass `n`, divided by
+    * TRUNCATING signed division — the quotient of |sx| with the sign
+    * restored, so Spark's `div` and the oracle's abs-floor-div agree on
+    * negative sums — and re-assembled in position order. Empty clusters
+    * drop out (inner aggregate), as in the oracle.
+    */
+  private def lloydStep(on: DataFrame, cent: DataFrame, l: Lloyd): DataFrame = {
+    val rowKey = "vec_id" +: l.key.toSeq
+    val keys = (l.key.toSeq :+ l.id).map(col)
+    val (sx, n) = l.weight.fold((sum("x"), count(lit(1)))) { w =>
+      (sum(col("x") * col(w)), sum(col(w)))
+    }
+    argmin(on, cent, l).join(on.select((rowKey :+ l.vec).map(col): _*), rowKey)
+      .select(keys ++ l.weight.map(col) :+
+        posexplode(col(l.vec)).as(Seq("pos", "x")): _*)
+      .groupBy(keys :+ col("pos"): _*)
+      .agg(sx.as("sx"), n.as("n"))
+      .select(keys :+ col("pos") :+
+        (when(col("sx") < 0, -1L).otherwise(1L) * expr("abs(sx) div n")).as("cx"): _*)
+      .groupBy(keys: _*)
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
+        p => p.getField("cx")).as("cvec"))
+  }
 
   def embKmeans(s: SparkSession, d: String): DataFrame =
     kmeansDerived(s, d, salt = None).orderBy("cid")
@@ -438,7 +506,6 @@ object SimilarityQueries {
   // membership frame and joins its content's quantized vector.
   private[graft] def kmeansDerived(s: SparkSession, d: String,
                                    salt: Option[org.apache.spark.sql.Column]): DataFrame = {
-    import graft.plans.DotProductL.dotL
     val H = graft.operators.Content.H
     val Gc = graft.operators.Content.G
     val scratch = graft.Scratch.dir(s, "graft_km_")
@@ -460,8 +527,8 @@ object SimilarityQueries {
     val q = stage(reps0
       .select(col(H), col(Gc), col("vec_id"),
         transform(col("embedding"),
-          x => floor(x.cast("double") * lit(KmScale.toDouble)).cast("long")).as("q"))
-      .withColumn("qq", dotL(col("q"), col("q"))), "q")
+          x => floor(x.cast("double") * lit(KmScale.toDouble)).cast("long")).as("q")),
+      "q")
 
     // init: the k lowest MEMBER vec_ids, cid = 0..k-1 in id order.
     // The unpartitioned window below runs over the k-row limit() frame
@@ -474,37 +541,8 @@ object SimilarityQueries {
           .cast("long").as("cid"),
         col("q").as("cvec")), "cent_0")
 
-    // argmin as a struct-min over (dist, cid) ONLY — an earlier version
-    // carried q inside the min struct to save the re-join below, but a
-    // 512-byte array in every partial-agg buffer update is a copy per
-    // input row; the compact agg + a join against the staged q table is
-    // measurably cheaper, and the join is on the staged parquet (no
-    // recompute)
-    def assign(c: DataFrame): DataFrame =
-      q.crossJoin(broadcast(c.withColumn("cc", dotL(col("cvec"), col("cvec")))))
-        .withColumn("dist",
-          col("qq") - lit(2L) * dotL(col("q"), col("cvec")) + col("cc"))
-        .groupBy("vec_id")
-        .agg(min(struct(col("dist"), col("cid"))).as("m"),
-          max(col(Gc)).as("g"))
-        .select(col("vec_id"), col("m.cid").as("cid"), col("m.dist").as("dist"),
-          col("g"))
-
     for (i <- 1 to KmIters) {
-      val a = assign(cent)
-      // empty clusters drop out (inner aggregate) — mirrored by the oracle
-      cent = a.join(q.select("vec_id", "q"), "vec_id")
-        .select(col("cid"), col("g"), posexplode(col("q")).as(Seq("pos", "x")))
-        .groupBy("cid", "pos")
-        .agg(sum(col("x") * col("g")).as("sx"), sum(col("g")).as("n"))
-        // truncating division with explicit sign so Spark's `div` and the
-        // oracle's abs-floor-div agree on negative sums
-        .select(col("cid"), col("pos"),
-          (when(col("sx") < 0, -1L).otherwise(1L) *
-            expr("abs(sx) div n")).as("cx"))
-        .groupBy("cid")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-          p => p.getField("cx")).as("cvec"))
+      cent = lloydStep(q, cent, KmLloyd)
       // stage INTERMEDIATE rounds only (optimization r15, guide §2.4
       // "fewer barriers" — the ccOverEdges lazy-labels doctrine): the
       // LAST round's k-row centroid table has exactly one consumer, the
@@ -516,11 +554,11 @@ object SimilarityQueries {
       cent = if (i < KmIters) stage(cent, s"cent_$i") else cent
     }
 
-    assign(cent)
+    argmin(q, cent, KmLloyd)
       .groupBy("cid")
-      .agg(sum("g").as("n_members"),
+      .agg(sum(Gc).as("n_members"),
         min("vec_id").as("rep_vec"),
-        sum(col("dist") * col("g")).as("inertia"))
+        sum(col("dist") * col(Gc)).as("inertia"))
   }
 
   val embKmeansSql: String = {
@@ -578,7 +616,7 @@ object SimilarityQueries {
   // distance computation — Jégou, Douze, Schmid, "Product Quantization
   // for Nearest Neighbor Search", TPAMI 2011). Everything is integer:
   // vectors quantize to 2^20-scaled longs (the emb_kmeans move), codebooks
-  // train with truncating-division Lloyd's, and ADC distances are exact
+  // train with the shared integer [[lloydStep]], and ADC distances are exact
   // integer sums — so both engines rank bit-identically with no float
   // formatting anywhere.
   //
@@ -650,21 +688,14 @@ object SimilarityQueries {
   private[graft] def pqProbe(qcells: DataFrame, cent: DataFrame,
                              codes: DataFrame,
                              topK: Int = PqTopK): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val dt = qcells
       .join(broadcast(cent), "m")
       .select(col("vec_id").as("query_id"), col("m"), col("code"),
         distL2(col("sub"), col("cvec")).as("dcode"))
-    codes.join(broadcast(dt), Seq("m", "code"))
+    adcTopK(codes.join(broadcast(dt), Seq("m", "code"))
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy("query_id", "vec_id")
-      .agg(sum("dcode").as("adc_dist"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("adc_dist"), col("vec_id")))
-        .cast("long"))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("adc_dist"))
+      .agg(sum("dcode").as("adc_dist")), topK)
   }
 
   /** The persisted PQ index for a dataset: (codebook, code table), built
@@ -735,34 +766,10 @@ object SimilarityQueries {
           Window.partitionBy("m").orderBy("vec_id")) - 1).cast("long"))
         .select(col("m"), col("code"), col("sub").as("cvec")))
 
-    // nearest code per (vec, subspace): broadcast the tiny codebook, ties
-    // to the lowest code via the struct-min (same idiom as emb_kmeans)
-    def assign(on: DataFrame, c: DataFrame): DataFrame =
-      on.join(broadcast(c), "m")
-        .withColumn("dist", distL2(col("sub"), col("cvec")))
-        .groupBy("vec_id", "m")
-        .agg(min(struct(col("dist"), col("code"))).as("mm"))
-        .select(col("vec_id"), col("m"),
-          col("mm.code").as("code"), col("mm.dist").as("dist"))
-
-    for (i <- 1 to PqIters) {
-      cent = pin(
-        assign(tcells, cent).join(tcells, Seq("vec_id", "m"))
-          .select(col("m"), col("code"), posexplode(col("sub")).as(Seq("pos", "x")))
-          .groupBy("m", "code", "pos")
-          .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-          // truncating division with explicit sign — `div` vs the
-          // oracle's abs-floor-div agree on negative sums (emb_kmeans)
-          .select(col("m"), col("code"), col("pos"),
-            (when(col("sx") < 0, -1L).otherwise(1L) *
-              expr("abs(sx) div n")).as("cx"))
-          .groupBy("m", "code")
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-            p => p.getField("cx")).as("cvec")))
-    }
+    for (_ <- 1 to PqIters) cent = pin(lloydStep(tcells, cent, CodeLloyd))
 
     // encode the FULL corpus — the persisted index
-    val codes = stage(assign(cells, cent).select("vec_id", "m", "code"),
+    val codes = stage(argmin(cells, cent, CodeLloyd).select("vec_id", "m", "code"),
       "codes")
     (cent, codes)
   }
@@ -1221,30 +1228,12 @@ object SimilarityQueries {
     k
   }
 
-  /** Nearest coarse cell per quantized vector — broadcast the ≤cells-row
-    * centroid table, ties to the lowest cid (the emb_kmeans struct-min).
-    */
-  private def ivfArgminCell(qv: DataFrame, coarse: DataFrame): DataFrame =
-    qv.crossJoin(broadcast(coarse))
-      .withColumn("dist", distL2(col("q"), col("cvec")))
-      .groupBy("vec_id")
-      .agg(min(struct(col("dist"), col("cid"))).as("mm"))
-      .select(col("vec_id"), col("mm.cid").as("cid"))
-
   /** Per-subspace (vec_id, cid, m, sub) rows of integer residuals. */
   private def ivfResidCells(resid: DataFrame): DataFrame =
     resid.select(col("vec_id"), col("cid"),
         explode(sequence(lit(0), lit(PqM - 1))).as("m"), col("r"))
       .select(col("vec_id"), col("cid"), col("m"),
         slice(col("r"), col("m") * PqSub + 1, lit(PqSub)).as("sub"))
-
-  /** Nearest residual-codebook code per (vec, subspace). */
-  private def ivfArgminCode(cells: DataFrame, rcent: DataFrame): DataFrame =
-    cells.join(broadcast(rcent), "m")
-      .withColumn("dist", distL2(col("sub"), col("cvec")))
-      .groupBy("vec_id", "m")
-      .agg(min(struct(col("dist"), col("code"))).as("mm"))
-      .select(col("vec_id"), col("m"), col("mm.code").as("code"))
 
   /** Encode raw (vec_id, embedding) rows against a FROZEN index —
     * coarse assignment, integer residual, residual-codebook codes. This
@@ -1257,11 +1246,11 @@ object SimilarityQueries {
   private[graft] def ivfpqEncode(vecs: DataFrame, coarse: DataFrame,
                                  rcent: DataFrame): DataFrame = {
     val qv = pqQuantize(vecs)
-    val resid = ivfArgminCell(qv, coarse).join(qv, "vec_id")
+    val resid = argmin(qv, coarse, CellLloyd).join(qv, "vec_id")
       .join(broadcast(coarse), "cid")
       .select(col("vec_id"), col("cid"),
         zip_with(col("q"), col("cvec"), (x, y) => x - y).as("r"))
-    ivfArgminCode(ivfResidCells(resid), rcent)
+    argmin(ivfResidCells(resid), rcent, CodeLloyd)
       .join(resid.select("vec_id", "cid"), "vec_id")
       .select("vec_id", "cid", "m", "code")
   }
@@ -1309,7 +1298,7 @@ object SimilarityQueries {
     val tv = qv.filter(col("vec_id") < PqTrainN)
 
     // coarse k-means over the bounded training sample: nCells cells,
-    // KmIters truncating-div Lloyd's rounds. Init is LABEL-STRATIFIED
+    // KmIters rounds of [[lloydStep]]. Init is LABEL-STRATIFIED
     // hash-ranked seeds — the same de-leaked recipe as the flat-PQ
     // codebooks (round-8 study: lowest-id init draws its seeds from the
     // vec_id order that overlaps the vec_id<PqNQ eval window); cell
@@ -1328,23 +1317,12 @@ object SimilarityQueries {
       tv.join(cseeds, "vec_id")
         .select((row_number().over(Window.orderBy("vec_id")) - 1)
           .cast("long").as("cid"), col("q").as("cvec")), "coarse_0")
-    for (i <- 1 to KmIters) {
-      coarse = stage(
-        ivfArgminCell(tv, coarse).join(tv, "vec_id")
-          .select(col("cid"), posexplode(col("q")).as(Seq("pos", "x")))
-          .groupBy("cid", "pos")
-          .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-          .select(col("cid"), col("pos"),
-            (when(col("sx") < 0, -1L).otherwise(1L) *
-              expr("abs(sx) div n")).as("cx"))
-          .groupBy("cid")
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-            p => p.getField("cx")).as("cvec")), s"coarse_$i")
-    }
+    for (i <- 1 to KmIters)
+      coarse = stage(lloydStep(tv, coarse, CellLloyd), s"coarse_$i")
 
     // full-corpus cell assignment + integer residuals
     val resid = stage(
-      ivfArgminCell(qv, coarse).join(qv, "vec_id")
+      argmin(qv, coarse, CellLloyd).join(qv, "vec_id")
         .join(broadcast(coarse), "cid")
         .select(col("vec_id"), col("cid"),
           zip_with(col("q"), col("cvec"), (x, y) => x - y).as("r")), "resid")
@@ -1354,7 +1332,7 @@ object SimilarityQueries {
 
     // residual codebooks: hash-ranked seed spread over the training
     // residuals (residual space is centered, no strata to cover), then
-    // PqIters Lloyd's rounds — the pqIndex recipe on residuals
+    // PqIters rounds of [[lloydStep]] on the pqIndex codebook columns
     val seeds = resid.filter(col("vec_id") < PqTrainN)
       .select(col("vec_id"),
         md5(concat(lit("ivfpqseed|"), col("vec_id").cast("string"))).as("hs"))
@@ -1364,19 +1342,8 @@ object SimilarityQueries {
         .withColumn("code", (row_number().over(
           Window.partitionBy("m").orderBy("vec_id")) - 1).cast("long"))
         .select(col("m"), col("code"), col("sub").as("cvec")), "rcent_0")
-    for (i <- 1 to PqIters) {
-      rcent = stage(
-        ivfArgminCode(tcells, rcent).join(tcells, Seq("vec_id", "m"))
-          .select(col("m"), col("code"), posexplode(col("sub")).as(Seq("pos", "x")))
-          .groupBy("m", "code", "pos")
-          .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-          .select(col("m"), col("code"), col("pos"),
-            (when(col("sx") < 0, -1L).otherwise(1L) *
-              expr("abs(sx) div n")).as("cx"))
-          .groupBy("m", "code")
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-            p => p.getField("cx")).as("cvec")), s"rcent_$i")
-    }
+    for (i <- 1 to PqIters)
+      rcent = stage(lloydStep(tcells, rcent, CodeLloyd), s"rcent_$i")
 
     // encode the full corpus — (vec_id, cid, PqM codes) IS the index.
     // Staged PARTITIONED BY the coarse cell id: the probe's equi-join on
@@ -1386,7 +1353,7 @@ object SimilarityQueries {
     // every probe and stop being inverted at 100 TB.
     val codes = graft.Scratch.stagedFramePartitioned(
       s, s"ivfpq_codes_$tag", Seq("cid"))(
-      ivfArgminCode(cells, rcent)
+      argmin(cells, rcent, CodeLloyd)
         .join(resid.select("vec_id", "cid"), "vec_id")
         .select("vec_id", "cid", "m", "code"))
     (coarse, rcent, codes)

@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.operators.DailyRevenue
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Third TPC-H wave — the join/subquery shapes the earlier anchors don't
@@ -34,9 +35,6 @@ object TpchMore {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private def moneySum(c: Column, scale: Long): Column =
-    graft.operators.DailyRevenue.sumMoney(c, scale)
-
   // ---- Q7: volume shipping between two nations, by year ----
   def tpchQ7(s: SparkSession, d: String): DataFrame = {
     val nat = Tables.nation(s, d).select("n_nationkey", "n_name")
@@ -59,7 +57,8 @@ object TpchMore {
         || (col("supp_nation") === "NATION_2" && col("cust_nation") === "NATION_1"))
       .groupBy(col("supp_nation"), col("cust_nation"),
         year(col("l_shipdate")).cast("long").as("l_year"))
-      .agg(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")), 1000000L)
+      .agg(DailyRevenue.sumMoney(
+        col("l_extendedprice") * (lit(1) - col("l_discount")), 1000000L)
         .as("revenue"))
       .orderBy("supp_nation", "cust_nation", "l_year")
   }
@@ -95,7 +94,8 @@ object TpchMore {
           .select("o_orderkey", "o_custkey"),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_custkey")
-      .agg(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")), 1000000L)
+      .agg(DailyRevenue.sumMoney(
+        col("l_extendedprice") * (lit(1) - col("l_discount")), 1000000L)
         .as("revenue"))
     Tables.customer(s, d)
       .join(rev, col("c_custkey") === col("o_custkey"))
@@ -168,7 +168,8 @@ object TpchMore {
           && col("l_quantity").between(10, 20))
         || (col("p_brand") === "Brand#3" && col("p_size").between(1, 15)
           && col("l_quantity").between(20, 30)))
-      .agg(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")), 1000000L)
+      .agg(DailyRevenue.sumMoney(
+        col("l_extendedprice") * (lit(1) - col("l_discount")), 1000000L)
         .as("revenue"))
   }
 
@@ -264,7 +265,8 @@ object TpchMore {
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp")
         && col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
       .groupBy("l_suppkey")
-      .agg(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")), 1000000L)
+      .agg(DailyRevenue.sumMoney(
+        col("l_extendedprice") * (lit(1) - col("l_discount")), 1000000L)
         .as("total_revenue"))
     val top = rev.agg(max("total_revenue").as("mx"))
     Tables.supplier(s, d)

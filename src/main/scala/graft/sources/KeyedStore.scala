@@ -264,6 +264,11 @@ object KeyedStore {
     * client writes `base/` there — and returns the per-batch index
     * function. Use a FRESH checkpoint across a rotation: the old
     * sequence's offsets describe batches the rotation already folded in.
+    *
+    * `maxFilesPerTrigger` counts PART FILES, not input directories: a
+    * directory that a k-partition writer wrote can land as up to k
+    * `batch_<id>` dirs, each of which [[serve]] reconciles and
+    * [[compact]] folds.
     */
   private[graft] def ingestStream(s: SparkSession, storeDir: String,
                                   gen: Option[String], inputDir: String,
@@ -282,9 +287,10 @@ object KeyedStore {
           "the store's current generation and with a fresh checkpoint.")
     val ckpt = ckptIdentity(s, checkpointDir)
     val index = setup
-    // input files usually arrive as per-batch DIRECTORIES (a Spark
-    // writer's output); the file source needs the recursive flag to see
-    // their part files (hidden _SUCCESS markers stay filtered)
+    // input usually arrives as per-batch DIRECTORIES (a Spark writer's
+    // output); the file source needs the recursive flag to see their
+    // part files (hidden _SUCCESS markers stay filtered), and it admits
+    // and counts those part files, not the directories
     val reader = s.readStream.schema(inputSchema)
       .option("recursiveFileLookup", "true")
     val input = maxFilesPerTrigger

@@ -86,10 +86,10 @@ object Sinks {
   }
 
   /** Read the current table at `path`, or None when it does not exist
-    * yet. ONLY missing-path analysis errors mean "first write" — any
-    * other failure (corrupt footer, transient IO) must propagate:
-    * swallowing it would make the merge rebuild from the batch alone and
-    * silently drop the table's history.
+    * yet. ONLY a missing path means "first write" — any other failure
+    * (corrupt footer, transient IO) must propagate: swallowing it would
+    * make the merge rebuild from the batch alone and silently drop the
+    * table's history.
     */
   private[graft] def readExisting(spark: SparkSession, path: String,
                                   cols: Seq[String]): Option[DataFrame] =
@@ -103,12 +103,14 @@ object Sinks {
     * fail with an unresolved-column error instead of None).
     */
   private[graft] def readExistingAny(spark: SparkSession,
-                                     path: String): Option[DataFrame] =
-    try Some(spark.read.parquet(path))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-        if e.getErrorClass == "PATH_NOT_FOUND" => None
-    }
+                                     path: String): Option[DataFrame] = {
+    // probe first: a read of a missing path fails only after Spark's
+    // metadata lookup has logged the FileNotFoundException as a WARN
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      Some(spark.read.parquet(path))
+    else None
+  }
 
   /** S5-upsert: idempotent latest-wins upsert by key — the Mongo
     * `UpdateOne(upsert=True)` analogue. Re-running with the same batch

@@ -91,41 +91,24 @@ object Warehouse {
     }
   }
 
-  /** WRITE_TRUNCATE load of one table: overwrite-insert the DDL column
-    * subset positionally — the catalog table's declared schema governs,
-    * exactly like the loader's autodetect=False.
-    */
-  private def truncateLoad(spark: SparkSession, db: String, name: String,
-                           df: DataFrame, cols: Seq[String]): Unit =
-    df.select(cols.map(col): _*)
-      .write.mode("overwrite").insertInto(s"$db.$name")
-
   /** Load all 7 tables with the reference's dispositions
-    * (`src/bq_loader.py:136-142`: WRITE_TRUNCATE with fixed column lists).
+    * (`src/bq_loader.py:136-142`: WRITE_TRUNCATE with fixed column
+    * lists): each frame's [[TableDdl]] columns overwrite-insert
+    * positionally, so the catalog table's declared schema governs,
+    * exactly like the loader's autodetect=False.
     */
   def loadAll(spark: SparkSession, db: String,
               orders: DataFrame, payments: DataFrame, refunds: DataFrame,
               daily: DataFrame, dimCustomer: DataFrame, dimDate: DataFrame,
               dimProduct: DataFrame): Unit = {
-    truncateLoad(spark, db, "fact_orders", orders,
-      Seq("order_id", "customer_id", "vendor", "order_amount",
-        "order_status", "created_at", "event_id"))
-    truncateLoad(spark, db, "fact_payments", payments,
-      Seq("payment_id", "order_id", "vendor", "payment_amount",
-        "payment_status", "payment_method", "payment_date", "event_id"))
-    truncateLoad(spark, db, "fact_refunds", refunds,
-      Seq("refund_id", "order_id", "payment_id", "vendor", "refund_amount",
-        "refund_reason", "refund_type", "refund_date", "event_id"))
-    truncateLoad(spark, db, "fact_order_daily", daily,
-      Seq("order_date", "vendor", "gross_revenue", "total_refunds",
-        "net_revenue", "order_count", "paid_count", "payment_success_rate",
-        "refund_rate"))
-    truncateLoad(spark, db, "dim_date", dimDate,
-      Seq("date_key", "day_of_week", "week_number", "month", "quarter",
-        "year", "is_weekend"))
-    truncateLoad(spark, db, "dim_customer", dimCustomer,
-      Seq("customer_id", "customer_name", "email", "country", "created_at"))
-    truncateLoad(spark, db, "dim_product", dimProduct,
-      Seq("product_id", "product_name", "category", "vendor_id", "unit_price"))
+    val frames = Map("fact_orders" -> orders, "fact_payments" -> payments,
+      "fact_refunds" -> refunds, "fact_order_daily" -> daily,
+      "dim_date" -> dimDate, "dim_customer" -> dimCustomer,
+      "dim_product" -> dimProduct)
+    TableDdl.foreach { case (name, ddl) =>
+      val cols = ddl.linesIterator.map(_.trim.split("\\s+")(0)).toSeq
+      frames(name).select(cols.map(col): _*)
+        .write.mode("overwrite").insertInto(s"$db.$name")
+    }
   }
 }

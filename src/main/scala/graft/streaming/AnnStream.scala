@@ -49,7 +49,8 @@ object AnnStream {
     val reader = s.readStream.schema(VecSchema)
       // query files usually arrive as per-batch DIRECTORIES (a Spark
       // writer's output); the flat file source needs the recursive flag
-      // to see their part files (hidden _SUCCESS markers stay filtered)
+      // to see their part files (hidden _SUCCESS markers stay filtered),
+      // and `maxFilesPerTrigger` counts those part files, not directories
       .option("recursiveFileLookup", "true")
     val queries = maxFilesPerTrigger
       .fold(reader)(n => reader.option("maxFilesPerTrigger", n))

@@ -83,6 +83,17 @@ class MediaStoreSpec extends SparkSuite {
     Media.resizeImages(mediaOf(ids.map(i => (i, bytesById(i))): _*), 32, 32))
     .withColumnRenamed("ahash", "h64")
 
+  /** Land one print batch the way the ingest streams do: the banded
+    * rows through `KeyedStore.landBatch`, unstamped, under one sequence
+    * identity.
+    */
+  private def land(dir: String, hashes: org.apache.spark.sql.DataFrame,
+                   batchId: Long): Unit =
+    graft.sources.KeyedStore.landBatch(spark, dir, batchId, None,
+      "spec_seq") { dst =>
+      Media.band64(hashes).write.mode("overwrite").parquet(dst)
+    }
+
   private def pairSet(df: org.apache.spark.sql.DataFrame) =
     df.select("id_a", "id_b", "hamming").collect().map(_.toSeq).toSet
 
@@ -91,13 +102,13 @@ class MediaStoreSpec extends SparkSuite {
     "over live media") {
     val dir = tempDir("mediastore") + "/prints"
     MediaStore.bootstrap(spark, dir, hashesOf(Seq(1L, 2L, 3L, 4L)))
-    MediaStore.ingest(spark, dir, hashesOf(Seq(5L, 6L)), 0L, "spec_seq")
+    land(dir, hashesOf(Seq(5L, 6L)), 0L)
     MediaStore.compact(spark, dir)
-    MediaStore.ingest(spark, dir, hashesOf(Seq(7L, 8L)), 1L, "spec_seq")
+    land(dir, hashesOf(Seq(7L, 8L)), 1L)
     MediaStore.forget(spark, dir, Seq(3L).toDF("media_id"))
     // the replay: batch_0 re-lands after the fold (watermark excludes it
     // silently — same sequence identity, so it IS a replay)
-    MediaStore.ingest(spark, dir, hashesOf(Seq(5L, 6L)), 0L, "spec_seq")
+    land(dir, hashesOf(Seq(5L, 6L)), 0L)
 
     val live = Seq(1L, 2L, 4L, 5L, 6L, 7L, 8L)
     assert(pairSet(MediaStore.nearDups(spark, dir, maxHamming = 6))
@@ -126,7 +137,7 @@ class MediaStoreSpec extends SparkSuite {
     "replays loudly") {
     val dir = tempDir("mediastore_rot") + "/prints"
     MediaStore.bootstrap(spark, dir, hashesOf(Seq(1L, 2L, 3L, 4L)))
-    MediaStore.ingest(spark, dir, hashesOf(Seq(5L, 6L)), 0L, "spec_seq")
+    land(dir, hashesOf(Seq(5L, 6L)), 0L)
     MediaStore.forget(spark, dir, Seq(4L).toDF("media_id"))
 
     MediaStore.rotate(spark, dir, v2Hashes(Seq(1L, 2L, 3L, 4L, 5L, 6L)),
@@ -140,7 +151,7 @@ class MediaStoreSpec extends SparkSuite {
       .contains("ahash_norm32"))
     // a pre-rotation batch replayed after the swap: prints from the OLD
     // family would share the Hamming space meaninglessly — serve fails
-    MediaStore.ingest(spark, dir, hashesOf(Seq(5L, 6L)), 0L, "spec_seq")
+    land(dir, hashesOf(Seq(5L, 6L)), 0L)
     intercept[IllegalStateException](MediaStore.nearDups(spark, dir, 6))
   }
 

@@ -45,6 +45,35 @@ class SinksSpec extends SparkSuite {
       == "this is not parquet")
   }
 
+  test("a missing table reads as None without a failed read's warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val missing = tempDir("sink_missing") + "/never_written"
+    // every WARN or worse that names the path, from any logger
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("sinks-spec-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val text = e.getMessage.getFormattedMessage +
+          Option(e.getThrown).fold("")(" " + _)
+        if (e.getLevel.isMoreSpecificThan(Level.WARN) &&
+          text.contains("never_written")) seen.add(text)
+      }
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    try assert(Sinks.readExistingAny(spark, missing).isEmpty)
+    finally { root.removeAppender(capture); capture.stop() }
+    assert(seen.isEmpty, seen.toString)
+    // an existing table still reads
+    import spark.implicits._
+    Seq(1L).toDF("k").write.parquet(missing)
+    assert(Sinks.readExistingAny(spark, missing).map(_.count()) === Some(1L))
+  }
+
   test("compaction collapses a small-files directory and preserves content exactly") {
     val out = tempDir("compact_out") + "/ev"
     val src = graft.Tables.events(spark, sf)
