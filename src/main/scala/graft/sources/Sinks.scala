@@ -28,7 +28,7 @@ object Sinks {
     * already-deleted source files. Rename is atomic on HDFS/local FS; on an
     * object store swap this for a transactional table format's commit.
     */
-  private def writeSwap(df: DataFrame, path: String): Unit =
+  private[graft] def writeSwap(df: DataFrame, path: String): Unit =
     writeSwapWith(df.sparkSession, path)(
       tmp => df.write.mode("overwrite").parquet(tmp))
 
@@ -127,28 +127,24 @@ object Sinks {
     writeSwap(merged, path)
   }
 
-  /** Grain-replace merge: delete existing rows whose key tuple is in
-    * `deleteKeys` (defaults to the batch's own key tuples), insert the
-    * batch — `MERGE ... WHEN MATCHED THEN UPDATE/DELETE` for recomputed
-    * aggregates. Unlike `upsertParquet`, incoming rows are authoritative
-    * whole-grain recomputes, not candidate versions to order among; an
-    * explicit `deleteKeys` lets a caller retract grains that recomputed
-    * to empty (no surviving rows to carry the key).
+  /** Key-replace merge: delete existing rows whose key tuple the batch
+    * carries, insert the batch — `MERGE ... WHEN MATCHED THEN UPDATE` for
+    * authoritative rows. Unlike `upsertParquet`, incoming rows are not
+    * candidate versions to order among: every incoming key tuple replaces
+    * all of its existing rows.
     */
   def replaceKeysParquet(spark: SparkSession, batch: DataFrame, path: String,
-                         keys: Seq[String],
-                         deleteKeys: Option[DataFrame] = None): Unit = {
+                         keys: Seq[String]): Unit = {
     import org.apache.spark.sql.functions.col
     val existing = readExisting(spark, path, batch.columns.toSeq)
-    val dk = deleteKeys.getOrElse(batch.select(keys.map(col): _*).distinct())
     val merged = existing match {
       case Some(old) =>
         // null-safe anti join: a name-based join uses plain equality, so
-        // existing rows with a null key column would never match a delete
-        // key and could never be replaced or retracted
-        val dkk = dk.select(keys.map(c => col(c).as(s"__dk_$c")): _*).distinct()
+        // existing rows with a null key column would never match a batch
+        // key and could never be replaced
+        val dk = batch.select(keys.map(c => col(c).as(s"__dk_$c")): _*).distinct()
         val cond = keys.map(c => col(c) <=> col(s"__dk_$c")).reduce(_ && _)
-        old.join(dkk, cond, "left_anti")
+        old.join(dk, cond, "left_anti")
           .unionByName(batch)
       case None => batch
     }

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.normalize.Drift
-import graft.operators.Dedup
 import graft.pipeline.CommercePulse
+import graft.sources.Sinks
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -200,30 +200,30 @@ object EventStream {
       s"o_ref = p_ref AND p_ts >= o_ts AND p_ts <= o_ts + interval $horizon"))
   }
 
-  /** Incremental fact_order_daily refresh — incremental view maintenance:
-    * each micro-batch (1) upserts its events into a durable event store
-    * keyed by event_id (`<outPath>_events`), (2) derives the set of
-    * (order_date, vendor) grains the batch can affect — every grain any
-    * touched order has EVER occupied, so an update that moves an order's
-    * date also retracts its old grain; an order is touched when the batch
-    * names it or names a payment or refund that any stored version ties
-    * to it, so a re-send that moves a payment to another order also
-    * retracts it from the old one, (3) recomputes exactly those grains
-    * from the FULL store with the same library call batch uses, and
-    * (4) grain-replaces them in the fact (retracting grains that
-    * recomputed to empty). Replaying a batch is idempotent end-to-end.
+  /** Streaming fact_order_daily refresh: each non-empty micro-batch
+    * (1) upserts its events into a durable event store keyed by event_id
+    * (`<outPath>_events`, latest `ingested_at` wins), then (2) recomputes
+    * the whole table from the full store with the same library calls as
+    * the batch pipeline and swaps it in over `outPath` (the paper's
+    * truncate-load). The table therefore equals the batch recompute over
+    * every event delivered so far after every batch, by construction:
+    * an update that moves an order's date, or a re-send that moves a
+    * payment or refund to another order, leaves no stale grain behind.
+    * Replaying a batch is idempotent end-to-end: the store upsert
+    * collapses re-delivered event_ids, and the recompute reads only the
+    * store.
     *
-    * Round 1 upserted per-batch partial aggregates with
-    * largest-partial-wins ordering, which permanently undercounted any
-    * grain whose events span micro-batches — partials were never merged.
-    * Scale shape: every batch is still O(history). The store upsert reads
-    * and rewrites the whole store, and the recompute JSON-normalizes the
-    * whole store once per entity (orders, payments, refunds), whatever
-    * the number of touched grains; the filter to those grains comes after
-    * the parse. O(batch) work needs normalized stores keyed by order_id
-    * that the recompute can read by key. A micro-batch with no rows
-    * writes nothing, so a stream that never delivers an event writes no
-    * tables at all: neither the store nor `outPath` exists afterwards.
+    * Scale shape: every batch is O(history). The store upsert reads and
+    * rewrites the whole store, and the recompute JSON-normalizes the
+    * whole store, runs the latest-wins and first-wins windows over every
+    * order, payment and refund, and rewrites the whole table. A touched-
+    * grain merge does not help here: finding and recomputing the touched
+    * grains needs the same full-store parse and windows, and the grain
+    * replace rewrites the whole table too. O(batch) work needs normalized
+    * stores keyed by order_id that a recompute can read by key. A
+    * micro-batch with no rows writes nothing, so a stream that never
+    * delivers an event writes no tables at all: neither the store nor
+    * `outPath` exists afterwards.
     */
   def startDailyRefresh(spark: SparkSession, deduped: DataFrame, outPath: String,
                         checkpoint: String): StreamingQuery =
@@ -233,67 +233,24 @@ object EventStream {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val b = batch.persist()
-        // a batch with no rows — the watermark-only batch that closes an
-        // AvailableNow run — touches no grain: skip the store rewrite and
+        // a batch with no rows, the watermark-only batch that closes an
+        // AvailableNow run, changes nothing: skip the store rewrite and
         // the recompute
-        try if (!b.isEmpty) refreshGrains(spark, b, outPath)
+        try if (!b.isEmpty) refreshDaily(spark, b, outPath)
         finally b.unpersist()
       }
       .start()
 
-  /** One non-empty micro-batch of [[startDailyRefresh]]: steps (1)-(4).
-    * Each entity's JSON in the store is parsed once: the per-version
-    * projections are cached and feed both the touched set and the deduped
-    * entities, and the grain set is cached and feeds both the recompute
-    * and the retraction.
-    */
-  private def refreshGrains(spark: SparkSession, b: DataFrame,
-                            outPath: String): Unit = {
+  /** One non-empty micro-batch of [[startDailyRefresh]]: steps (1)-(2). */
+  private def refreshDaily(spark: SparkSession, b: DataFrame,
+                           outPath: String): Unit = {
     import CommercePulse._
     val store = s"${outPath}_events"
-    graft.sources.Sinks.upsertParquet(spark, b, store,
+    Sinks.upsertParquet(spark, b, store,
       Seq("event_id"), Seq(col("ingested_at").desc_nulls_last))
     val full = spark.read.parquet(store)
-    val orderVersions = normalizeOrdersAll(full).cache()
-    val paymentVersions = normalizePaymentsAll(full).cache()
-    val refundVersions = normalizeRefundsAll(full).cache()
-    def versionsOf(stored: DataFrame, batch: DataFrame, key: String) =
-      stored.join(batch.select(key), Seq(key), "left_semi").select("order_id")
-    // order ids any version of any entity in this batch names, plus every
-    // order a stored version of a re-sent payment or refund names: a
-    // re-send that sorts first moves it to its new order, and the old
-    // order's grain must lose it. A superset of the affected orders is
-    // harmless, every extra grain is recomputed from the full store. Only
-    // semi- and anti-joins read these ids and the grains, so neither is
-    // made distinct here: each distinct is one more shuffle job per batch
-    val touched = normalizeOrdersAll(b).select("order_id")
-      .unionByName(versionsOf(paymentVersions, normalizePaymentsAll(b), "payment_id"))
-      .unionByName(versionsOf(refundVersions, normalizeRefundsAll(b), "refund_id"))
-    // every grain a touched order has ever occupied (pre-dedup view:
-    // includes dates from superseded versions => old grains retract)
-    val grains = orderVersions
-      .join(touched, Seq("order_id"), "left_semi")
-      .select(col("created_at").cast("date").as("order_date"), col("vendor"))
-      .filter(col("order_date").isNotNull)
-      .cache()
-    try {
-      val g = grains
-        .withColumnRenamed("order_date", "__gd").withColumnRenamed("vendor", "__gv")
-      val orders = Dedup.latestWins(orderVersions, Seq("order_id"), OrderLatest)
-      // vendor compares null-safely: live events aren't vendor-defaulted
-      // (only readHistorical coalesces to 'unknown'), and a plain ===
-      // would silently exclude null-vendor grains from the recompute —
-      // they could then never be retracted either
-      val ordersInGrains = orders.join(g,
-        orders("created_at").cast("date") === col("__gd")
-          && (orders("vendor") <=> col("__gv")), "left_semi")
-      val daily = factOrderDaily(ordersInGrains,
-        Dedup.firstWins(paymentVersions, Seq("payment_id"), PaymentFirst),
-        Dedup.firstWins(refundVersions, Seq("refund_id"), RefundFirst))
-      graft.sources.Sinks.replaceKeysParquet(spark, daily, outPath,
-        Seq("order_date", "vendor"), deleteKeys = Some(grains))
-    } finally
-      Seq(grains, orderVersions, paymentVersions, refundVersions).foreach(_.unpersist())
+    Sinks.writeSwap(factOrderDaily(normalizeOrders(full),
+      normalizePayments(full), normalizeRefunds(full)), outPath)
   }
 
   /** Per-order lifecycle state for `orderLifecycle`. */
@@ -731,7 +688,7 @@ object EventStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val orders = CommercePulse.normalizeOrders(batch).persist()
         try if (!orders.isEmpty)
-          graft.sources.Sinks.upsertParquet(spark, orders, outPath,
+          Sinks.upsertParquet(spark, orders, outPath,
             Seq("order_id"), CommercePulse.OrderLatest)
         finally orders.unpersist()
       }

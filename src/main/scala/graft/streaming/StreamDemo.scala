@@ -41,7 +41,7 @@ object StreamDemo {
       EventStream.dedupWithWatermark(EventStream.readLiveStream(spark, in)),
       s"$out/fact_order_daily", cp2)
     dailyQ.awaitTermination(60000)
-    println("[stream-demo] incrementally refreshed fact_order_daily:")
+    println("[stream-demo] refreshed fact_order_daily:")
     spark.read.parquet(s"$out/fact_order_daily").orderBy("order_date").show(false)
     spark.stop()
   }
