@@ -82,11 +82,9 @@ object CommercePulse {
 
   /** Orders normalization WITHOUT the latest-wins collapse — one row per
     * order event version (reference `src/transformer.py:20-41` + live
-    * dialects from `src/live_event_generator.py:38-163`). The incremental
-    * refresher reads this to find every (date, vendor) grain an order has
-    * ever occupied.
+    * dialects from `src/live_event_generator.py:38-163`).
     */
-  def normalizeOrdersAll(events: DataFrame): DataFrame =
+  private def normalizeOrdersAll(events: DataFrame): DataFrame =
     events.filter(col("event_type").isin(OrderTypes: _*))
       .select(
         // "order.id" before "order": vendor_c nests the id under order_created
@@ -115,11 +113,9 @@ object CommercePulse {
     Seq(col("created_at").desc_nulls_last, col("event_id").desc)
 
   /** Payments normalization WITHOUT the first-wins collapse — one row per
-    * payment event version (reference `src/transformer.py:44-89`). The
-    * incremental refresher reads it to find every order a payment has
-    * ever named.
+    * payment event version (reference `src/transformer.py:44-89`).
     */
-  def normalizePaymentsAll(events: DataFrame): DataFrame =
+  private def normalizePaymentsAll(events: DataFrame): DataFrame =
     events.filter(col("event_type").isin(PaymentTypes: _*))
       .select(
         pick("transaction_id", "payment_id", "id", "paymentId", "txRef", "txn")
@@ -162,7 +158,7 @@ object CommercePulse {
     * survive. One row per refund event version, before the first-wins
     * collapse of [[normalizeRefunds]].
     */
-  def normalizeRefundsAll(events: DataFrame): DataFrame =
+  private def normalizeRefundsAll(events: DataFrame): DataFrame =
     events.filter(col("event_type").isin(RefundTypes: _*))
       .select(
         coalesce(pick("refund_id", "id", "transaction_id"),
