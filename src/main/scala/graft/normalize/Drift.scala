@@ -33,9 +33,6 @@ object Drift {
   def jsonCoalesce(jsonCol: Column, paths: Seq[String]): Column =
     coalesce(paths.map(p => get_json_object(jsonCol, s"$$.$p")): _*)
 
-  /** First non-null among candidate columns (drift key fallback). */
-  def coalesceKeys(cols: Seq[Column]): Column = coalesce(cols: _*)
-
   /** Lowercase + bucket payment-status dialects into canonical
     * {failed, success, <passthrough>} (reference `src/transformer.py:66-72`).
     */
@@ -123,8 +120,4 @@ object Drift {
     * stable by construction).
     */
   def md5Id(fields: Seq[Column]): Column = md5(concat_ws("|", fields: _*))
-
-  /** 12-hex-char sha1 prefix id (reference `src/live_event_generator.py:27-29`). */
-  def sha1Id12(fields: Seq[Column]): Column =
-    substring(sha1(concat_ws("|", fields: _*)), 1, 12)
 }

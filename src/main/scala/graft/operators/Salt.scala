@@ -5,17 +5,16 @@ import org.apache.spark.sql.functions._
 
 /** Skew mitigation by key salting.
   *
-  * When one join/group key carries a disproportionate share of rows, a
-  * plain hash shuffle sends that share to one partition and the stage runs
-  * at the speed of its hottest key. Salting fans a hot key out across
-  * `saltBuckets` sub-keys; the price is replicating the other side of the
-  * join `saltBuckets` times (or a second aggregation pass).
+  * When one group key carries a disproportionate share of rows, a plain
+  * hash shuffle sends that share to one partition and the stage runs at
+  * the speed of its hottest key. Salting fans a hot key out across
+  * `saltBuckets` sub-keys; the price is a second aggregation pass.
   *
   * Salt derivation is deterministic — a hash of a high-cardinality column
-  * of the row, not `rand()` — so the operators stay replay-stable and
+  * of the row, not `rand()` — so the operator stays replay-stable and
   * testable. AQE's skew-join handling covers sort-merge joins at runtime;
-  * these helpers cover aggregations and broadcast-averse cases AQE can't
-  * split, and they work with AQE off.
+  * this helper covers the aggregations AQE can't split, and it works with
+  * AQE off.
   */
 object Salt {
 
@@ -30,15 +29,4 @@ object Salt {
       .agg(sum(valueCol).as("__s"), count(lit(1)).as("__c"))
       .groupBy(col(key))
       .agg(sum("__s").as("sum"), sum("__c").cast("long").as("count"))
-
-  /** Skewed inner equi-join: salt the big (skewed) side, replicate the
-    * small side across all salt values, join on (key, salt).
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-                 saltFrom: Column, saltBuckets: Int): DataFrame = {
-    val salted = big.withColumn("__salt", pmod(xxhash64(saltFrom), lit(saltBuckets)))
-    val replicated = small.withColumn("__salt",
-      explode(sequence(lit(0L), lit(saltBuckets - 1L))))
-    salted.join(replicated, Seq(key, "__salt")).drop("__salt")
-  }
 }

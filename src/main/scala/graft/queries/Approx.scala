@@ -7,12 +7,13 @@ import org.apache.spark.sql.functions._
 
 /** Oracle-exact approximate-distinct sketches.
   *
-  * The HLL / quantile / count-min tier in [[graft.operators.Sketches]] is
-  * ScalaTest-verified against error bounds because Spark's HLL buckets
-  * aren't portable. KMV (k-minimum-values) is the sketch that IS portable:
-  * its state is the k smallest values of a uniform hash over the distinct
-  * set, and with md5 as the hash every engine computes the identical
-  * sketch, the identical θ, and therefore the identical estimate —
+  * Spark's built-in HLL sketches (`approx_count_distinct`,
+  * `hll_sketch_agg`) and `approx_percentile` cannot be oracle-checked:
+  * their sketch buckets aren't portable. KMV (k-minimum-values) is the
+  * sketch that IS portable: its state is the k smallest values of a
+  * uniform hash over the distinct set, and with md5 as the hash every
+  * engine computes the identical sketch, the identical θ, and therefore
+  * the identical estimate —
   * approximate in value, exact in reproducibility. That makes it the one
   * distinct-sketch whose full estimation pipeline the DuckDB oracle can
   * certify bit-for-bit, including the set-intersection estimator that HLL

@@ -548,9 +548,9 @@ object Curation {
   // Plan: three passes over orders, each a partial-agg shuffle on the
   // 5-value priority key, with the tiny per-group stats broadcast back —
   // no global sort, no full-column collect. (Exact percentile DOES hold
-  // each group's value multiset in the aggregator; at 100 TB swap in the
-  // t-digest/approx_percentile tier of [[graft.operators.Sketches]] —
-  // this query is the exact-oracle anchor for that trade.)
+  // each group's value multiset in the aggregator; at 100 TB swap in
+  // Spark's built-in `approx_percentile` — this query is the
+  // exact-oracle anchor for that trade.)
   def madOutliers(s: SparkSession, d: String): DataFrame = {
     val cents = Tables.orders(s, d)
       .select(col("o_orderpriority"),

@@ -1228,6 +1228,24 @@ object SimilarityQueries {
     k
   }
 
+  /** Nearest coarse cell and integer residual `q − cvec` of each
+    * quantized (vec_id, q) row: (vec_id, cid, r).
+    */
+  private def ivfResidual(qv: DataFrame, coarse: DataFrame): DataFrame =
+    argmin(qv, coarse, CellLloyd).join(qv, "vec_id")
+      .join(broadcast(coarse), "cid")
+      .select(col("vec_id"), col("cid"),
+        zip_with(col("q"), col("cvec"), (x, y) => x - y).as("r"))
+
+  /** Nearest residual-codebook code of each residual cell, with the
+    * vector's coarse cell joined back: (vec_id, cid, m, code).
+    */
+  private def ivfCodes(cells: DataFrame, rcent: DataFrame,
+                       resid: DataFrame): DataFrame =
+    argmin(cells, rcent, CodeLloyd)
+      .join(resid.select("vec_id", "cid"), "vec_id")
+      .select("vec_id", "cid", "m", "code")
+
   /** Per-subspace (vec_id, cid, m, sub) rows of integer residuals. */
   private def ivfResidCells(resid: DataFrame): DataFrame =
     resid.select(col("vec_id"), col("cid"),
@@ -1245,14 +1263,8 @@ object SimilarityQueries {
     */
   private[graft] def ivfpqEncode(vecs: DataFrame, coarse: DataFrame,
                                  rcent: DataFrame): DataFrame = {
-    val qv = pqQuantize(vecs)
-    val resid = argmin(qv, coarse, CellLloyd).join(qv, "vec_id")
-      .join(broadcast(coarse), "cid")
-      .select(col("vec_id"), col("cid"),
-        zip_with(col("q"), col("cvec"), (x, y) => x - y).as("r"))
-    argmin(ivfResidCells(resid), rcent, CodeLloyd)
-      .join(resid.select("vec_id", "cid"), "vec_id")
-      .select("vec_id", "cid", "m", "code")
+    val resid = ivfResidual(pqQuantize(vecs), coarse)
+    ivfCodes(ivfResidCells(resid), rcent, resid)
   }
 
   /** The persisted IVF-PQ index: (coarse centroids (cid, cvec),
@@ -1321,11 +1333,7 @@ object SimilarityQueries {
       coarse = stage(lloydStep(tv, coarse, CellLloyd), s"coarse_$i")
 
     // full-corpus cell assignment + integer residuals
-    val resid = stage(
-      argmin(qv, coarse, CellLloyd).join(qv, "vec_id")
-        .join(broadcast(coarse), "cid")
-        .select(col("vec_id"), col("cid"),
-          zip_with(col("q"), col("cvec"), (x, y) => x - y).as("r")), "resid")
+    val resid = stage(ivfResidual(qv, coarse), "resid")
 
     val cells = stage(ivfResidCells(resid), "rcells")
     val tcells = cells.filter(col("vec_id") < PqTrainN)
@@ -1352,10 +1360,7 @@ object SimilarityQueries {
     // the layout, "inverted lists" would still read 100% of the codes at
     // every probe and stop being inverted at 100 TB.
     val codes = graft.Scratch.stagedFramePartitioned(
-      s, s"ivfpq_codes_$tag", Seq("cid"))(
-      argmin(cells, rcent, CodeLloyd)
-        .join(resid.select("vec_id", "cid"), "vec_id")
-        .select("vec_id", "cid", "m", "code"))
+      s, s"ivfpq_codes_$tag", Seq("cid"))(ivfCodes(cells, rcent, resid))
     (coarse, rcent, codes)
   }
 

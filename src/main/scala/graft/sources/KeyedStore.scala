@@ -10,13 +10,12 @@ import org.apache.spark.sql.types.StructType
   * one flat `batch_<id>/` per ingested micro-batch, periodically folded
   * into ONE Hive-partitioned layout by [[compact]], with durable
   * right-to-be-forgotten tombstones. Shared by the IVF-PQ code store
-  * (`AnnStream`, key = vec_id, partitioned by cid), the MinHash band
-  * index store (`DocStream`, key = doc_id, partitioned by band) and the
-  * fingerprint store (`MediaStore`/`MediaStream`, key = media_id,
-  * partitioned by band) — one lifecycle, three index families. The
-  * clients supply only their schema and their pure index function: the
-  * stream ingest ([[ingestStream]]), the compaction ([[compact]]) and
-  * the rotation ([[replaceAll]]) are written once, here.
+  * (`AnnStream`, key = vec_id, partitioned by cid) and the MinHash band
+  * index store (`DocStream`, key = doc_id, partitioned by band) — one
+  * lifecycle, two index families. The clients supply only their schema
+  * and their pure index function: the stream ingest ([[ingestStream]]),
+  * the compaction ([[compact]]) and the rotation ([[replaceAll]]) are
+  * written once, here.
   *
   * Invariants the entry points maintain together:
   *  - index rows must be a PURE per-key function of frozen parameters

@@ -162,35 +162,6 @@ object Sinks {
   def writeDatePartitioned(df: DataFrame, path: String, dateCol: String): Unit =
     df.write.mode("overwrite").partitionBy(dateCol).parquet(path)
 
-  /** Small-files compaction — the maintenance pass every streaming or
-    * micro-batch ingest needs: thousands of KB-sized files per partition
-    * turn a 100 TB scan into a file-listing + task-scheduling disaster
-    * (one task per tiny file, footer reads dominating IO). Rewrites the
-    * directory into ceil(rows / maxRecordsPerFile) files via one
-    * round-robin repartition, swapping atomically through `writeSwap`
-    * (safe even though the plan reads the path it replaces; a crash
-    * leaves the previous table recoverable). Flat directories only —
-    * compact date-partitioned layouts one partition directory at a time,
-    * which is also the only granularity that bounds the rewrite at scale;
-    * a maintained keyed store (`base/` + `batch_<id>/` + `col=value/`
-    * dirs, tombstones, markers) compacts through `KeyedStore.compact`.
-    * Returns (files_before, files_after).
-    */
-  def compactParquet(spark: SparkSession, path: String,
-                     maxRecordsPerFile: Long): (Long, Long) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(): Long =
-      fs.listStatus(p).count(s => s.isFile
-        && s.getPath.getName.endsWith(".parquet")).toLong
-    val before = dataFiles()
-    val df = spark.read.parquet(path)
-    val target = math.max(1L,
-      (df.count() + maxRecordsPerFile - 1) / maxRecordsPerFile).toInt
-    writeSwap(df.repartition(target), path)
-    (before, dataFiles())
-  }
-
   /** Bucketed managed tables: co-locates both sides of a recurring
     * equi-join at write time; joins between tables bucketed by the same
     * key and count run with NO shuffle exchange on either side.

@@ -84,8 +84,8 @@ object EventStream {
       .select(col("s.start").as("session_start"), col("s.end").as("session_end"),
         col("vendor"), col("n_events"))
 
-  /** Approximate distinct order refs per 1-day window — the sketch tier
-    * (see `operators/Sketches`) composed with streaming: state per
+  /** Approximate distinct order refs per 1-day window — Spark's built-in
+    * HLL sketch (`hll_sketch_agg`) composed with streaming: state per
     * window is ONE ~4 KB HLL sketch instead of a distinct-ref set, so a
     * window touching 10⁸ orders holds the same state as one touching
     * 10³, and the sketch buffer merges across micro-batches like any

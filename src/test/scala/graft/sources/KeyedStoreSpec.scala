@@ -9,7 +9,8 @@ import org.apache.spark.sql.types._
   * set — the round-10 unbounded-broadcast finding), the pre-horizon
   * replay that must STAY guarded, cross-batch key re-sends (latest batch
   * wins wholesale), serving an emptied store, bounded file sizes for hot
-  * partitions, and a micro-batch landing mid-compaction.
+  * partitions, a micro-batch landing mid-compaction, and the stream
+  * ingest's restart and rotation refusals.
   */
 class KeyedStoreSpec extends SparkSuite {
   import spark.implicits._
@@ -33,6 +34,30 @@ class KeyedStoreSpec extends SparkSuite {
   private def tombCount(dir: String): Long =
     Sinks.readExisting(spark, s"$dir/_tombstones", Seq("id"))
       .map(_.count()).getOrElse(0L)
+
+  /** Land (id, v) input rows under `in` as one file-source input dir. */
+  private def arrive(in: String, name: String, ids: Seq[Long], v: Long): Unit =
+    rows(ids, v).select("id", "v").coalesce(1).write.parquet(s"$in/$name")
+
+  /** Stream `in` into the store through [[KeyedStore.ingestStream]] with
+    * the trivial index function (the keyed row itself), run to the end
+    * of the available input, and stop.
+    */
+  private def ingestAll(in: String, dir: String, gen: Option[String],
+                        ckpt: String): Unit = {
+    val q = startIngest(in, dir, gen, Some(ckpt))
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  private def startIngest(in: String, dir: String, gen: Option[String],
+                          ckpt: Option[String]) =
+    KeyedStore.ingestStream(spark, dir, gen, in, "id BIGINT, v BIGINT",
+      Some(1), ckpt)(_.select(col("id"), (col("id") % 3).as("part"),
+        col("v")))
+
+  private def batchDirs(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.isDirectory && f.getName.startsWith("batch_"))
 
   test("a post-horizon tombstone retires at compact, and the forgotten " +
     "key still never resurfaces") {
@@ -394,6 +419,58 @@ class KeyedStoreSpec extends SparkSuite {
     assert(tombCount(dir) == 1,
       "stamped tombstone retires; the legacy backfill must not")
     assert(servedIds(dir) == ((0L to 9L).toSet -- Set(3L, 4L)))
+  }
+
+  test("a stream restarted with its checkpoint dir wiped, on a compacted " +
+    "store, fails serve LOUDLY instead of swallowing the re-sent batches") {
+    val dir = newStore()
+    val in = tempDir("kstore_in")
+    val ckpt = tempDir("kstore_ck") + "/ck"
+    rows(0L to 4L, 1).write.parquet(s"$dir/base")
+    arrive(in, "p0", Seq(5L, 6L), 1)
+    arrive(in, "p1", Seq(7L, 8L), 1)
+    ingestAll(in, dir, None, ckpt)
+    assert(servedIds(dir) == (0L to 8L).toSet)
+    KeyedStore.compact(spark, dir, Seq("part"), schema, "id")
+    assert(servedIds(dir) == (0L to 8L).toSet)
+    // wipe the checkpoint and restart at the same path: batch ids restart
+    // at 0 under a new checkpoint identity, below the fold's watermark
+    new scala.reflect.io.Directory(new java.io.File(ckpt)).deleteRecursively()
+    arrive(in, "p2", Seq(9L), 2)
+    ingestAll(in, dir, None, ckpt)
+    val e = intercept[IllegalStateException](serve(dir))
+    assert(e.getMessage.contains("fresh-checkpoint ingest restarted"),
+      e.getMessage)
+  }
+
+  test("rotation drill through ingestStream: the bootstrap stream refuses " +
+    "a rotated store naming its generation and lands nothing; resumed " +
+    "batches carry the store's generation") {
+    val dir = newStore()
+    val in = tempDir("kstore_rot_in")
+    rows(0L to 4L, 1).write.parquet(s"$dir/base")
+    KeyedStore.forget(spark, dir, "id", Seq(4L).toDF("id"))
+    KeyedStore.replaceAll(spark, dir, Seq("part"), schema, "id", "g2")(
+      live => rows(0L to 4L, 2).join(live, Seq("id"), "left_semi"))
+    // a bootstrap (unstamped) stream would land rows encoded under the
+    // retired parameters: it refuses at definition, naming the store's
+    // generation
+    val boot = intercept[IllegalStateException](
+      startIngest(in, dir, None, None))
+    assert(boot.getMessage.contains("'g2'"), boot.getMessage)
+    // a resume stream under another generation refuses the same way
+    intercept[IllegalStateException](
+      startIngest(in, dir, Some("g1"), None))
+    assert(batchDirs(dir).isEmpty, "a refused definition must land nothing")
+
+    arrive(in, "p0", Seq(5L, 6L), 3)
+    arrive(in, "p1", Seq(7L), 3)
+    ingestAll(in, dir, Some("g2"), tempDir("kstore_rot_ck") + "/ck")
+    assert(batchDirs(dir).nonEmpty && batchDirs(dir).forall { d =>
+        val g = new java.io.File(d, "_gen")
+        g.isFile && java.nio.file.Files.readString(g.toPath).trim == "g2"
+      }, "every resumed batch dir must carry the store's generation")
+    assert(servedIds(dir) == Set(0L, 1L, 2L, 3L, 5L, 6L, 7L))
   }
 
   test("ckptIdentity follows checkpoint CONTENT, not path: a wiped-and-" +

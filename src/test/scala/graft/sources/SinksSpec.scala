@@ -74,23 +74,6 @@ class SinksSpec extends SparkSuite {
     assert(Sinks.readExistingAny(spark, missing).map(_.count()) === Some(1L))
   }
 
-  test("compaction collapses a small-files directory and preserves content exactly") {
-    val out = tempDir("compact_out") + "/ev"
-    val src = graft.Tables.events(spark, sf)
-      .select("event_id", "user_id", "value")
-    src.repartition(64).write.parquet(out) // the streaming-ingest disease
-    val rowsBefore = spark.read.parquet(out).count()
-    val sumBefore = spark.read.parquet(out)
-      .agg(sum("event_id")).collect()(0).getLong(0)
-
-    val (before, after) = Sinks.compactParquet(spark, out, rowsBefore / 2 + 1)
-    assert(before >= 60, s"expected ~64 small files, saw $before")
-    assert(after <= 2, s"expected <= 2 compacted files, saw $after")
-    val compacted = spark.read.parquet(out)
-    assert(compacted.count() == rowsBefore)
-    assert(compacted.agg(sum("event_id")).collect()(0).getLong(0) == sumBefore)
-  }
-
   test("joins between same-bucketed tables run without a shuffle exchange") {
     val o = graft.Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")
     val l = graft.Tables.lineitem(spark, sf).select("l_orderkey", "l_extendedprice")
