@@ -117,9 +117,9 @@ object DocStream {
   // The dedup index family gets the SAME maintained-store lifecycle as
   // the ANN code store (graft.sources.KeyedStore; AnnStream is the other
   // client): band-index rows are a pure per-document function of the
-  // fixed hash family, so streamed appends
-  // ≡ one-pass rebuild, replayed batches re-land identical rows, and
-  // right-to-forget has TRUE rebuild parity.
+  // fixed hash family, so streamed appends ≡ one-pass rebuild, replayed
+  // batches re-land identical rows, and right-to-forget has TRUE rebuild
+  // parity.
 
   private val DocSchema = "doc_id BIGINT, text STRING"
 
