@@ -2,6 +2,7 @@ package graft.normalize
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Schema-drift normalization: pure Column-expression builders.
   *
@@ -13,25 +14,35 @@ import org.apache.spark.sql.functions._
   * deterministic ids by hashing natural keys
   * (`src/bootstrap_loader.py:22-24,43`, `src/live_event_generator.py:27-29`).
   *
-  * Everything here is a built-in Catalyst expression — no UDFs — so the
-  * whole normalization layer stays inside whole-stage codegen and is
+  * Everything here is a Catalyst expression — built-in, or the native
+  * payload kernel ([[PayloadKernel]]) — no UDFs, so the whole
+  * normalization layer stays inside whole-stage codegen and is
   * pushdown/pruning-transparent at any scale.
   */
 object Drift {
 
-  /** First non-null among candidate JSON paths of a JSON-string column.
+  /** First non-null among candidate JSON paths of a JSON-string column,
+    * exactly as `coalesce(get_json_object(json, '$.p1'), …)` returns it.
     * Null-only semantics (SQL COALESCE), deliberately NOT Python-falsy
     * (SURVEY §2.10.4): empty string / 0 are real values here.
     *
-    * Negative result, measured at the 100× SF: rewriting this as ONE
-    * `from_json` over a struct of all candidate keys is 30% SLOWER
-    * (8.8 s → 11.3 s on `p4_drift_coalesce`) — OptimizeJsonExprs prunes
-    * the schema per extracted field, splitting the "single" parse back
-    * into N full Jackson parses, each costlier than get_json_object's
-    * streaming path matcher. The chained form stays.
+    * The one-group case of [[PayloadKernel]]: the payload is tokenized
+    * once for all candidates, where the `get_json_object` chain parsed it
+    * once per candidate through a fresh `Reader`. (A single `from_json`
+    * over a struct of every key was measured 30 % slower than that chain:
+    * `OptimizeJsonExprs` prunes its schema per extracted field and splits
+    * it back into one parse per field.)
     */
   def jsonCoalesce(jsonCol: Column, paths: Seq[String]): Column =
-    coalesce(paths.map(p => get_json_object(jsonCol, s"$$.$p")): _*)
+    Bridge.column(JsonCoalesce(Bridge.expression(jsonCol), paths))
+
+  /** Several [[jsonCoalesce]] groups from ONE pass over the payload: a
+    * generator column, one string column per `(name, paths)` entry, for
+    * `select(…)`. Use it where a row needs more than one payload field.
+    */
+  def jsonFields(jsonCol: Column, fields: Seq[(String, Seq[String])]): Column =
+    Bridge.column(JsonFields(Bridge.expression(jsonCol), fields.map(_._2)))
+      .as(fields.map(_._1))
 
   /** Lowercase + bucket payment-status dialects into canonical
     * {failed, success, <passthrough>} (reference `src/transformer.py:66-72`).

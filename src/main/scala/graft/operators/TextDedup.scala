@@ -213,19 +213,6 @@ object TextDedup {
     kept.unionByName(bIdx)
   }
 
-  /** Right-to-be-forgotten pass over a persisted [[minhashBandIndex]]:
-    * drop every index row of the given doc_ids (broadcast anti-join —
-    * delete sets are small at any corpus scale). Index rows are pure
-    * per-document functions, so the result is ROW-IDENTICAL to
-    * rebuilding the index over corpus ∖ deleted — true rebuild parity,
-    * spec-asserted (AnnMaintenanceSpec) — and a forgotten document can
-    * never surface as anyone's near-dup match again.
-    */
-  def deleteFromBandIndex(corpusIndex: DataFrame,
-                          deleteIds: DataFrame): DataFrame =
-    corpusIndex.join(broadcast(deleteIds.select("doc_id").distinct()),
-      Seq("doc_id"), "left_anti")
-
   /** Incremental ingest dedup: match a NEW batch of documents against an
     * existing corpus' precomputed [[minhashBandIndex]] without touching
     * corpus text. Only the batch is tokenized/signed (linear in batch
@@ -962,8 +949,8 @@ object TextDedup {
     * label table around a forget set. Returns (passthrough, members,
     * scratch) where `passthrough` is the labels of UNTOUCHED clusters
     * (no forgotten member — their components, and therefore their min
-    * labels, cannot change) and `members` is the staged live membership
-    * of AFFECTED clusters (bounded by the affected clusters' total size,
+    * labels, cannot change) and `members` is the live membership of
+    * AFFECTED clusters (bounded by the affected clusters' total size,
     * which a delete-set of size f bounds by f × max cluster size — the
     * recurring GDPR batch, never the corpus).
     *
@@ -974,8 +961,7 @@ object TextDedup {
     * doctrine. The affected set is staged to scratch (two consuming
     * actions); the forget set rides as an explicit broadcast.
     */
-  private def splitAffected(labels: DataFrame, forget: DataFrame,
-                            stageMembers: Boolean = true)
+  private def splitAffected(labels: DataFrame, forget: DataFrame)
       : (DataFrame, DataFrame, String) = {
     val spark = labels.sparkSession
     val scratch = graft.Scratch.dir(spark, "graft_ccdel_")
@@ -990,59 +976,14 @@ object TextDedup {
     val affected = graft.Scratch.writeRead(
       labels.join(f, Seq("doc_id"), "left_semi")
         .select("cluster_id").distinct(), s"$scratch/affected")
-    // `stageMembers = false` (optimization r15, §2.4 fewer barriers):
-    // the KEYED delete path consumes members in exactly ONE action (the
-    // generator-slice staging write), so the lazy projection evaluates
-    // inside that write and the members write barrier disappears; the
-    // PAIRS path keeps the stage (two consuming actions — the mini-CC
-    // canonical write and the final relabel both read it).
-    val membersPlan = labels.join(affected, Seq("cluster_id"), "left_semi")
+    // members stays lazy (optimization r15, §2.4 fewer barriers): the
+    // delete pass consumes it in exactly ONE action (the generator-slice
+    // staging write), so the projection evaluates inside that write
+    val members = labels.join(affected, Seq("cluster_id"), "left_semi")
       .join(f, Seq("doc_id"), "left_anti")
-    val members =
-      if (stageMembers) graft.Scratch.writeRead(membersPlan, s"$scratch/members")
-      else membersPlan
     val passthrough = labels.join(affected, Seq("cluster_id"), "left_anti")
       .select("doc_id", "cluster_id")
     (passthrough, members, scratch)
-  }
-
-  /** Right-to-forget through persisted component labels, for graphs
-    * whose edges are INTRINSIC pairwise relations (a banded near-dup
-    * match between two specific documents stays true when a third is
-    * deleted) — the delete twin of [[foldIntoComponents]]. Deleting a
-    * doc can SPLIT its component (its edges may have been the only
-    * bridge), so no per-row relabel is correct; instead components are
-    * recomputed ONLY for affected clusters: retained edges are the pair
-    * rows with both endpoints live (an edge never crosses clusters, so
-    * membership of one endpoint in the affected live set already implies
-    * the edge belongs to an affected cluster), a mini-CC over that
-    * batch-bounded edge set re-derives the live structure, and untouched
-    * clusters pass through untouched. A live member left with no edge
-    * keeps its own id as a singleton (every node in the label table is a
-    * node of the graph).
-    *
-    * Cost ∝ affected clusters, never corpus: the pair list is scanned
-    * once through two broadcast semi-joins (persist it partitioned by
-    * cluster and the scan itself prunes), the label table three linear
-    * passes ([[splitAffected]]), and the CC rounds run over the affected
-    * clusters' edges only. Exactness vs a full recompute over live pairs
-    * is spec-asserted including the bridge-split case (CcDeleteSpec).
-    */
-  def deleteFromComponentsPairs(labels: DataFrame, pairs: DataFrame,
-                                forget: DataFrame): DataFrame = {
-    val (passthrough, members, _) = splitAffected(labels, forget)
-    val m = members.select("doc_id")
-    val live = pairs
-      .join(m.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_semi")
-      .join(m.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_semi")
-      .select("doc_a", "doc_b")
-    val mini = ccOverEdges(live)
-      .withColumnRenamed("cluster_id", "new_cid")
-    val relabeled = members.select("doc_id")
-      .join(mini, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("new_cid"), col("doc_id")).as("cluster_id"))
-    passthrough.unionByName(relabeled)
   }
 
   /** Right-to-forget for KEY-GENERATED graphs (`dd_cluster`'s shape:
@@ -1069,8 +1010,7 @@ object TextDedup {
   def deleteFromComponentsKeyed(labels: DataFrame, keyed: DataFrame,
                                 forget: DataFrame): DataFrame = {
     // members rides lazy — its one consumer is the km staging write below
-    val (passthrough, members, scratch) =
-      splitAffected(labels, forget, stageMembers = false)
+    val (passthrough, members, scratch) = splitAffected(labels, forget)
     val spark = labels.sparkSession
     // the generator slice: key rows of live affected members only — on a
     // persisted key table partitioned by id range this read prunes to

@@ -12,9 +12,10 @@ import org.apache.spark.sql.types._
   * `src/quality_report.py`), re-architected as lazy DataFrame DAGs.
   *
   * The raw-event envelope keeps `payload` as a JSON string (schema-drift
-  * tolerant — SURVEY §1.4); every normalization is a `get_json_object`
-  * coalesce chain, so the whole normalize layer is projection-only and
-  * scales as a map-side pass. The Mongo upsert store is replaced by
+  * tolerant — SURVEY §1.4); each normalizer reads every payload field it
+  * needs in ONE pass over the JSON (`Drift.jsonFields`, a first-non-null
+  * coalesce per field over its drift keys), so the whole normalize layer
+  * is projection-only and scales as a map-side pass. The Mongo upsert store is replaced by
   * window dedup on `event_id` (SURVEY §2.3).
   */
 object CommercePulse {
@@ -77,27 +78,36 @@ object CommercePulse {
       tiebreak = Seq(col("event_time").desc_nulls_last))
   }
 
-  private def pick(paths: String*): org.apache.spark.sql.Column =
-    Drift.jsonCoalesce(col("payload"), paths)
+  /** `keep` plus one column per `(name, drift keys)` field of the
+    * payload, all read in one pass over the JSON.
+    */
+  private def payloadFields(events: DataFrame, keep: Seq[String],
+                            fields: Seq[(String, Seq[String])]): DataFrame =
+    events.select(keep.map(col) :+ Drift.jsonFields(col("payload"), fields): _*)
+
+  // order payload fields, each the first non-null of its drift keys
+  val OrderFields: Seq[(String, Seq[String])] = Seq(
+    // "order.id" before "order": vendor_c nests the id under order_created
+    // but sends a plain "order": "ORD-…" scalar on updates/payments
+    "order_id" -> Seq("order_id", "orderRef", "order.id", "orderId", "order"),
+    "customer_id" -> Seq("customer_id", "customerId", "customer.email",
+      "buyer.email", "buyerEmail", "email"),
+    "amount" -> Seq("total", "totalAmount", "amount", "order_amount"),
+    "status" -> Seq("state", "status", "order_status"),
+    "created" -> Seq("created_at", "created", "order.ts"))
 
   /** Orders normalization WITHOUT the latest-wins collapse — one row per
     * order event version (reference `src/transformer.py:20-41` + live
     * dialects from `src/live_event_generator.py:38-163`).
     */
   private def normalizeOrdersAll(events: DataFrame): DataFrame =
-    events.filter(col("event_type").isin(OrderTypes: _*))
+    payloadFields(events.filter(col("event_type").isin(OrderTypes: _*)),
+        Seq("vendor", "event_time", "event_id"), OrderFields)
       .select(
-        // "order.id" before "order": vendor_c nests the id under order_created
-        // but sends a plain "order": "ORD-…" scalar on updates/payments
-        pick("order_id", "orderRef", "order.id", "orderId", "order").as("order_id"),
-        pick("customer_id", "customerId", "customer.email", "buyer.email",
-          "buyerEmail", "email").as("customer_id"),
-        col("vendor"),
-        Drift.toDoubleOrZero(pick("total", "totalAmount", "amount", "order_amount"))
-          .as("order_amount"),
-        lower(pick("state", "status", "order_status")).as("order_status"),
-        Drift.parseTimestampMulti(
-          coalesce(pick("created_at", "created", "order.ts"), col("event_time")))
+        col("order_id"), col("customer_id"), col("vendor"),
+        Drift.toDoubleOrZero(col("amount")).as("order_amount"),
+        lower(col("status")).as("order_status"),
+        Drift.parseTimestampMulti(coalesce(col("created"), col("event_time")))
           .as("created_at"),
         col("event_id"))
       .filter(col("order_id").isNotNull)
@@ -112,24 +122,31 @@ object CommercePulse {
   val OrderLatest: Seq[Column] =
     Seq(col("created_at").desc_nulls_last, col("event_id").desc)
 
+  // payment payload fields, each the first non-null of its drift keys
+  val PaymentFields: Seq[(String, Seq[String])] = Seq(
+    "payment_id" -> Seq("transaction_id", "payment_id", "id", "paymentId",
+      "txRef", "txn"),
+    "order_id" -> Seq("order_id", "orderId", "orderRef", "order.id", "order"),
+    "amount" -> Seq("amountPaid", "amount_paid", "amount", "payment_amount",
+      "totalAmount", "amt"),
+    "status" -> Seq("payment_status", "status", "state", "payment_state"),
+    "method" -> Seq("channel", "method", "payment_method", "paymentMethod"),
+    "paid" -> Seq("paid_at", "paidAt", "payment_date", "created_at",
+      "timestamp", "ts"))
+
   /** Payments normalization WITHOUT the first-wins collapse — one row per
     * payment event version (reference `src/transformer.py:44-89`).
     */
   private def normalizePaymentsAll(events: DataFrame): DataFrame =
-    events.filter(col("event_type").isin(PaymentTypes: _*))
+    payloadFields(events.filter(col("event_type").isin(PaymentTypes: _*)),
+        Seq("vendor", "event_time", "event_id"), PaymentFields)
       .select(
-        pick("transaction_id", "payment_id", "id", "paymentId", "txRef", "txn")
-          .as("payment_id"),
-        pick("order_id", "orderId", "orderRef", "order.id", "order").as("order_id"),
-        col("vendor"),
-        Drift.toDoubleOrZero(pick("amountPaid", "amount_paid", "amount",
-          "payment_amount", "totalAmount", "amt")).as("payment_amount"),
-        Drift.normalizeStatus(pick("payment_status", "status", "state", "payment_state"))
-          .as("payment_status"),
-        pick("channel", "method", "payment_method", "paymentMethod").as("payment_method"),
-        Drift.parseTimestampMulti(
-          coalesce(pick("paid_at", "paidAt", "payment_date", "created_at", "timestamp", "ts"),
-            col("event_time"))).as("payment_date"),
+        col("payment_id"), col("order_id"), col("vendor"),
+        Drift.toDoubleOrZero(col("amount")).as("payment_amount"),
+        Drift.normalizeStatus(col("status")).as("payment_status"),
+        col("method").as("payment_method"),
+        Drift.parseTimestampMulti(coalesce(col("paid"), col("event_time")))
+          .as("payment_date"),
         col("event_id"))
       .filter(col("payment_id").isNotNull)
 
@@ -147,6 +164,18 @@ object CommercePulse {
   val RefundFirst: Seq[Column] =
     Seq(col("refund_date").asc_nulls_last, col("event_id").asc)
 
+  // refund payload fields, each the first non-null of its drift keys
+  val RefundFields: Seq[(String, Seq[String])] = Seq(
+    "refund_id" -> Seq("refund_id", "id", "transaction_id"),
+    "order_id" -> Seq("order_id", "orderId", "orderRef", "order.id", "order"),
+    "payment_id" -> Seq("payment_id", "paymentId", "transaction_id"),
+    "amount" -> Seq("amountRefunded", "amount", "refund_amount", "refundAmount",
+      "totalAmount", "amt"),
+    "reason" -> Seq("reason", "refund_reason"),
+    "type" -> Seq("type", "refund_type"),
+    "refunded" -> Seq("refunded_at", "refundedAt", "refund_date", "created_at",
+      "ts"))
+
   /** Refunds normalization (reference `src/transformer.py:92-127`).
     * Live refund payloads carry NO id field (every dialect in
     * `src/live_event_generator.py:67-76,107-115,143-151` omits one); the
@@ -159,20 +188,16 @@ object CommercePulse {
     * collapse of [[normalizeRefunds]].
     */
   private def normalizeRefundsAll(events: DataFrame): DataFrame =
-    events.filter(col("event_type").isin(RefundTypes: _*))
+    payloadFields(events.filter(col("event_type").isin(RefundTypes: _*)),
+        Seq("vendor", "event_time", "event_id"), RefundFields)
       .select(
-        coalesce(pick("refund_id", "id", "transaction_id"),
-          concat(lit("RF-"), md5(col("event_id")))).as("refund_id"),
-        pick("order_id", "orderId", "orderRef", "order.id", "order").as("order_id"),
-        pick("payment_id", "paymentId", "transaction_id").as("payment_id"),
-        col("vendor"),
-        Drift.toDoubleOrZero(pick("amountRefunded", "amount", "refund_amount",
-          "refundAmount", "totalAmount", "amt")).as("refund_amount"),
-        pick("reason", "refund_reason").as("refund_reason"),
-        pick("type", "refund_type").as("refund_type"),
-        Drift.parseTimestampMulti(
-          coalesce(pick("refunded_at", "refundedAt", "refund_date", "created_at", "ts"),
-            col("event_time"))).as("refund_date"),
+        coalesce(col("refund_id"), concat(lit("RF-"), md5(col("event_id"))))
+          .as("refund_id"),
+        col("order_id"), col("payment_id"), col("vendor"),
+        Drift.toDoubleOrZero(col("amount")).as("refund_amount"),
+        col("reason").as("refund_reason"), col("type").as("refund_type"),
+        Drift.parseTimestampMulti(coalesce(col("refunded"), col("event_time")))
+          .as("refund_date"),
         col("event_id"))
       .filter(col("refund_id").isNotNull)
 
@@ -197,6 +222,27 @@ object CommercePulse {
   val StrictRefundTypes: Seq[String] =
     Seq("historical_refund", "refund_created", "refund_processed")
 
+  // the exact payload keys the reference reads, one group per column
+  val StrictOrderFields: Seq[(String, Seq[String])] = Seq(
+    "order_id" -> Seq("order_id"), "customer_id" -> Seq("customerId"),
+    "amount" -> Seq("totalAmount"), "status" -> Seq("state"),
+    "created" -> Seq("created_at"))
+  val StrictPaymentFields: Seq[(String, Seq[String])] = Seq(
+    "payment_id" -> Seq("transaction_id", "payment_id", "id", "paymentId"),
+    "order_id" -> Seq("order_id", "orderId"),
+    "amount" -> Seq("amountPaid", "amount", "payment_amount", "totalAmount"),
+    "status" -> Seq("payment_status", "status", "state"),
+    "method" -> Seq("channel", "method", "payment_method"),
+    "paid" -> Seq("paid_at", "payment_date", "created_at"))
+  val StrictRefundFields: Seq[(String, Seq[String])] = Seq(
+    "refund_id" -> Seq("refund_id", "id", "transaction_id"),
+    "order_id" -> Seq("order_id", "orderId"),
+    "payment_id" -> Seq("payment_id", "paymentId", "transaction_id"),
+    "amount" -> Seq("amountRefunded", "amount", "refund_amount", "totalAmount"),
+    "reason" -> Seq("reason", "refund_reason"),
+    "type" -> Seq("type", "refund_type"),
+    "refunded" -> Seq("refunded_at", "refund_date", "created_at"))
+
   /** Live JSONL read that preserves ingestion order as a `_seq` column.
     * The reference's Mongo fetch returns insertion (= file) order and the
     * strict dedups tie-break on it; `coalesce(1)` serializes the read so
@@ -206,12 +252,9 @@ object CommercePulse {
   def readLiveOrdered(spark: SparkSession, path: String): DataFrame =
     spark.read.text(path).coalesce(1)
       .select(monotonically_increasing_id().as("_seq"),
-        get_json_object(col("value"), "$.event_id").as("event_id"),
-        get_json_object(col("value"), "$.event_type").as("event_type"),
-        get_json_object(col("value"), "$.event_time").as("event_time"),
-        get_json_object(col("value"), "$.vendor").as("vendor"),
-        get_json_object(col("value"), "$.payload").as("payload"),
-        get_json_object(col("value"), "$.ingested_at").as("ingested_at"))
+        Drift.jsonFields(col("value"),
+          Seq("event_id", "event_type", "event_time", "vendor", "payload",
+            "ingested_at").map(f => f -> Seq(f))))
       .filter(col("event_id").isNotNull)
 
   /** Strict orders normalization (`src/transformer.py:20-41`): exact keys
@@ -221,13 +264,13 @@ object CommercePulse {
     * (created_at desc_nulls_last, _seq desc). Input must carry `_seq`.
     */
   def normalizeOrdersStrict(events: DataFrame): DataFrame = {
-    val base = events.filter(col("event_type").isin(StrictOrderTypes: _*))
+    val base = payloadFields(events.filter(col("event_type").isin(StrictOrderTypes: _*)),
+        Seq("event_id", "vendor", "event_type", "_seq"), StrictOrderFields)
       .select(
-        pick("order_id").as("order_id"),
-        pick("customerId").as("customer_id"),
-        Drift.toDoubleOrZero(pick("totalAmount")).as("order_amount"),
-        pick("state").as("order_status"),
-        Drift.parseTimestampMulti(pick("created_at")).as("created_at"),
+        col("order_id"), col("customer_id"),
+        Drift.toDoubleOrZero(col("amount")).as("order_amount"),
+        col("status").as("order_status"),
+        Drift.parseTimestampMulti(col("created")).as("created_at"),
         col("event_id"), col("vendor"), col("event_type"), col("_seq"))
     Dedup.latestWins(base, Seq("order_id"),
       Seq(col("created_at").desc_nulls_last, col("_seq").desc))
@@ -238,34 +281,27 @@ object CommercePulse {
     * drop_duplicates(keep first by ingestion order) per payment_id.
     */
   def normalizePaymentsStrict(events: DataFrame): DataFrame = {
-    val base = events.filter(col("event_type").isin(StrictPaymentTypes: _*))
+    val base = payloadFields(events.filter(col("event_type").isin(StrictPaymentTypes: _*)),
+        Seq("event_id", "vendor", "_seq"), StrictPaymentFields)
       .select(
-        pick("transaction_id", "payment_id", "id", "paymentId").as("payment_id"),
-        pick("order_id", "orderId").as("order_id"),
-        Drift.toDoubleOrZero(pick("amountPaid", "amount", "payment_amount",
-          "totalAmount")).as("payment_amount"),
-        Drift.normalizeStatus(pick("payment_status", "status", "state"))
-          .as("payment_status"),
-        pick("channel", "method", "payment_method").as("payment_method"),
-        Drift.parseTimestampMulti(pick("paid_at", "payment_date", "created_at"))
-          .as("payment_date"),
+        col("payment_id"), col("order_id"),
+        Drift.toDoubleOrZero(col("amount")).as("payment_amount"),
+        Drift.normalizeStatus(col("status")).as("payment_status"),
+        col("method").as("payment_method"),
+        Drift.parseTimestampMulti(col("paid")).as("payment_date"),
         col("event_id"), col("vendor"), col("_seq"))
     Dedup.firstWins(base, Seq("payment_id"), Seq(col("_seq").asc)).drop("_seq")
   }
 
   /** Strict refunds normalization (`src/transformer.py:92-127`). */
   def normalizeRefundsStrict(events: DataFrame): DataFrame = {
-    val base = events.filter(col("event_type").isin(StrictRefundTypes: _*))
+    val base = payloadFields(events.filter(col("event_type").isin(StrictRefundTypes: _*)),
+        Seq("event_id", "vendor", "_seq"), StrictRefundFields)
       .select(
-        pick("refund_id", "id", "transaction_id").as("refund_id"),
-        pick("order_id", "orderId").as("order_id"),
-        pick("payment_id", "paymentId", "transaction_id").as("payment_id"),
-        Drift.toDoubleOrZero(pick("amountRefunded", "amount", "refund_amount",
-          "totalAmount")).as("refund_amount"),
-        pick("reason", "refund_reason").as("refund_reason"),
-        pick("type", "refund_type").as("refund_type"),
-        Drift.parseTimestampMulti(pick("refunded_at", "refund_date", "created_at"))
-          .as("refund_date"),
+        col("refund_id"), col("order_id"), col("payment_id"),
+        Drift.toDoubleOrZero(col("amount")).as("refund_amount"),
+        col("reason").as("refund_reason"), col("type").as("refund_type"),
+        Drift.parseTimestampMulti(col("refunded")).as("refund_date"),
         col("event_id"), col("vendor"), col("_seq"))
     Dedup.firstWins(base, Seq("refund_id"), Seq(col("_seq").asc)).drop("_seq")
   }

@@ -5,75 +5,19 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Right-to-forget through persisted component labels
-  * (TextDedup.deleteFromComponentsPairs / deleteFromComponentsKeyed):
-  * delete ≡ full recompute over the live graph, including the cases a
-  * naive min-relabel gets wrong — a forgotten BRIDGE node must SPLIT its
-  * component, and a forgotten cluster-min must re-anchor every member.
+  * (TextDedup.deleteFromComponentsKeyed): delete ≡ full recompute over
+  * the live graph, including the cases a naive min-relabel gets wrong —
+  * a forgotten BRIDGE doc must drop or SPLIT its component, and a
+  * forgotten cluster-min must re-anchor every member.
   */
 class CcDeleteSpec extends SparkSuite {
   import spark.implicits._
-
-  private def pairsOf(ps: (Long, Long)*): DataFrame =
-    ps.toDF("doc_a", "doc_b")
 
   private def labelsOf(pairs: DataFrame): DataFrame =
     TextDedup.connectedComponents(pairs)
 
   private def asMap(df: DataFrame): Map[Long, Long] =
     df.select("doc_id", "cluster_id").as[(Long, Long)].collect().toMap
-
-  test("pairs: forgetting a bridge node splits its component") {
-    // path 1-2-3-4-5: one component labeled 1; doc 3 is the only bridge
-    val pairs = pairsOf((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
-    val labels = labelsOf(pairs)
-    assert(asMap(labels) === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
-    val out = TextDedup.deleteFromComponentsPairs(
-      labels, pairs, Seq(3L).toDF("doc_id"))
-    // naive min-relabel would keep {4,5} under label 1; the true live
-    // graph is two components {1,2} and {4,5}
-    assert(asMap(out) === Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L))
-  }
-
-  test("pairs: forgetting the cluster min re-anchors the members") {
-    val pairs = pairsOf((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L))
-    val labels = labelsOf(pairs)
-    val out = TextDedup.deleteFromComponentsPairs(
-      labels, pairs, Seq(1L).toDF("doc_id"))
-    // {2,3} stays connected by its own edge and takes the new min 2;
-    // untouched cluster {10,11} passes through bit-identically
-    assert(asMap(out) === Map(2L -> 2L, 3L -> 2L, 10L -> 10L, 11L -> 10L))
-  }
-
-  test("pairs: a member left edge-free stays as its own singleton") {
-    // star around 1: forgetting the hub isolates 2 and 3 entirely
-    val pairs = pairsOf((1L, 2L), (1L, 3L))
-    val out = TextDedup.deleteFromComponentsPairs(
-      labelsOf(pairs), pairs, Seq(1L).toDF("doc_id"))
-    assert(asMap(out) === Map(2L -> 2L, 3L -> 3L))
-  }
-
-  test("pairs: delete ≡ full recompute on a mixed random graph") {
-    // deterministic pseudo-random graph: 400 edges over ~160 nodes gives
-    // a mix of chains, merged blobs, and singleton-producing deletions
-    val pairs = spark.range(400).select(
-      (xxhash64(col("id")) % 160 + 160).cast("long").as("doc_a"),
-      (xxhash64(col("id") + 1000) % 160 + 160).cast("long").as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b"))
-    val labels = labelsOf(pairs)
-    val forget = spark.range(500).select((col("id") * 5 + 160).as("doc_id"))
-      .filter(col("doc_id") < 480)
-    val out = TextDedup.deleteFromComponentsPairs(labels, pairs, forget)
-    // the oracle: CC over live edges, plus live label-table nodes with
-    // no remaining edge as singletons
-    val livePairs = pairs
-      .join(forget.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_anti")
-      .join(forget.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_anti")
-    val cc = labelsOf(livePairs).withColumnRenamed("cluster_id", "cid")
-    val expect = labels.join(forget, Seq("doc_id"), "left_anti")
-      .join(cc, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("cid"), col("doc_id")).as("cluster_id"))
-    assert(out.except(expect).isEmpty && expect.except(out).isEmpty)
-  }
 
   test("keyed: bridge doc forgotten → both sides drop participation") {
     // 10 -k1- 11 -k2- 12: doc 11 bridges two key groups; forgetting it
@@ -127,9 +71,10 @@ class CcDeleteSpec extends SparkSuite {
   }
 
   test("empty forget set is the identity on the label table") {
-    val pairs = pairsOf((1L, 2L), (2L, 3L))
-    val labels = labelsOf(pairs)
-    val out = TextDedup.deleteFromComponentsPairs(labels, pairs,
+    val keyed = Seq((1L, "k1"), (2L, "k1"), (2L, "k2"), (3L, "k2"))
+      .toDF("doc_id", "k")
+    val labels = Seq((1L, 1L), (2L, 1L), (3L, 1L)).toDF("doc_id", "cluster_id")
+    val out = TextDedup.deleteFromComponentsKeyed(labels, keyed,
       spark.emptyDataset[Long].toDF("doc_id"))
     assert(out.except(labels).isEmpty && labels.except(out).isEmpty)
   }

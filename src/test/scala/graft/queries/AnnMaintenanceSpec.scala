@@ -1,22 +1,19 @@
 package graft.queries
 
 import graft.SparkSuite
-import graft.operators.TextDedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Lifecycle passes over the persisted ANN + dedup indexes: incremental
-  * append against FROZEN quantizers (`mergeIvfpqCodes`) and
-  * right-to-forget deletion (`deleteFromCodes` /
-  * `TextDedup.deleteFromBandIndex`). The parity contract mirrors
+/** Lifecycle passes over the persisted ANN index: incremental append
+  * against FROZEN quantizers (`mergeIvfpqCodes`) and right-to-forget
+  * deletion (`deleteFromCodes`). The parity contract mirrors
   * `mergeBandIndex ≡ rebuild`: code/index rows are pure per-vector
   * functions of the frozen quantizers, so maintenance output must be
   * ROW-IDENTICAL to a one-pass encode of the post-maintenance corpus.
   * (For the PQ tier "rebuild" means re-ENCODE against the same
   * quantizers — retraining parity is impossible by design: codebooks
   * are aggregate statistics and rotate on a scheduled re-index, which
-  * is the documented Faiss operational shape. The band index has no
-  * trained state, so its delete parity is a TRUE rebuild.)
+  * is the documented Faiss operational shape.)
   * Value-level certification happens in the driver gate: the
   * `sim_ivfpq_incr` oracle trains on the base prefix and encodes the
   * full corpus in one pass (the rebuild), and `sim_ivfpq_del`'s oracle
@@ -68,30 +65,5 @@ class AnnMaintenanceSpec extends SparkSuite {
       "a forgotten vector surfaced as a neighbor")
     assert(r.groupBy("query_id").count().filter(col("count") =!= 5)
       .count() == 0)
-  }
-
-  test("deleteFromBandIndex ≡ TRUE rebuild over corpus ∖ deleted, and " +
-    "the matcher can no longer surface a forgotten doc") {
-    val docs = Seq(
-      (1L, "en", 40L, "alpha beta gamma delta epsilon zeta theta iota"),
-      (2L, "en", 40L, "one two three four five six seven"),
-      (3L, "en", 40L, "red green blue yellow purple orange"))
-      .toDF("doc_id", "lang", "n_chars", "text")
-    val idx = TextDedup.minhashBandIndex(docs, 2, 4, 4)
-    val del = Seq(Tuple1(1L)).toDF("doc_id")
-    def rows(df: DataFrame) =
-      df.select("doc_id", "band", "band_hash")
-        .as[(Long, Int, String)].collect().toSeq.sorted
-    assert(rows(TextDedup.deleteFromBandIndex(idx, del)) ===
-      rows(TextDedup.minhashBandIndex(
-        docs.filter(col("doc_id") =!= 1L), 2, 4, 4)))
-    // a replica of the forgotten doc must now read as novel
-    val probe = Seq(
-      (10L, "en", 40L, "alpha beta gamma delta epsilon zeta theta iota"))
-      .toDF("doc_id", "lang", "n_chars", "text")
-    val verdict = TextDedup.incrementalNearDups(
-        TextDedup.deleteFromBandIndex(idx, del), probe, 2, 4, 4, 0.25)
-      .as[(Long, Boolean, Option[Long], Option[Double])].collect().toSeq
-    assert(verdict.map(r => (r._1, r._2, r._3)) === Seq((10L, true, None)))
   }
 }
