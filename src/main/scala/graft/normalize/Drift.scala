@@ -26,12 +26,10 @@ object Drift {
     * Null-only semantics (SQL COALESCE), deliberately NOT Python-falsy
     * (SURVEY §2.10.4): empty string / 0 are real values here.
     *
-    * The one-group case of [[PayloadKernel]]: the payload is tokenized
-    * once for all candidates, where the `get_json_object` chain parsed it
-    * once per candidate through a fresh `Reader`. (A single `from_json`
-    * over a struct of every key was measured 30 % slower than that chain:
-    * `OptimizeJsonExprs` prunes its schema per extracted field and splits
-    * it back into one parse per field.)
+    * The one-group case of [[PayloadKernel]], which tokenizes the payload
+    * once for all candidates. (One `from_json` over a struct of every key
+    * does not: `OptimizeJsonExprs` prunes its schema per extracted field
+    * and splits it back into one parse per field.)
     */
   def jsonCoalesce(jsonCol: Column, paths: Seq[String]): Column =
     Bridge.column(JsonCoalesce(Bridge.expression(jsonCol), paths))

@@ -205,45 +205,20 @@ final class PayloadKernel(groups: Seq[Seq[String]]) {
     * same raw writer, which rejects a lone one.
     */
   private def rawText(p: JsonParser): UTF8String = {
-    val cs = p.getTextCharacters
-    val start = p.getTextOffset
-    val end = start + p.getTextLength
-    var n = 0
-    var i = start
-    while (i < end) {
-      val c = cs(i)
-      if (c < 0x80) n += 1
-      else if (c < 0x800) n += 2
-      else if (Character.isSurrogate(c)) return writeWith(p, _.writeRaw(cs, start, end - start))
-      else n += 3
+    val s = p.getText
+    var i = 0
+    while (i < s.length) {
+      if (Character.isSurrogate(s.charAt(i))) return writeWith(_.writeRaw(s))
       i += 1
     }
-    val b = new Array[Byte](n)
-    var j = 0
-    i = start
-    while (i < end) {
-      val c = cs(i)
-      if (c < 0x80) { b(j) = c.toByte; j += 1 }
-      else if (c < 0x800) {
-        b(j) = (0xc0 | (c >> 6)).toByte
-        b(j + 1) = (0x80 | (c & 0x3f)).toByte
-        j += 2
-      } else {
-        b(j) = (0xe0 | (c >> 12)).toByte
-        b(j + 1) = (0x80 | ((c >> 6) & 0x3f)).toByte
-        b(j + 2) = (0x80 | (c & 0x3f)).toByte
-        j += 3
-      }
-      i += 1
-    }
-    UTF8String.fromBytes(b)
+    UTF8String.fromString(s)
   }
 
   /** A number or boolean, as `copyCurrentStructure` writes it. */
   private def render(p: JsonParser): UTF8String =
-    writeWith(p, _.copyCurrentStructure(p))
+    writeWith(_.copyCurrentStructure(p))
 
-  private def writeWith(p: JsonParser, write: JsonGenerator => Unit): UTF8String = {
+  private def writeWith(write: JsonGenerator => Unit): UTF8String = {
     scratch.reset()
     val g = Factory.createGenerator(scratch, JsonEncoding.UTF8)
     try write(g) finally g.close()

@@ -945,7 +945,7 @@ object TextDedup {
     relabeled.unionByName(novel)
   }
 
-  /** Shared staging for the right-to-forget pass: split the persisted
+  /** Staging for the right-to-forget pass: split the persisted
     * label table around a forget set. Returns (passthrough, members,
     * scratch) where `passthrough` is the labels of UNTOUCHED clusters
     * (no forgotten member — their components, and therefore their min

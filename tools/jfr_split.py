@@ -142,11 +142,11 @@ def share(part, whole):
 
 def report(cpu, alloc, jit, patterns):
     names = [n for n, _ in patterns]
-    for title, acc, unit, scale in (("execution samples", cpu, "samples", 1),
-                                    ("allocation weight", alloc, "GB", 1e-9)):
+    for title, acc, unit, scale, fmt in (("execution samples", cpu, "samples", 1, ".0f"),
+                                         ("allocation weight", alloc, "GB", 1e-9, ".1f")):
         total = acc["executor"]["n"] + acc["driver"]["n"]
-        print(f"{title}: {total * scale:.1f} {unit} "
-              f"(executor {acc['executor']['n'] * scale:.1f}, driver {acc['driver']['n'] * scale:.1f})")
+        print(f"{title}: {total * scale:{fmt}} {unit} (executor "
+              f"{acc['executor']['n'] * scale:{fmt}}, driver {acc['driver']['n'] * scale:{fmt}})")
         print(f"  {'pattern':<16}{'all':>9}{'executor':>11}{'driver':>9}")
         for n in names:
             both = acc["executor"][n] + acc["driver"][n]
