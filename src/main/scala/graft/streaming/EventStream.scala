@@ -84,6 +84,16 @@ object EventStream {
       .select(col("s.start").as("session_start"), col("s.end").as("session_end"),
         col("vendor"), col("n_events"))
 
+  /** `df` plus column `name`: the first non-null of the payload's drift
+    * keys `paths`. Read through the generator form of the payload kernel
+    * (`Drift.jsonFields`), so a caller's filter on `name` stays above it
+    * and each row's payload is parsed once; a scalar `Drift.jsonCoalesce`
+    * column would be copied into the filter pushed below the projection
+    * and evaluated twice.
+    */
+  private def withPayloadKey(df: DataFrame, name: String, paths: Seq[String]): DataFrame =
+    df.select(col("*"), Drift.jsonFields(col("payload"), Seq(name -> paths)))
+
   /** Approximate distinct order refs per 1-day window — Spark's built-in
     * HLL sketch (`hll_sketch_agg`) composed with streaming: state per
     * window is ONE ~4 KB HLL sketch instead of a distinct-ref set, so a
@@ -93,9 +103,7 @@ object EventStream {
     * exactly as the batch pipeline does.
     */
   def dailyApproxOrders(deduped: DataFrame, lgK: Int = 12): DataFrame =
-    deduped
-      .withColumn("ref",
-        Drift.jsonCoalesce(col("payload"), Seq("orderRef", "order_id")))
+    withPayloadKey(deduped, "ref", Seq("orderRef", "order_id"))
       .filter(col("ref").isNotNull)
       .groupBy(window(col("event_ts"), "1 day").as("day"))
       .agg(hll_sketch_estimate(hll_sketch_agg(col("ref"), lit(lgK)))
@@ -132,9 +140,7 @@ object EventStream {
     val spark = deduped.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val typed = deduped
-      .withColumn("ref",
-        Drift.jsonCoalesce(col("payload"), Seq("orderRef", "order_id")))
+    val typed = withPayloadKey(deduped, "ref", Seq("orderRef", "order_id"))
       .filter(col("ref").isNotNull)
       .select(to_date(col("event_ts")).cast("string").as("day"),
         md5(col("ref")).as("h"))
@@ -185,11 +191,10 @@ object EventStream {
   def orderPaymentJoin(orders: DataFrame, payments: DataFrame,
                        lateness: String = "1 day",
                        horizon: String = "2 hours"): DataFrame = {
-    def keyed(df: DataFrame, side: String) = df
-      .withColumn(s"${side}_ts", Drift.parseTimestampMulti(col("event_time")))
-      .filter(col(s"${side}_ts").isNotNull)
-      .withColumn(s"${side}_ref",
-        Drift.jsonCoalesce(col("payload"), Seq("orderRef", "order_id")))
+    def keyed(df: DataFrame, side: String) = withPayloadKey(df
+        .withColumn(s"${side}_ts", Drift.parseTimestampMulti(col("event_time")))
+        .filter(col(s"${side}_ts").isNotNull),
+        s"${side}_ref", Seq("orderRef", "order_id"))
       .filter(col(s"${side}_ref").isNotNull)
       .withWatermark(s"${side}_ts", lateness)
     val o = keyed(orders.filter(col("event_type") === "order_created"), "o")
@@ -274,9 +279,8 @@ object EventStream {
     // keep `event_ts` as the untouched watermarked timestamp column —
     // casting it would strip the watermark tag the event-time timeout
     // needs to see flowing into the stateful operator
-    val typed = deduped
-      .withColumn("__oid", Drift.jsonCoalesce(col("payload"),
-        Seq("order_id", "orderRef", "order.id", "orderId", "order")))
+    val typed = withPayloadKey(deduped, "__oid",
+        Seq("order_id", "orderRef", "order.id", "orderId", "order"))
       .filter(col("__oid").isNotNull)
       .select(col("__oid").as("order_id"), col("event_type"), col("event_ts"))
       .as[(String, String, java.sql.Timestamp)]

@@ -15,7 +15,7 @@ whole), and prints:
     jdk.CompilerStatistics event.
 
 A pattern is a regular expression over "package.Class.method" frame
-names; the defaults are below, and --pattern NAME=REGEX adds one.
+names (PATTERNS below); a stack is read to its top STACK_DEPTH frames.
 
 Recording one without touching perfbench/: build the checkout first (one
 ordinary run), then run again with the recorder in JAVA_TOOL_OPTIONS. With
@@ -35,7 +35,7 @@ import re
 import subprocess
 import sys
 
-DEFAULT_PATTERNS = [
+PATTERNS = [
     ("GetJsonObject", r"\.GetJsonObject"),
     ("PayloadKernel", r"^graft\.normalize\.(PayloadKernel|JsonFields|JsonCoalesce)"),
     ("jackson", r"^com\.fasterxml\.jackson\.core\."),
@@ -44,12 +44,13 @@ DEFAULT_PATTERNS = [
 EVENTS = ("jdk.ExecutionSample", "jdk.ObjectAllocationSample", "jdk.CompilerStatistics")
 EXECUTOR_THREAD = "Executor task launch worker"
 CHUNK = 1 << 20
+STACK_DEPTH = 32
 
 
-def events(path, stack_depth):
+def events(path):
     """Yields each event dict of `jfr print --json`, decoding the events
     array incrementally from the tool's output."""
-    cmd = ["jfr", "print", "--json", "--stack-depth", str(stack_depth),
+    cmd = ["jfr", "print", "--json", "--stack-depth", str(STACK_DEPTH),
            "--events", ",".join(EVENTS), path]
     proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, text=True)
     dec = json.JSONDecoder()
@@ -113,13 +114,13 @@ def seconds(v):
     return h * 3600 + mi * 60 + s
 
 
-def split(path, patterns, stack_depth):
-    rx = [(n, re.compile(p)) for n, p in patterns]
+def split(path):
+    rx = [(n, re.compile(p)) for n, p in PATTERNS]
     sides = ("executor", "driver")
     cpu = {s: {"n": 0, **{n: 0 for n, _ in rx}} for s in sides}
     alloc = {s: {"n": 0.0, **{n: 0.0 for n, _ in rx}} for s in sides}
     jit = None
-    for ev in events(path, stack_depth):
+    for ev in events(path):
         kind = ev["type"]
         if kind == "jdk.CompilerStatistics":
             jit = ev["values"]
@@ -140,8 +141,8 @@ def share(part, whole):
     return f"{100.0 * part / whole:5.1f} %" if whole else "    - "
 
 
-def report(cpu, alloc, jit, patterns):
-    names = [n for n, _ in patterns]
+def report(cpu, alloc, jit):
+    names = [n for n, _ in PATTERNS]
     for title, acc, unit, scale, fmt in (("execution samples", cpu, "samples", 1, ".0f"),
                                          ("allocation weight", alloc, "GB", 1e-9, ".1f")):
         total = acc["executor"]["n"] + acc["driver"]["n"]
@@ -163,19 +164,8 @@ def report(cpu, alloc, jit, patterns):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("jfr", help="the .jfr recording")
-    ap.add_argument("--pattern", action="append", default=[], metavar="NAME=REGEX",
-                    help="one more frame pattern (repeatable)")
-    ap.add_argument("--stack-depth", type=int, default=32,
-                    help="frames read per stack, from the top (default 32)")
     args = ap.parse_args()
-    patterns = list(DEFAULT_PATTERNS)
-    for p in args.pattern:
-        name, sep, regex = p.partition("=")
-        if not sep:
-            ap.error(f"--pattern wants NAME=REGEX, got {p!r}")
-        patterns.append((name, regex))
-    cpu, alloc, jit = split(args.jfr, patterns, args.stack_depth)
-    report(cpu, alloc, jit, patterns)
+    report(*split(args.jfr))
 
 
 if __name__ == "__main__":
