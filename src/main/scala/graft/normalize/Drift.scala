@@ -36,7 +36,11 @@ object Drift {
 
   /** Several [[jsonCoalesce]] groups from ONE pass over the payload: a
     * generator column, one string column per `(name, paths)` entry, for
-    * `select(…)`. Use it where a row needs more than one payload field.
+    * `select(…)`. Use it where a row needs more than one payload field,
+    * or where a filter reads the field: the optimizer copies a scalar
+    * [[jsonCoalesce]] column into a filter it pushes below the
+    * projection, which parses the payload a second time, but it keeps
+    * the filter above a generator.
     */
   def jsonFields(jsonCol: Column, fields: Seq[(String, Seq[String])]): Column =
     Bridge.column(JsonFields(Bridge.expression(jsonCol), fields.map(_._2)))
